@@ -321,10 +321,14 @@ object SimOps {
     // partition, carried THROUGH the pair join as extra grouping keys
     // (functionally dependent on left_id/right_id, so grouping is unchanged)
     // instead of the old separate groupBy(idCol) sizes aggregate + two
-    // join-backs onto the verified counts (round-6, guide §2.4 "two
-    // operations keyed the same way share one exchange"): the window's idCol
-    // exchange is the SAME partitioning the left pair join needs, and the
-    // two post-aggregate joins disappear outright
+    // join-backs onto the verified counts (round-6): the sizes aggregate and
+    // both post-aggregate joins disappear outright, which is where the
+    // measured win comes from. The window's idCol output partitioning COULD
+    // be reused by the left pair join, but only in the at-scale sort-merge
+    // shape; at bench scale the planner broadcasts the pair joins, so no
+    // exchange is shared and the window pays its own exchange + sort (the
+    // same limit as the rejected merge-hint entry for rawCandidatePairs in
+    // OPTIMIZATION_r06.md)
     val wSz = org.apache.spark.sql.expressions.Window.partitionBy(idCol)
     val sized = dist.withColumn("_sz", count(lit(1)).over(wSz))
     val l = sized.select(col(idCol).as("left_id"), col("_s"), col("_sz").as("_sza"))
@@ -540,6 +544,17 @@ object SimOps {
   final case class NeardupIndexTables(bands: DataFrame, shingles: DataFrame,
                                       sizes: DataFrame, counts: DataFrame)
 
+  object NeardupIndexTables {
+    /** The index over `bands` and `shingles`, with `sizes` (distinct shingles
+      * per id) and `counts` (members per band bucket) derived from them — so a
+      * caller that already holds the two base tables (e.g. just written) never
+      * recomputes them. */
+    def derive(bands: DataFrame, shingles: DataFrame, idCol: String): NeardupIndexTables =
+      NeardupIndexTables(bands, shingles,
+        shingles.groupBy(idCol).agg(count(lit(1)).as("_sz")),
+        bands.groupBy("band", "bucket").agg(count(lit(1)).as("_n")))
+  }
+
   /** Derive the index tables for a document set (one shingle pass). */
   def neardupIndexTables(docs: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3, k: Int = 32, bands: Int = 8,
@@ -551,9 +566,7 @@ object SimOps {
     // (see verifiedPairsFromRows)
     val dist = rows.select(col(idCol), xxhash64(col("_sh")).as("_s"))
       .dropDuplicates(idCol, "_s")
-    val sizes = dist.groupBy(idCol).agg(count(lit(1)).as("_sz"))
-    val counts = bb.groupBy("band", "bucket").agg(count(lit(1)).as("_n"))
-    NeardupIndexTables(bb, dist, sizes, counts)
+    NeardupIndexTables.derive(bb, dist, idCol)
   }
 
   /** Near-dup pairs of a NEW batch against an EXISTING index: the batch's band

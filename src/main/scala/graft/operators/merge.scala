@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import java.util.concurrent.{CompletionException, ExecutorService, Executors}
+
+import scala.util.Try
+
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -127,6 +132,45 @@ object CdcMerge {
     r
   }
 
+  /** Driver threads for [[applyBatch]]'s side writes: daemon, created on
+    * demand and reaped when idle, so concurrency follows the side writes
+    * actually submitted. */
+  private lazy val sidePool: ExecutorService = Executors.newCachedThreadPool { r =>
+    val t = new Thread(r, "graft-side-write")
+    t.setDaemon(true)
+    t
+  }
+
+  /** The side writes of one batch, started on [[sidePool]] threads that carry
+    * the caller's thread-locals (active session, local properties: job group,
+    * job tags, SQL execution id), so the stream's cancellation reaches their
+    * jobs as it reaches the merge's own. */
+  private final class SideWrites(spark: SparkSession, writes: Seq[() => Unit]) {
+    private val running = writes.map(w => SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], sidePool)(w()))
+
+    /** Wait for every side write; rethrow the first failure. */
+    def await(): Unit = {
+      val failures = running.flatMap(f => Try(f.join()).failed.toOption.map {
+        case c: CompletionException if c.getCause != null => c.getCause
+        case e => e
+      })
+      failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
+    }
+
+    /** Wait for every side write, ignoring failures: none outlives its batch.
+      * `join` is uninterruptible, and a stopped stream cancels the side
+      * writes' jobs through the job group they carry. */
+    def drain(): Unit = running.foreach(f => Try(f.join()))
+  }
+
+  /** Apply one microbatch. `sideWrites` (the stream's near-dup index append
+    * and contamination screen) run CONCURRENTLY with the dedup and data write
+    * and only for an epoch this call applies; every one has finished before
+    * any manifest commit, the empty-batch commit included. A side-write
+    * failure fails the batch with nothing committed, so a redelivered epoch
+    * redoes its side writes (each is an epoch-keyed overwrite) before the
+    * ledger can skip it. */
   def applyBatch(
       table: LakeTable,
       batch: DataFrame,
@@ -136,7 +180,8 @@ object CdcMerge {
       saltThreshold: Double = 0.2,
       saltBuckets: Int = 16,
       mode: String = "mor", // "mor" (append winners, resolve on read) | "cow"
-      knownRoles: Option[Seq[String]] = None // P6 concept-existence guard
+      knownRoles: Option[Seq[String]] = None, // P6 concept-existence guard
+      sideWrites: Seq[() => Unit] = Nil
   ): BatchResult = {
     require(mode == "mor" || mode == "cow", s"unknown merge mode: $mode")
     val spark = table.spark
@@ -215,6 +260,9 @@ object CdcMerge {
       .withColumn("_gbucket", LakeTable.bucketCol(col("conv_id"), snap.numBuckets))
       .persist(StorageLevel.MEMORY_AND_DISK)
 
+    // side writes start once the plan is built: they overlap the dedup, stats
+    // and data write below, and the finally waits for them whatever happens
+    val side = new SideWrites(spark, sideWrites)
     try {
       // 5. Per-bucket lineage stats in ONE aggregation (also yields touched buckets).
       val stats = timed("dedup+stats")(changes.groupBy("_gbucket").agg(
@@ -246,6 +294,7 @@ object CdcMerge {
 
       if (stats.isEmpty) {
         // Empty batch still advances the ledger so redelivery is skipped.
+        side.await()
         table.commit(snap.files, schemas, schemaId,
           snap.applied + (queryId -> epochId),
           Map("graft.operation" -> "merge", "graft.epoch" -> epochId.toString,
@@ -316,7 +365,9 @@ object CdcMerge {
       timed("lineage")(lineage.coalesce(1).write.mode(SaveMode.Overwrite)
         .parquet(s"${table.dir}/_lineage/q=$queryId/e=$epochId"))
 
-      // 8. Atomic snapshot commit carrying the epoch ledger.
+      // 8. Atomic snapshot commit carrying the epoch ledger — once every
+      //    side write has landed.
+      side.await()
       table.commit(kept ++ newFiles, schemas, schemaId,
         snap.applied + (queryId -> epochId),
         Map("graft.operation" -> "merge", "graft.mode" -> mode,
@@ -327,6 +378,7 @@ object CdcMerge {
       BatchResult(epochId, applied = true, keysTouched, deletes, conflicts, nRejects,
         touched.size)
     } finally {
+      side.drain()
       changes.unpersist()
     }
   }

@@ -16,7 +16,9 @@ import graft.sources.{LakeIO, NioLakeIO}
   *     ([[batchPairs]] — an equi-join against the index's band buckets,
   *     index side bucket-capped), then
   *  2. [[append]] its own rows, keeping the index current — [[CdcStream]]
-  *     does this automatically when `neardupIndexDir` is configured.
+  *     does this automatically when `neardupIndexDir` is configured, beside
+  *     the merge (concurrently with its dedup and data write), and the merge's
+  *     manifest commit waits for the append to land.
   *
   * EXACTLY-ONCE BY EPOCH-KEYED OVERWRITES: each append lands in a
   * deterministic `e=<epoch>` subdirectory of all three tables with OVERWRITE
@@ -139,11 +141,23 @@ object NeardupIndex {
       (liveEpochs(io, dir) :+ led.compactedThrough :+ -1L).max + 1)
     val t = SimOps.neardupIndexTables(docs, cfg.idCol, cfg.textCol,
       cfg.shingleN, cfg.k, cfg.bands, cfg.rowsPerBand)
-    t.bands.write.mode("overwrite").partitionBy("_p").parquet(s"$dir/bands/e=$e")
-    t.shingles.write.mode("overwrite").parquet(s"$dir/shingles/e=$e")
-    t.sizes.write.mode("overwrite").parquet(s"$dir/sizes/e=$e")
-    t.counts.write.mode("overwrite").parquet(s"$dir/counts/e=$e")
-    refresh(docs.sparkSession, dir)
+    val (bandsDir, shinglesDir) = (s"$dir/bands/e=$e", s"$dir/shingles/e=$e")
+    t.bands.write.mode("overwrite").partitionBy("_p").parquet(bandsDir)
+    t.shingles.write.mode("overwrite").parquet(shinglesDir)
+    // each table computed ONCE: `sizes` and `counts` derive from the band rows
+    // and shingle hashes just written, read back, instead of re-running the
+    // shingle distinct and the MinHash aggregate. Persisting the two would
+    // save the same work, but a cached plan is planned without AQE's
+    // partition coalescing, so the bands and shingles writes would land in
+    // several times more files. The read-back carries the written schemas: a
+    // batch with no tokens writes no band file, and must read back empty.
+    val spark = docs.sparkSession
+    val d = SimOps.NeardupIndexTables.derive(
+      spark.read.schema(t.bands.schema).parquet(bandsDir),
+      spark.read.schema(t.shingles.schema).parquet(shinglesDir), cfg.idCol)
+    d.sizes.write.mode("overwrite").parquet(s"$dir/sizes/e=$e")
+    d.counts.write.mode("overwrite").parquet(s"$dir/counts/e=$e")
+    refresh(spark, dir)
   }
 
   /** Drop cached file listings under `dir`: an epoch overwrite (redelivery) or

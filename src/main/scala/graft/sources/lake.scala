@@ -3,9 +3,15 @@ package graft.sources
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata,
+  HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Driver-side filesystem operations the lake's commit protocol needs. Executors
   * read/write data files through Spark's own Hadoop IO; only the MANIFEST
@@ -74,7 +80,7 @@ object NioLakeIO extends LakeIO {
 /** Hadoop-FileSystem implementation — the object-store/HDFS migration path.
   * Uses the same FS drivers Spark itself writes the parquet through. */
 class HadoopLakeIO(conf: org.apache.hadoop.conf.Configuration) extends LakeIO {
-  import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+  import org.apache.hadoop.fs.FileSystem
   private def fs(p: String): FileSystem = new HPath(p).getFileSystem(conf)
   def mkdirs(dir: String): Unit = fs(dir).mkdirs(new HPath(dir))
   def isDirectory(path: String): Boolean = {
@@ -169,6 +175,31 @@ final case class Snapshot(
     DataType.fromJson(schemas(id.toString)).asInstanceOf[StructType]
 }
 
+/** The file list of one scan, taken from a snapshot manifest: the
+  * [[FileIndex]] behind every [[LakeTable]] read. Nothing is listed — the
+  * statuses come from per-file `getFileStatus` calls — and nothing is
+  * partition-discovered (data file paths carry no `k=v` directories). Equal
+  * by file set, as `InMemoryFileIndex` is by root paths, so two reads of one
+  * snapshot plan to equal relations: a `persist()`ed read is found by the
+  * cache manager and repeated scans share exchanges. */
+private[sources] final class ManifestFileIndex(files: Seq[FileStatus]) extends FileIndex {
+  private val paths: Set[HPath] = files.map(_.getPath).toSet
+  def rootPaths: Seq[HPath] = files.map(_.getPath)
+  def listFiles(partitionFilters: Seq[Expression],
+                dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+    Seq(PartitionDirectory(InternalRow.empty, files.map(FileStatusWithMetadata(_))))
+  def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+  def refresh(): Unit = () // a manifest's file set never changes
+  def sizeInBytes: Long = files.map(_.getLen).sum
+  def partitionSchema: StructType = new StructType()
+  override def equals(other: Any): Boolean = other match {
+    case m: ManifestFileIndex => paths == m.paths
+    case _ => false
+  }
+  override def hashCode(): Int = paths.hashCode()
+  override def toString: String = s"ManifestFileIndex(${files.size} files)"
+}
+
 /** Minimal Iceberg-style table: Parquet data files + atomically committed JSON
   * manifests (snapshot isolation, time travel, schema evolution, idempotent-commit
   * ledger). Built because no Iceberg runtime jar ships in /opt/spark/jars; the
@@ -182,7 +213,10 @@ final case class Snapshot(
   * }}}
   *
   * Commit = write temp manifest + atomic rename; readers only ever see fully
-  * committed versions; crash mid-write leaves orphan data files that no manifest
+  * committed versions, and a read is PLANNED FROM THE MANIFEST, never listed:
+  * the snapshot names every file, so a scan is built from one `getFileStatus`
+  * per named file ([[ManifestFileIndex]]) with no directory listing and no
+  * Spark file-listing job; crash mid-write leaves orphan data files that no manifest
   * references (harmless; compaction may GC them). Single-writer, like one streaming
   * query per table — matching the reference's one-load-at-a-time design
   * (reference dest/I2b2QueryResultsHandler.java:318-703).
@@ -226,30 +260,7 @@ final class LakeTable(val spark: SparkSession, val dir: String,
     * version, after which this throws (segment manifest or data files GC'd). */
   def readAsOf(version: Long): DataFrame = {
     val s = snapshotAt(version)
-    requireFilesPresent(s.files, s"v$version")
     readFiles(s, s.files)
-  }
-
-  /** Fail loudly if vacuum already expired any of these data files: segment
-    * manifests are checked strictly by snapshotAt, but an INLINE (unsegmented)
-    * snapshot lists files whose absence would otherwise surface as a scan-time
-    * path error — or, under spark.sql.files.ignoreMissingFiles=true, as a
-    * silently PARTIAL historical state, the worst possible failure mode.
-    * Batched: ONE listing per distinct parent directory instead of one
-    * driver-side exists() round trip per file — O(dirs), which on an object
-    * store is the difference between milliseconds and minutes for a large
-    * historical snapshot. */
-  private def requireFilesPresent(files: List[FileEntry], tag: String): Unit = {
-    val byParent = files.groupBy(f =>
-      s"$dir/${f.path}".split('/').dropRight(1).mkString("/"))
-    val missing = byParent.iterator.map { case (parent, fs) =>
-      val present: Set[String] =
-        if (!io.isDirectory(parent)) Set.empty
-        else io.listDir(parent).map(_.stripSuffix("/").split('/').last).toSet
-      fs.count(f => !present.contains(s"$dir/${f.path}".split('/').last))
-    }.sum
-    if (missing > 0) throw new IllegalStateException(
-      s"snapshot $tag references $missing data file(s) already vacuumed")
   }
 
   /** One-scan CHANGE-FEED read (round-6 optimization, guide §1.2 "remove
@@ -277,7 +288,7 @@ final class LakeTable(val spark: SparkSession, val dir: String,
       align(spark.createDataFrame(List.empty[org.apache.spark.sql.Row].asJava,
           s2.schema), s2.schema)
         .withColumn("_in1", lit(false)).withColumn("_in2", lit(false)))
-    requireFilesPresent(union, s"v$v1/v$v2")
+    val statuses = fileStatuses(union, s"v$v1/v$v2")
     def base(p: String) = p.split('/').last
     val names = spark.createDataFrame(union.map(f =>
       org.apache.spark.sql.Row(base(f.path), f1.contains(f.path), f2.contains(f.path))).asJava,
@@ -287,8 +298,7 @@ final class LakeTable(val spark: SparkSession, val dir: String,
         org.apache.spark.sql.types.StructField("_in2", org.apache.spark.sql.types.BooleanType, false))))
     val cur = s2.schema
     val tagged = union.groupBy(_.schemaId).map { case (sid, group) =>
-      val g = spark.read.schema(s2.schemaFor(sid))
-        .parquet(group.map(f => s"$dir/${f.path}"): _*)
+      val g = scan(s2.schemaFor(sid), group.map(f => statuses(f.path)))
       val have = g.columns.toSet
       // align to the current schema INLINE so the _metadata file column can
       // ride along (the align() helper projects it away)
@@ -309,15 +319,46 @@ final class LakeTable(val spark: SparkSession, val dir: String,
   private def readFiles(s: Snapshot, files: List[FileEntry]): DataFrame = {
     val cur = s.schema
     if (files.isEmpty) return spark.createDataFrame(List.empty[org.apache.spark.sql.Row].asJava, cur)
+    val statuses = fileStatuses(files, s"v${s.version}")
     // Files are grouped by physical schema and each group is read with its EXACT
     // written schema, then cast/realigned — old int32 files stay readable after a
     // widen-to-long evolution without relying on reader-side type promotion.
     files.groupBy(_.schemaId).map { case (sid, group) =>
-      val df = spark.read.schema(s.schemaFor(sid))
-        .parquet(group.map(f => s"$dir/${f.path}"): _*)
-      align(df, cur)
+      align(scan(s.schemaFor(sid), group.map(f => statuses(f.path))), cur)
     }.reduce(_.unionByName(_))
   }
+
+  /** Status of every listed file, keyed by manifest path: one driver-side
+    * `getFileStatus` per file, run CONCURRENTLY like [[writeDataFiles]]' footer
+    * reads. Reads are planned from the manifest, never listed — the snapshot
+    * already names every file, so no directory listing and no Spark
+    * file-listing job runs (`spark.read.parquet(paths)` starts one task per
+    * path above `spark.sql.sources.parallelPartitionDiscovery.threshold`).
+    * Fails loudly if any file is gone (vacuum expired the snapshot under this
+    * reader): a scan-time path error — or, under
+    * spark.sql.files.ignoreMissingFiles=true, a silently PARTIAL state — would
+    * be worse. */
+  private def fileStatuses(files: List[FileEntry], tag: String): Map[String, FileStatus] = {
+    import scala.collection.parallel.CollectionConverters._
+    val conf = spark.sessionState.newHadoopConf() // once, outside the par loop
+    val found = files.map(_.path).distinct.par.map { rel =>
+      val p = new HPath(s"$dir/$rel")
+      rel -> (try Some(p.getFileSystem(conf).getFileStatus(p))
+              catch { case _: java.io.FileNotFoundException => None })
+    }.toList
+    val missing = found.count(_._2.isEmpty)
+    if (missing > 0) throw new IllegalStateException(
+      s"snapshot $tag references $missing data file(s) already vacuumed")
+    found.map { case (rel, st) => rel -> st.get }.toMap
+  }
+
+  /** A parquet scan of exactly `files`, read with `schema`: the relation
+    * `spark.read.schema(schema).parquet(paths)` would build, over a
+    * [[ManifestFileIndex]] instead of a listing one. */
+  private def scan(schema: StructType, files: Seq[FileStatus]): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(new ManifestFileIndex(files),
+      new StructType(), nullable(schema).asInstanceOf[StructType], None,
+      new ParquetFileFormat, Map.empty)(spark))
 
   /** Write `df` (which must contain a `_gbucket` int column) as new data files;
     * returns the FileEntry list. Not yet committed. */
@@ -518,6 +559,17 @@ object LakeTable {
       .sorted
       .map(n => reconstitute(dir,
         Serialization.read[Snapshot](io.readString(s"$md/$n")), io, strict = false))
+  }
+
+  /** `t` with every field, element and value nullable — what a file read
+    * with a user schema sees (`DataSource` relaxes the schema the same way:
+    * a parquet file's declared nullability is not trusted). */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
   }
 
   /** Cast/realign `df` to `to`: missing columns become typed nulls, common columns

@@ -88,4 +88,59 @@ class LakeIoSpec extends SparkSpec {
     assert(removed > 0) // cow rewrites leave superseded files to GC
     assert(CdcMerge.state(t).orderBy("conv_id", "turn_idx").collect().toSeq === before)
   }
+
+  test("reads are planned from the manifest: no listing job above 32 files, cacheable, loud on vacuumed files") {
+    import graft.operators.{ChangeFeed, Maintain}
+    import org.apache.spark.GraftTestBridge.drainListenerBus
+    val t = LakeTable.create(spark, tmpDir("lakeio-plan"),
+      CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 64)
+    (0 until 2).foreach { e =>
+      CdcMerge.applyBatch(t, ChangeGen.events(spark, 3000L, numConvs = 400, maxTurns = 4,
+        pDelete = 0.1, seed = 21L + e, lsnStart = e * 3000L), e.toLong, "q")
+    }
+    val files = t.snapshot.files
+    assert(files.size > 32, s"only ${files.size} files: the listing threshold is not crossed")
+    val (v1, v2) = (t.snapshot.version - 1, t.snapshot.version)
+    // building a read starts no Spark job (a listing job would be one)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+    }
+    drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val (cur, old, feed) = try {
+      val frames = (t.read(), t.readAsOf(v1), ChangeFeed.betweenVersions(t, v1, v2))
+      drainListenerBus(spark.sparkContext)
+      frames
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0, s"${jobs.get} Spark job(s) ran while planning reads")
+    // the plans still read every manifest file, _metadata tagging included
+    val paths = cur.select(col("_metadata.file_path")).distinct().collect()
+      .map(_.getString(0).split('/').last).toSet
+    assert(paths === files.map(_.path.split('/').last).toSet)
+    assert(old.count() === t.snapshotAt(v1).files.map(_.rows).sum)
+    val expected = ChangeFeed.diffTagged(
+      t.readAsOf(v1).withColumn("_gen", lit(1))
+        .unionByName(t.readAsOf(v2).withColumn("_gen", lit(2))),
+      Schemas.keyCols, Seq("role", "text", "tool", "ts"))
+    assert(feed.count() > 0 && feed.exceptAll(expected).isEmpty &&
+      expected.exceptAll(feed).isEmpty)
+    // two reads of one snapshot plan to the same relation: the cache finds it
+    val cached = cur.persist()
+    try {
+      cached.count()
+      val again = LakeTable.load(spark, t.dir).read()
+      assert(spark.sharedState.cacheManager.lookupCachedData(
+        again.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]]).isDefined,
+        "a second read of the snapshot missed the persisted plan")
+    } finally cached.unpersist(blocking = true)
+    // a manifest naming a vacuumed file fails loudly
+    Maintain.compact(t)
+    Maintain.vacuum(t, keepSnapshots = 1)
+    val e = intercept[IllegalStateException](t.readAsOf(v2))
+    assert(e.getMessage.contains("already vacuumed"), e.getMessage)
+    assert(CdcMerge.state(t).count() > 0)
+  }
 }

@@ -595,4 +595,187 @@ class StreamSpec extends SparkSpec {
     CdcMerge.applyBatch(t, ev.filter(col("lsn") % 2 === 0), 1L, "q") // even arrive later
     assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(ev)).isEmpty)
   }
+
+  test("side writes land before the commit: a failed index append commits nothing, the retry is exact") {
+    import graft.functions.SimOps
+    import graft.operators.NeardupIndex
+    import java.nio.file.{Files, Paths}
+    val src = tmpDir("sw-src"); val bdir = tmpDir("sw-bench")
+    val evs = (0 until 2).map(e => ChangeGen.events(spark, 1500L, numConvs = 30,
+      maxTurns = 6, pDelete = 0.1, seed = 11L + e, lsnStart = e * 1500L))
+    def publish(e: Int): Unit =
+      evs(e).repartition(1).write.parquet(s"$src/e$e")
+    // bench grams from a sample of epoch-1 texts, so the screen flags rows
+    SimOps.benchGrams(evs(1).limit(20).select(col("lsn").as("id"), col("text")),
+      "id", "text", 3).write.mode("overwrite").parquet(bdir)
+    def cfg(tbl: String, ckpt: String, idx: String) = CdcStream.Config(src, tbl, ckpt,
+      queryId = "sw", numBuckets = 8, maxFilesPerTrigger = Some(1),
+      neardupIndexDir = Some(idx), contamBenchDir = Some(bdir))
+    val (tbl, ckpt, idx) = (tmpDir("sw-tbl"), tmpDir("sw-ck"), tmpDir("sw-idx"))
+    publish(0)
+    CdcStream.runAvailable(spark, cfg(tbl, ckpt, idx))
+    val t = LakeTable.load(spark, tbl)
+    assert(t.appliedEpoch("sw") === 0L)
+    val failedVersion = t.snapshot.version + 1 // the version epoch 1 would commit
+    // obstacle: an unreadable index ledger fails epoch 1's index append (on
+    // its side-write thread) while the merge's dedup and data write proceed
+    val ledger = Paths.get(idx, "ledger.json")
+    Files.writeString(ledger, "not a ledger")
+    publish(1)
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      CdcStream.runAvailable(spark, cfg(tbl, ckpt, idx))
+    }
+    assert(err.getMessage.contains("ledger"), err.getMessage)
+    t.refresh()
+    assert(t.appliedEpoch("sw") === 0L, "a failed side write must not commit the epoch")
+    val prefix = s"data/e${failedVersion}_"
+    val orphans = new java.io.File(s"$tbl/data").list().count(n => s"data/$n".startsWith(prefix))
+    assert(orphans > 0, "the data write ran beside the failing side write")
+    assert(LakeTable.history(tbl).forall(_.files.forall(!_.path.startsWith(prefix))),
+      s"a snapshot references epoch 1's data files ($prefix*)")
+    // obstacle removed: the restart redelivers epoch 1 and completes it
+    Files.delete(ledger)
+    CdcStream.runAvailable(spark, cfg(tbl, ckpt, idx))
+    t.refresh()
+    assert(t.appliedEpoch("sw") === 1L)
+    assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(evs.reduce(_.unionByName(_))))
+      .isEmpty)
+    def epochDirs(table: String) = new java.io.File(s"$tbl/$table/q=sw").list()
+      .count(_ == "e=1")
+    assert(epochDirs("_lineage") === 1 && epochDirs("_contam") === 1)
+    val lin1 = CdcMerge.lineage(t, "sw").filter(col("epoch_id") === 1)
+    assert(lin1.count() === lin1.select("bucket").distinct().count(),
+      "epoch 1 lineage holds one row per bucket")
+    assert(CdcMerge.contamination(t, "sw").filter(col("lsn") >= 1500L).count() > 0)
+    // the retried index equals an uninterrupted run's
+    val idx2 = tmpDir("sw-idx2")
+    CdcStream.runAvailable(spark, cfg(tmpDir("sw-tbl2"), tmpDir("sw-ck2"), idx2))
+    def tables(dir: String) = {
+      val l = NeardupIndex.load(spark, dir)
+      Seq(l.bands.select("doc_id", "band", "bucket", "_p"), l.shingles.select("doc_id", "_s"),
+        l.sizes.select("doc_id", "_sz"), l.counts.select("band", "bucket", "_n"))
+        .map(df => df.collect().map(_.toString).sorted.toSeq)
+    }
+    assert(tables(idx) === tables(idx2))
+  }
+
+  test("bench grams: the stream's cached gram set is released when the query stops") {
+    import graft.functions.SimOps
+    val src = tmpDir("bg-src"); val bdir = tmpDir("bg-bench")
+    ChangeGen.events(spark, 200L, numConvs = 10, maxTurns = 4)
+      .repartition(1).write.parquet(s"$src/e0")
+    SimOps.benchGrams(ChangeGen.events(spark, 10L, numConvs = 10, maxTurns = 4)
+      .select(col("lsn").as("id"), col("text")), "id", "text", 3).write.mode("overwrite").parquet(bdir)
+    def cached = spark.sharedState.cacheManager.lookupCachedData(
+      spark.read.parquet(bdir).asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    val listeners = spark.streams.listListeners().length
+    val cfg = CdcStream.Config(src, tmpDir("bg-tbl"), tmpDir("bg-ck"),
+      queryId = "bg", numBuckets = 4, availableNow = false, processingTimeMs = 0L,
+      contamBenchDir = Some(bdir))
+    val q = CdcStream.start(spark, cfg)
+    try {
+      q.processAllAvailable()
+      assert(cached.isDefined, "the running stream caches its gram set")
+    } finally q.stop()
+    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    assert(cached.isEmpty, "gram set still cached after stop()")
+    assert(spark.streams.listListeners().length === listeners)
+    // a replay with nothing new may end before its release hook is
+    // registered: the hook still runs, and still removes itself
+    CdcStream.runAvailable(spark, cfg.copy(availableNow = true))
+    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    assert(cached.isEmpty, "gram set still cached after an empty replay")
+    assert(spark.streams.listListeners().length === listeners, "release hook left registered")
+  }
+
+  test("near-dup index append: MinHash aggregate and shingle distinct run once; tables unchanged") {
+    import graft.functions.SimOps
+    import graft.operators.NeardupIndex
+    import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Min}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import spark.implicits._
+    val docs = (0 until 60).map(i =>
+      (s"d$i", s"shared words across docs plus token$i and tail ${i % 7}")).toDF("doc_id", "text")
+    val cfg = NeardupIndex.Config(shingleN = 2)
+    val dir = tmpDir("nd-once")
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan; () }
+      override def onFailure(funcName: String,
+                             qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try {
+      NeardupIndex.append(dir, docs, cfg, epoch = Some(0L))
+      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    // every executed node, through AQE stages and into cached plans: a
+    // persisted table's plan is shared by every scan of it, so one node
+    // instance = one computation, and its row metric counts each run
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case s: QueryStageExec => nodes(s.plan)
+      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
+      case other => other.children.flatMap(nodes)
+    })
+    def distinctNodes(pred: BaseAggregateExec => Boolean): Seq[BaseAggregateExec] = {
+      val seen = new java.util.IdentityHashMap[SparkPlan, Unit]()
+      plans.synchronized(plans.toList).flatMap(nodes).collect {
+        case a: BaseAggregateExec if pred(a) && !seen.containsKey(a) => seen.put(a, ()); a
+      }
+    }
+    def rowsOut(as: Seq[BaseAggregateExec]) = as.map(_.metrics("numOutputRows").value).sum
+    val minhash = distinctNodes(a => a.aggregateExpressions.count(e =>
+      e.mode == Final && e.aggregateFunction.isInstanceOf[Min]) >= cfg.k)
+    val shingleDistinct = distinctNodes(a => a.aggregateExpressions.isEmpty &&
+      a.requiredChildDistributionExpressions.isDefined &&
+      a.groupingExpressions.map(_.name) == Seq("doc_id", "_s"))
+    val loaded = NeardupIndex.load(spark, dir)
+    assert(minhash.size === 1, s"MinHash aggregate planned ${minhash.size} times")
+    assert(rowsOut(minhash) === docs.count(), "MinHash aggregate ran more than once")
+    assert(shingleDistinct.size === 1, s"shingle distinct planned ${shingleDistinct.size} times")
+    assert(rowsOut(shingleDistinct) === loaded.shingles.count(),
+      "shingle distinct ran more than once")
+    // the four written tables equal the index derived directly from the docs
+    val expect = SimOps.neardupIndexTables(docs, cfg.idCol, cfg.textCol, cfg.shingleN,
+      cfg.k, cfg.bands, cfg.rowsPerBand)
+    def rows(df: org.apache.spark.sql.DataFrame, cols: String*) =
+      df.select(cols.map(col): _*).collect().map(_.toString).sorted.toSeq
+    assert(rows(loaded.bands, "doc_id", "band", "bucket", "_p") ===
+      rows(expect.bands, "doc_id", "band", "bucket", "_p"))
+    assert(rows(loaded.shingles, "doc_id", "_s") === rows(expect.shingles, "doc_id", "_s"))
+    assert(rows(loaded.sizes, "doc_id", "_sz") === rows(expect.sizes, "doc_id", "_sz"))
+    assert(rows(loaded.counts, "band", "bucket", "_n") ===
+      rows(expect.counts, "band", "bucket", "_n"))
+  }
+
+  test("near-dup index append: a batch whose texts have no tokens appends an empty epoch") {
+    import graft.operators.NeardupIndex
+    import spark.implicits._
+    val dir = tmpDir("nd-blank")
+    // non-null I/U texts, so appendBatch does append, but zero tokens (the
+    // shingler splits on spaces): the epoch's band and shingle tables are empty
+    val blank = Seq((1L, "", "I"), (2L, "   ", "U"))
+      .toDF("lsn", "text", "op")
+      .select(lit("c").as("conv_id"), col("lsn").cast("int").as("turn_idx"),
+        col("lsn"), col("text"), col("op"))
+    NeardupIndex.appendBatch(dir, blank, epoch = Some(0L))
+    // a later epoch appends as usual; the blank epoch adds no index rows
+    val docs = Seq(("d1", "one two three four five"), ("d2", "one two three four six"))
+      .toDF("doc_id", "text")
+    NeardupIndex.append(dir, docs, epoch = Some(1L))
+    val l = NeardupIndex.load(spark, dir)
+    val cfg = NeardupIndex.Config()
+    assert(l.sizes.select("doc_id").as[String].collect().sorted.toSeq === Seq("d1", "d2"))
+    assert(l.bands.count() === 2L * cfg.bands)
+    assert(l.counts.agg(sum("_n")).as[Long].head() === 2L * cfg.bands)
+  }
 }

@@ -695,36 +695,6 @@ object SimOps {
       .filter(col("hamming") <= maxHamming)
   }
 
-  // ── blocked pairwise Jaccard (relational) ──────────────────────────────────
-
-  /** Pairwise Jaccard, relational form: explode distinct shingles, self-join on
-    * (block, shingle) to count intersections (codegen'd hash join — never a
-    * nested-loop over array columns), then |A∪B| = |A|+|B|−|A∩B|. `blockCols`
-    * bound the candidate space; at scale use LSH band buckets as the block
-    * (see [[neardupPairs]]) — metadata blocks like (lang, source) grow linearly
-    * with the corpus and make the within-block join quadratic. */
-  def jaccardPairs(docs: DataFrame, idCol: String, shinglesCol: String,
-                   blockCols: Seq[String]): DataFrame = {
-    val sized = docs.select(
-      (blockCols.map(col) :+ col(idCol) :+ col(shinglesCol).as("_sh")
-        :+ size(col(shinglesCol)).as("_sz")): _*)
-    // join on the shingle's 64-bit hash, not the string: smaller shuffle rows and
-    // long-vs-long key compares (collision odds are ~n²/2^64 — irrelevant here)
-    val ex = sized.select(
-      (blockCols.map(col) :+ col(idCol) :+ col("_sz") :+ explode(col("_sh")).as("_s0")): _*)
-      .withColumn("_s", xxhash64(col("_s0"))).drop("_s0")
-    val joinCond = blockCols.map(c => col(s"a.$c") === col(s"b.$c"))
-      .reduce(_ && _) && col("a._s") === col("b._s") &&
-      col(s"a.$idCol") < col(s"b.$idCol")
-    ex.as("a").join(ex.as("b"), joinCond)
-      .groupBy(col(s"a.$idCol").as("left_id"), col(s"b.$idCol").as("right_id"),
-        col("a._sz").as("sza"), col("b._sz").as("szb"))
-      .agg(count(lit(1)).as("common"))
-      .select(col("left_id"), col("right_id"),
-        (col("common").cast("double") /
-          (col("sza") + col("szb") - col("common")).cast("double")).as("jaccard"))
-  }
-
   // ── hyperplane-LSH ANN ─────────────────────────────────────────────────────
 
   /** Pure-Scala twin of [[PortableHash.md5Long]] for DRIVER-side constant

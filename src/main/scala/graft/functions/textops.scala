@@ -144,11 +144,9 @@ object TextOps {
       size(regexp_extract_all(afterIp, lit(phoneRe), lit(0))).cast("long"))
   }
 
-  /** DuckDB twins built from the SAME pattern constants ('g' = replace all,
-    * Spark's default). Patterns contain no single quotes, so direct splice
-    * into a standard SQL string literal is safe (backslashes are literal). */
-  def redactPiiSql(expr: String): String =
-    s"regexp_replace(regexp_replace(regexp_replace($expr, '$emailRe', '<EMAIL>', 'g'), '$ipv4Re', '<IP>', 'g'), '$phoneRe', '<PHONE>', 'g')"
+  /** DuckDB twin of one [[piiCounts]] stage, built from the SAME pattern
+    * constants. Patterns contain no single quotes, so direct splice into a
+    * standard SQL string literal is safe (backslashes are literal). */
   def piiCountSql(expr: String, re: String): String =
     s"CAST(len(regexp_extract_all($expr, '$re')) AS BIGINT)"
 

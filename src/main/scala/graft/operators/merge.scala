@@ -124,14 +124,6 @@ object CdcMerge {
   private val skewCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Double)]()
 
-  private val debug = sys.env.contains("SPARK_GRAFT_MERGE_DEBUG")
-  private def timed[T](label: String)(f: => T): T = {
-    val t0 = System.nanoTime()
-    val r = f
-    if (debug) System.err.println(f"[merge-timing] $label: ${(System.nanoTime() - t0) / 1e9}%.2fs")
-    r
-  }
-
   /** Driver threads for [[applyBatch]]'s side writes: daemon, created on
     * demand and reaped when idle, so concurrency follows the side writes
     * actually submitted. */
@@ -231,14 +223,12 @@ object CdcMerge {
     // aggregate branch that legitimately scans each row once must use the
     // twin, never the observed plan.
     val goodNoObs = batch.filter(rejectReason(batch, knownRoles).isNull)
-    val hotShare = timed("skew-sample") {
-      Option(skewCache.get(skewKey)) match {
-        case Some((sampledAt, share)) if epochId - sampledAt < skewSampleEvery => share
-        case _ =>
-          val share = Skew.topKeyShare(goodNoObs, "conv_id")
-          skewCache.put(skewKey, (epochId, share))
-          share
-      }
+    val hotShare = Option(skewCache.get(skewKey)) match {
+      case Some((sampledAt, share)) if epochId - sampledAt < skewSampleEvery => share
+      case _ =>
+        val share = Skew.topKeyShare(goodNoObs, "conv_id")
+        skewCache.put(skewKey, (epochId, share))
+        share
     }
     // Strategy (measured, BASELINE.md round 5): the two-phase fixed-width
     // form beat max(struct(...)) by ~24% at the 10⁸-event grounding scale
@@ -265,15 +255,15 @@ object CdcMerge {
     val side = new SideWrites(spark, sideWrites)
     try {
       // 5. Per-bucket lineage stats in ONE aggregation (also yields touched buckets).
-      val stats = timed("dedup+stats")(changes.groupBy("_gbucket").agg(
+      val stats = changes.groupBy("_gbucket").agg(
         min("_lsn_min").as("lsn_min"), max("lsn").as("lsn_max"),
         count(lit(1)).as("rows_applied"),
         sum(when(col("op") === "D", 1L).otherwise(0L)).as("deletes"),
         sum(col("n_events") - 1L).as("conflicts")
-      ).collect())
+      ).collect()
 
       // the observation resolved with the stats job (same scan)
-      val nRejects = timed("rejects") {
+      val nRejects = {
         val metrics = rejectObs.get
         val n = metrics.get("n_rejects").flatMap(Option(_))
           .map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -353,7 +343,7 @@ object CdcMerge {
           (m, snap.files.filterNot(f => touched.contains(f.bucket)))
       }
 
-      val newFiles = timed("merge+write")(table.writeDataFiles(merged, snap.version + 1, schemaId))
+      val newFiles = table.writeDataFiles(merged, snap.version + 1, schemaId)
 
       // 7. Lineage BEFORE the commit: a crash in between re-runs the epoch and
       //    rewrites the same path deterministically.
@@ -362,8 +352,8 @@ object CdcMerge {
         graft.LineageRow(queryId, epochId, r.getInt(0), r.getLong(1), r.getLong(2),
           r.getLong(3), r.getLong(4), r.getLong(5))
       }.toDF()
-      timed("lineage")(lineage.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"${table.dir}/_lineage/q=$queryId/e=$epochId"))
+      lineage.coalesce(1).write.mode(SaveMode.Overwrite)
+        .parquet(s"${table.dir}/_lineage/q=$queryId/e=$epochId")
 
       // 8. Atomic snapshot commit carrying the epoch ledger — once every
       //    side write has landed.

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
 import graft.functions.SimOps
 import graft.sources.{LakeIO, NioLakeIO}
@@ -117,6 +118,31 @@ object NeardupIndex {
       }
     }.distinct.sorted
 
+  /** The tables' schemas, as [[append]] writes them, around the index's id
+    * field (name and type as the appended docs carried them). Reads use these
+    * instead of inferring a schema from the files: an epoch whose texts have
+    * no tokens writes no band file to infer from. */
+  private def schemas(id: StructField): Map[String, StructType] = {
+    val (band, bucket) = (StructField("band", IntegerType), StructField("bucket", LongType))
+    Map(
+      "bands" -> StructType(Seq(id, band, bucket, StructField("_p", IntegerType))),
+      "shingles" -> StructType(Seq(id, StructField("_s", LongType))),
+      "sizes" -> StructType(Seq(id, StructField("_sz", LongType))),
+      "counts" -> StructType(Seq(band, bucket, StructField("_n", LongType))))
+  }
+
+  /** Reads the index's tables with their fixed schemas. The id field comes
+    * from `sizes` under `idFrom`: not partitioned, so every append writes a
+    * file there, empty or not. */
+  private final class Tables(spark: SparkSession, dir: String, idFrom: String) {
+    private val schema = schemas(spark.read.parquet(s"$idFrom/sizes").schema.head)
+    /** All per-epoch directories of `name`, with their `e` column. */
+    def epochs(name: String): DataFrame =
+      spark.read.schema(schema(name).add("e", LongType)).parquet(s"$dir/$name")
+    def generation(gen: Long, name: String): DataFrame =
+      spark.read.schema(schema(name)).parquet(s"$dir/compacted/g=$gen/$name")
+  }
+
   private def walkParquet(io: LakeIO, path: String): Seq[String] =
     if (io.isDirectory(path)) io.listDir(path).flatMap(walkParquet(io, _))
     else if (path.endsWith(".parquet")) Seq(path)
@@ -173,16 +199,16 @@ object NeardupIndex {
            io: LakeIO = NioLakeIO): SimOps.NeardupIndexTables = {
     val led = readLedger(io, dir)
     val hasLive = liveEpochs(io, dir).exists(_ > led.compactedThrough)
+    if (!hasLive && led.gen < 0)
+      throw new IllegalStateException(s"near-dup index $dir is empty")
+    val tables = new Tables(spark, dir,
+      if (hasLive) dir else s"$dir/compacted/g=${led.gen}")
     def table(name: String): DataFrame = {
       val live = if (hasLive)
-        Some(spark.read.parquet(s"$dir/$name")
-          .filter(col("e") > led.compactedThrough).drop("e"))
+        Some(tables.epochs(name).filter(col("e") > led.compactedThrough).drop("e"))
       else None
-      val comp = if (led.gen >= 0)
-        Some(spark.read.parquet(s"$dir/compacted/g=${led.gen}/$name"))
-      else None
-      (live.toSeq ++ comp.toSeq).reduceOption(_.unionByName(_)).getOrElse(
-        throw new IllegalStateException(s"near-dup index $dir is empty ($name)"))
+      val comp = if (led.gen >= 0) Some(tables.generation(led.gen, name)) else None
+      (live.toSeq ++ comp.toSeq).reduce(_.unionByName(_))
     }
     // counts carries PER-EPOCH partials; the query path sums them (rows ∝
     // buckets touched, never docs × bands — compaction folds them exactly)
@@ -216,15 +242,11 @@ object NeardupIndex {
     if (foldable.isEmpty) { gc(io, dir, led); refresh(spark, dir) } // just re-GC
     else {
       val newGen = led.gen + 1
+      val tables = new Tables(spark, dir, dir)
       def mergedRaw(name: String): DataFrame = {
-        val fold = if (foldable.nonEmpty)
-          Some(spark.read.parquet(s"$dir/$name")
-            .filter(col("e").isin(foldable: _*)).drop("e"))
-        else None
-        val prev = if (led.gen >= 0)
-          Some(spark.read.parquet(s"$dir/compacted/g=${led.gen}/$name"))
-        else None
-        (fold.toSeq ++ prev.toSeq).reduce(_.unionByName(_))
+        val fold = tables.epochs(name).filter(col("e").isin(foldable: _*)).drop("e")
+        val prev = if (led.gen >= 0) Some(tables.generation(led.gen, name)) else None
+        (fold +: prev.toSeq).reduce(_.unionByName(_))
       }
       // distinct is belt-and-braces (epochs are id-disjoint by contract);
       // it runs HERE, offline at compaction, not per batch query

@@ -2,10 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.functions.{Multimodal, SimOps, TextOps}
+import graft.functions.{SimOps, TextOps}
 
 /** Unit specs for the training-data operators: text analysis, dedup/similarity
-  * signatures (column and relational forms agree), multimodal plumbing. */
+  * signatures (column and relational forms agree). */
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
 
@@ -116,16 +116,6 @@ class FunctionsSpec extends SparkSpec {
     assert(j((1L, 4L)) === 1.0)
     assert(j((1L, 2L)) > 0.5)
     assert(j((1L, 3L)) === 0.0)
-  }
-
-  test("relational jaccardPairs agrees with the column-form jaccard") {
-    val sh = docs.withColumn("block", lit(1))
-      .select(col("block"), col("doc_id"), SimOps.wordShingles(col("text"), 2).as("sh"))
-    val rel = SimOps.jaccardPairs(sh, "doc_id", "sh", Seq("block"))
-      .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
-    assert(math.abs(rel((1L, 4L)) - 1.0) < 1e-12)
-    assert(rel((1L, 2L)) > 0.5)
-    assert(!rel.contains((1L, 3L))) // zero intersection → no joined row at all
   }
 
   test("relational minhash signatures: dups identical, near-dups mostly agree") {
@@ -552,291 +542,5 @@ class FunctionsSpec extends SparkSpec {
       Seq((200L, "totally unrelated tokens only")).toDF("doc_id", "text"),
       "doc_id", "text", n = 3)
     assert(none.count() === 0)
-  }
-
-  test("multimodal: real BMP and WAV headers decode to true dimensions/rates") {
-    // hand-built canonical headers (pure bytes, no image/audio libs involved)
-    def bmp(w: Int, h: Int): Array[Byte] = {
-      val b = new Array[Byte](26)
-      b(0) = 'B'; b(1) = 'M'
-      for (i <- 0 until 4) { b(18 + i) = ((w >> (8 * i)) & 0xFF).toByte }
-      for (i <- 0 until 4) { b(22 + i) = ((h >> (8 * i)) & 0xFF).toByte }
-      b
-    }
-    def wav(rate: Int, channels: Int): Array[Byte] = {
-      val b = new Array[Byte](28)
-      "RIFF".getBytes.copyToArray(b, 0); "WAVE".getBytes.copyToArray(b, 8)
-      "fmt ".getBytes.copyToArray(b, 12)
-      b(22) = (channels & 0xFF).toByte; b(23) = ((channels >> 8) & 0xFF).toByte
-      for (i <- 0 until 4) { b(24 + i) = ((rate >> (8 * i)) & 0xFF).toByte }
-      b
-    }
-    val media = Seq(
-      (1L, bmp(640, 480), "image"),
-      (2L, bmp(131072, -256), "image"), // width > 2^16, top-down (negative) height
-      (3L, wav(44100, 2), "audio"),
-      (4L, "not-a-known-format".getBytes, "image") // falls back to the stub
-    ).toDF("id", "payload", "media_type")
-    val out = Multimodal.decodeAndFeaturize(media, "id", "payload", "media_type")
-      .select(col("id"), col("media.width"), col("media.height"),
-        col("media.sample_rate"), col("media.channels"))
-      .orderBy("id").collect()
-    assert(out(0).getInt(1) === 640 && out(0).getInt(2) === 480)
-    assert(out(1).getInt(1) === 131072 && out(1).getInt(2) === 256)
-    assert(out(2).isNullAt(1) && out(2).getInt(3) === 44100 && out(2).getInt(4) === 2)
-    assert(!out(3).isNullAt(1) && out(3).isNullAt(3)) // stub fills dims, not rate
-  }
-
-  test("multimodal: real PNG and JPEG headers decode to true dimensions") {
-    // canonical byte fixtures built by hand — no image libraries involved
-    def png(w: Int, h: Int): Array[Byte] = {
-      val b = new Array[Byte](24)
-      Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).zipWithIndex
-        .foreach { case (v, i) => b(i) = v.toByte }
-      b(11) = 13 // IHDR length (BE32 = 0,0,0,13)
-      "IHDR".getBytes.copyToArray(b, 12)
-      for (i <- 0 until 4) { b(16 + i) = ((w >> (8 * (3 - i))) & 0xFF).toByte }
-      for (i <- 0 until 4) { b(20 + i) = ((h >> (8 * (3 - i))) & 0xFF).toByte }
-      b
-    }
-    def jpeg(w: Int, h: Int): Array[Byte] = {
-      // SOI, APP0 segment (JFIF-ish, length 16), then SOF0 with dims
-      val app0 = Array[Byte](0xFF.toByte, 0xE0.toByte, 0, 16) ++ new Array[Byte](14)
-      val sof = Array[Byte](0xFF.toByte, 0xC0.toByte, 0, 11, 8,
-        ((h >> 8) & 0xFF).toByte, (h & 0xFF).toByte,
-        ((w >> 8) & 0xFF).toByte, (w & 0xFF).toByte, 1, 0x11)
-      Array[Byte](0xFF.toByte, 0xD8.toByte) ++ app0 ++ sof
-    }
-    assert(Multimodal.parsePng(png(1920, 1080)) === Some((1920, 1080)))
-    assert(Multimodal.parseJpeg(jpeg(4032, 3024)) === Some((4032, 3024)))
-    assert(Multimodal.parsePng(jpeg(10, 10)) === None)
-    assert(Multimodal.parseJpeg(png(10, 10)) === None)
-    assert(Multimodal.parseJpeg("not jpeg at all".getBytes) === None)
-    // and through the partition-parallel decode operator
-    val media = Seq(
-      (1L, png(800, 600), "image"),
-      (2L, jpeg(640, 480), "image")
-    ).toDF("id", "payload", "media_type")
-    val out = Multimodal.decodeAndFeaturize(media, "id", "payload", "media_type")
-      .select(col("id"), col("media.width"), col("media.height"))
-      .orderBy("id").collect()
-    assert(out(0).getInt(1) === 800 && out(0).getInt(2) === 600)
-    assert(out(1).getInt(1) === 640 && out(1).getInt(2) === 480)
-  }
-
-  test("multimodal: decodable images yield real pixel-derived features") {
-    import java.awt.image.BufferedImage
-    def pngOf(img: BufferedImage): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, "png", bos)
-      bos.toByteArray
-    }
-    val red = new BufferedImage(8, 8, BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 8; y <- 0 until 8) red.setRGB(x, y, 0xFF0000)
-    val feat = Multimodal.imageFeatures(pngOf(red)).get
-    assert(feat(0) === 1.0f && feat(1) === 0.0f && feat(2) === 0.0f) // mean RGB
-    assert(math.abs(feat(3) - 0.299f) < 1e-3)  // Rec.601 luma of pure red
-    assert(feat(5) === 1.0f && feat(4) === 0.0f && feat(6) === 0.0f &&
-      feat(7) === 0.0f)                        // luma 76 lands in bin 1 alone
-    // two-tone: half black half white → meanLuma .5, mass split bins 0 and 3
-    val bw = new BufferedImage(4, 2, BufferedImage.TYPE_INT_RGB)
-    for (x <- 0 until 4) { bw.setRGB(x, 0, 0x000000); bw.setRGB(x, 1, 0xFFFFFF) }
-    val f2 = Multimodal.imageFeatures(pngOf(bw)).get
-    assert(math.abs(f2(3) - 0.5f) < 1e-3 && f2(4) === 0.5f && f2(7) === 0.5f)
-    // through the operator: real dims AND the same real features
-    val df = Seq((1L, pngOf(red), "image")).toDF("id", "payload", "media_type")
-    val m = Multimodal.decodeAndFeaturize(df, "id", "payload", "media_type")
-      .select("media.*").collect()(0)
-    assert(m.getInt(1) === 8 && m.getInt(2) === 8)
-    assert(m.getSeq[Float](6) === feat.toSeq)
-    // a header-only fixture has no pixel stream: imageFeatures refuses (the
-    // stub covers the feature) but the header dims stay real
-    def headerPng(w: Int, h: Int): Array[Byte] = {
-      val b = new Array[Byte](24)
-      Array(0x89, 'P', 'N', 'G', 0x0D, 0x0A, 0x1A, 0x0A).zipWithIndex
-        .foreach { case (v, i) => b(i) = v.toByte }
-      b(11) = 13; "IHDR".getBytes.copyToArray(b, 12)
-      for (i <- 0 until 4) { b(16 + i) = ((w >> (8 * (3 - i))) & 0xFF).toByte }
-      for (i <- 0 until 4) { b(20 + i) = ((h >> (8 * (3 - i))) & 0xFF).toByte }
-      b
-    }
-    assert(Multimodal.imageFeatures(headerPng(9, 9)) === None)
-  }
-
-  test("multimodal: real MP4 and GIF headers decode to dimensions/frame counts") {
-    // hand-built minimal ISO-BMFF trees — pure bytes, no media libraries
-    def box(typ: String, payload: Array[Byte]): Array[Byte] = {
-      val size = 8 + payload.length
-      Array(((size >> 24) & 0xFF).toByte, ((size >> 16) & 0xFF).toByte,
-        ((size >> 8) & 0xFF).toByte, (size & 0xFF).toByte) ++
-        typ.getBytes("ISO-8859-1") ++ payload
-    }
-    def largeBox(typ: String, payload: Array[Byte]): Array[Byte] = {
-      // size==1 → 64-bit largesize (16-byte header)
-      val size = 16L + payload.length
-      Array[Byte](0, 0, 0, 1) ++ typ.getBytes("ISO-8859-1") ++
-        (0 until 8).map(i => ((size >> (8 * (7 - i))) & 0xFF).toByte).toArray ++ payload
-    }
-    def be32a(v: Int) = Array(((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-      ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    def tkhd(w: Int, h: Int): Array[Byte] =
-      // version 0: fullbox(4) + times/ids/reserved/layer/volume/matrix (72) +
-      // width/height as 16.16 fixed point at payload offsets 76/80
-      box("tkhd", new Array[Byte](76) ++ be32a(w << 16) ++ be32a(h << 16))
-    def stszTrak(w: Int, h: Int, frames: Int): Array[Byte] = {
-      val stsz = box("stsz", new Array[Byte](8) ++ be32a(frames))
-      box("trak", tkhd(w, h) ++ box("mdia", box("minf", box("stbl", stsz))))
-    }
-    val ftyp = box("ftyp", "isom".getBytes ++ new Array[Byte](4))
-    val audioTrak = stszTrak(0, 0, 99) // audio tracks carry 0x0 dims — must be skipped
-    val mp4 = ftyp ++ box("moov", audioTrak ++ stszTrak(1280, 720, 42))
-    assert(Multimodal.parseMp4(mp4) === Some((1280, 720, 42)))
-    // 64-bit largesize moov parses identically
-    val mp4Large = ftyp ++ largeBox("moov", stszTrak(3840, 2160, 7))
-    assert(Multimodal.parseMp4(mp4Large) === Some((3840, 2160, 7)))
-    // no ftyp, truncated, or foreign bytes → None (no misparse of random binaries)
-    assert(Multimodal.parseMp4(box("moov", stszTrak(10, 10, 1))) === None)
-    assert(Multimodal.parseMp4(mp4.take(20)) === None)
-    assert(Multimodal.parseMp4("GIF89a-not-an-mp4-at-all".getBytes) === None)
-    // malformed boxes must yield None, never throw (one corrupt payload would
-    // otherwise fail the whole decode task): zero-length tkhd, truncated dims
-    val emptyTkhd = ftyp ++ box("moov", box("trak", box("tkhd", Array.empty[Byte])))
-    assert(Multimodal.parseMp4(emptyTkhd) === None)
-    val shortTkhd = ftyp ++ box("moov", box("trak", box("tkhd", new Array[Byte](40))))
-    assert(Multimodal.parseMp4(shortTkhd) === None)
-    def gif(w: Int, h: Int): Array[Byte] =
-      "GIF89a".getBytes ++ Array((w & 0xFF).toByte, ((w >> 8) & 0xFF).toByte,
-        (h & 0xFF).toByte, ((h >> 8) & 0xFF).toByte)
-    assert(Multimodal.parseGif(gif(320, 200)) === Some((320, 200)))
-    assert(Multimodal.parseGif(mp4) === None)
-    // and through the partition-parallel decode operator: real frame counts
-    val media = Seq((1L, mp4, "video"), (2L, gif(320, 200), "image"))
-      .toDF("id", "payload", "media_type")
-    val out = Multimodal.decodeAndFeaturize(media, "id", "payload", "media_type")
-      .select(col("id"), col("media.width"), col("media.height"), col("media.n_frames"))
-      .orderBy("id").collect()
-    assert(out(0).getInt(1) === 1280 && out(0).getInt(2) === 720 && out(0).getInt(3) === 42)
-    assert(out(1).getInt(1) === 320 && out(1).getInt(2) === 200)
-  }
-
-  test("multimodal: real EBML (MKV/WebM) headers decode to dimensions and duration") {
-    // hand-built EBML element trees — [id raw bytes][size VINT][payload]
-    def el(id: Array[Int], payload: Array[Byte]): Array[Byte] = {
-      require(payload.length < 127)
-      id.map(_.toByte) ++ Array((0x80 | payload.length).toByte) ++ payload
-    }
-    def uintEl(id: Array[Int], v: Long, len: Int): Array[Byte] =
-      el(id, (0 until len).map(i => ((v >> (8 * (len - 1 - i))) & 0xFF).toByte).toArray)
-    val ebmlHead = el(Array(0x1A, 0x45, 0xDF, 0xA3),
-      el(Array(0x42, 0x82), "webm".getBytes)) // DocType
-    def video(w: Int, h: Int) = el(Array(0xE0),
-      uintEl(Array(0xB0), w, 2) ++ uintEl(Array(0xBA), h, 2))
-    def trackEntry(w: Int, h: Int) = el(Array(0xAE), video(w, h))
-    val audioTrack = el(Array(0xAE), Array.empty[Byte]) // no Video child: skipped
-    def tracks(body: Array[Byte]) = el(Array(0x16, 0x54, 0xAE, 0x6B), body)
-    // Duration = 120000.0 ticks (float32), TimestampScale 1,000,000 ns → 120 s
-    val durBits = java.lang.Float.floatToIntBits(120000.0f)
-    val info = el(Array(0x15, 0x49, 0xA9, 0x66),
-      uintEl(Array(0x2A, 0xD7, 0xB1), 1000000L, 3) ++
-        el(Array(0x44, 0x89),
-          (0 until 4).map(i => ((durBits >> (8 * (3 - i))) & 0xFF).toByte).toArray))
-    val segBody = info ++ tracks(audioTrack ++ trackEntry(1920, 1080))
-    val seg = el(Array(0x18, 0x53, 0x80, 0x67), segBody)
-    val mkv = ebmlHead ++ seg
-    assert(Multimodal.parseEbml(mkv) === Some((1920, 1080, Some(120000L))))
-    // unknown-size Segment (streamed matroska): size VINT 0xFF = all value
-    // bits set → element runs to the end of the buffer
-    val segUnknown = Array(0x18, 0x53, 0x80, 0x67).map(_.toByte) ++
-      Array(0xFF.toByte) ++ segBody
-    assert(Multimodal.parseEbml(ebmlHead ++ segUnknown) ===
-      Some((1920, 1080, Some(120000L))))
-    // no Info → dims still parse, duration absent
-    val noInfo = ebmlHead ++ el(Array(0x18, 0x53, 0x80, 0x67),
-      tracks(trackEntry(640, 360)))
-    assert(Multimodal.parseEbml(noInfo) === Some((640, 360, None)))
-    // non-EBML bytes, truncation, and audio-only files never misparse
-    assert(Multimodal.parseEbml("GIF89a-not-ebml".getBytes) === None)
-    assert(Multimodal.parseEbml(mkv.take(9)) === None)
-    assert(Multimodal.parseEbml(ebmlHead ++
-      el(Array(0x18, 0x53, 0x80, 0x67), tracks(audioTrack))) === None)
-    // and through the operator: real dims + duration land in the media struct
-    val out = Multimodal.decodeAndFeaturize(
-      Seq((1L, mkv, "video")).toDF("id", "payload", "media_type"),
-      "id", "payload", "media_type")
-      .select(col("media.width"), col("media.height"), col("media.duration_ms"))
-      .collect()(0)
-    assert(out.getInt(0) === 1920 && out.getInt(1) === 1080 && out.getLong(2) === 120000L)
-  }
-
-  test("multimodal: WAV PCM content yields real sample-derived features and duration") {
-    // a full RIFF/WAVE file: fmt chunk + a PCM16 data chunk we control exactly
-    def wavPcm16(rate: Int, channels: Int, samples: Array[Short]): Array[Byte] = {
-      val data = new Array[Byte](samples.length * 2)
-      samples.zipWithIndex.foreach { case (s, i) =>
-        data(2 * i) = (s & 0xFF).toByte; data(2 * i + 1) = ((s >> 8) & 0xFF).toByte }
-      val fmt = new Array[Byte](16)
-      fmt(0) = 1 // PCM
-      fmt(2) = (channels & 0xFF).toByte
-      for (i <- 0 until 4) fmt(4 + i) = ((rate >> (8 * i)) & 0xFF).toByte
-      fmt(14) = 16 // bits per sample
-      def chunk(cc: String, payload: Array[Byte]) =
-        cc.getBytes ++ (0 until 4).map(i =>
-          ((payload.length >> (8 * i)) & 0xFF).toByte).toArray ++ payload
-      val body = "WAVE".getBytes ++ chunk("fmt ", fmt) ++ chunk("data", data)
-      chunk("RIFF", body)
-    }
-    // full-scale square wave at 8 kHz mono: rms=peak=meanAbs=1, dc=0, and the
-    // sign flips every sample → zero-cross rate 1
-    val sq = Array.tabulate(8000)(i =>
-      if (i % 2 == 0) (-32768).toShort else 32767.toShort)
-    val bytes = wavPcm16(8000, 1, sq)
-    val (nFrames, durMs, feat) = Multimodal.wavContent(bytes).get
-    assert(nFrames === 8000L && durMs === 1000L)
-    assert(math.abs(feat(0) - 1.0f) < 1e-3 && math.abs(feat(1) - 1.0f) < 1e-3)
-    assert(feat(2) === 1.0f && math.abs(feat(3)) < 1e-4) // peak, dc≈0
-    assert(math.abs(feat(4) - 1.0f) < 1e-3)              // zcr
-    assert(feat(5) === 1.0f && feat(7) === 1.0f)         // durationSec, channels
-    // stereo silence: zero rms/peak/zcr, correct frame count and channels
-    val silent = Multimodal.wavContent(
-      wavPcm16(16000, 2, new Array[Short](16000 * 2))).get
-    assert(silent._1 === 16000L && silent._2 === 1000L)
-    assert(silent._3(0) === 0.0f && silent._3(2) === 0.0f && silent._3(4) === 0.0f)
-    assert(silent._3(7) === 2.0f)
-    // header-only fixtures (no data chunk) refuse content but keep header typing
-    val headerOnly = new Array[Byte](28)
-    "RIFF".getBytes.copyToArray(headerOnly, 0)
-    "WAVE".getBytes.copyToArray(headerOnly, 8)
-    "fmt ".getBytes.copyToArray(headerOnly, 12)
-    assert(Multimodal.wavContent(headerOnly) === None)
-    // through the operator: real features + duration_ms ride the struct
-    val out = Multimodal.decodeAndFeaturize(
-      Seq((1L, bytes, "audio")).toDF("id", "payload", "media_type"),
-      "id", "payload", "media_type")
-      .select(col("media.sample_rate"), col("media.duration_ms"),
-        col("media.feature")).collect()(0)
-    assert(out.getInt(0) === 8000 && out.getLong(1) === 1000L)
-    assert(out.getSeq[Float](2) === feat.toSeq)
-  }
-
-  test("multimodal: decode/featurize plumbing is deterministic and partition-safe") {
-    val media = Seq(
-      (1L, "fake-jpeg-bytes-aaaa".getBytes, "image"),
-      (2L, "fake-wav-bytes-bbbbb".getBytes, "audio"),
-      (3L, "fake-mp4-bytes-ccccc".getBytes, "video")
-    ).toDF("id", "payload", "media_type")
-    val out = Multimodal.decodeAndFeaturize(media, "id", "payload", "media_type")
-    assert(out.schema("media").dataType === Multimodal.mediaMetaSchema)
-    val rows = out.orderBy("id").collect()
-    assert(rows.length === 3)
-    val m3 = rows(2).getStruct(1)
-    assert(m3.getString(0) === "video" && m3.getInt(3) > 1) // videos have frames
-    // deterministic across partitionings
-    val again = Multimodal.decodeAndFeaturize(media.repartition(3), "id", "payload",
-      "media_type").orderBy("id").collect()
-    assert(rows.map(_.toString).toSeq === again.map(_.toString).toSeq)
-    // frame sampling + resize plans are pure column math
-    val plan = out.select(col("id"),
-      Multimodal.frameSamplePlan(col("media.n_frames"), 10, 4).as("frames"))
-    assert(plan.filter(col("id") === 3).collect()(0).getSeq[Int](1).nonEmpty)
   }
 }

@@ -196,41 +196,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: media header parsers never throw on arbitrary or mutated bytes") {
-    import graft.functions.Multimodal
-    val rnd = new scala.util.Random(4242)
-    // a well-formed mp4 to mutate (same construction as the FunctionsSpec fixture)
-    def box(typ: String, payload: Array[Byte]): Array[Byte] = {
-      val size = 8 + payload.length
-      Array(((size >> 24) & 0xFF).toByte, ((size >> 16) & 0xFF).toByte,
-        ((size >> 8) & 0xFF).toByte, (size & 0xFF).toByte) ++
-        typ.getBytes("ISO-8859-1") ++ payload
-    }
-    def be32a(v: Int) = Array(((v >> 24) & 0xFF).toByte, ((v >> 16) & 0xFF).toByte,
-      ((v >> 8) & 0xFF).toByte, (v & 0xFF).toByte)
-    val mp4 = box("ftyp", "isom".getBytes ++ new Array[Byte](4)) ++
-      box("moov", box("trak",
-        box("tkhd", new Array[Byte](76) ++ be32a(640 << 16) ++ be32a(480 << 16)) ++
-          box("mdia", box("minf", box("stbl",
-            box("stsz", new Array[Byte](8) ++ be32a(10)))))))
-    def mustNotThrow(b: Array[Byte]): Unit = {
-      Multimodal.parseMp4(b); Multimodal.parseGif(b); Multimodal.parsePng(b)
-      Multimodal.parseJpeg(b); Multimodal.parseBmp(b); Multimodal.parseWav(b)
-      Multimodal.parseEbml(b); Multimodal.wavContent(b)
-      ()
-    }
-    (1 to 300).foreach { _ =>               // pure noise of random lengths
-      val b = new Array[Byte](rnd.nextInt(200)); rnd.nextBytes(b); mustNotThrow(b)
-    }
-    (1 to 300).foreach { _ =>               // valid mp4 with random point mutations
-      val b = mp4.clone()
-      (1 to 1 + rnd.nextInt(6)).foreach(_ => b(rnd.nextInt(b.length)) = rnd.nextInt().toByte)
-      mustNotThrow(b)
-    }
-    (0 to mp4.length).foreach(k => mustNotThrow(mp4.take(k))) // every truncation
-    assert(Multimodal.parseMp4(mp4) === Some((640, 480, 10))) // the fixture itself parses
-  }
-
   test("property: simhash band blocking finds EXACTLY the pairs with hamming ≤ 3") {
     import spark.implicits._
     import graft.functions.SimOps
@@ -246,32 +211,6 @@ class PropertySpec extends SparkSpec {
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       assert(got === expected, s"case $i")
       assert(expected.exists(p => p._1 == 0L && p._2 == 100L && p._3 == 0L)) // non-vacuous
-    }
-  }
-
-  test("property: sessionizer interval merge is batch-order-insensitive and equals the fold") {
-    import graft.streaming.StreamAnalytics.{fold, mergeSessions}
-    val gapMs = 1800L * 1000
-    val timesGen: Gen[List[Long]] = for {
-      n <- Gen.choose(1, 60)
-      ts <- Gen.listOfN(n, Gen.choose(0L, 48L * 3600 * 1000))
-    } yield ts.map(t => t / 1000 * 1000) // second granularity, duplicates allowed
-    (1 to 30).foreach { i =>
-      val times = timesGen.apply(Gen.Parameters.default, Seed(77L + i)).getOrElse(Nil)
-      // reference: the ascending fold over the COMPLETE set (batch semantics)
-      val (closed, open) = fold(times, gapMs, None)
-      val reference = (closed ++ open).map(s => (s.startMs, s.lastMs, s.n))
-      // mergeSessions over the complete set in ONE batch equals the fold
-      val oneShot = mergeSessions(Nil, times, gapMs).map(s => (s.startMs, s.lastMs, s.n))
-      assert(oneShot === reference, s"case $i one-shot")
-      // and over ANY batch split in ANY order — the late-data property: as long
-      // as no session was sealed in between, arrival order cannot matter
-      val shuffled = new scala.util.Random(i).shuffle(times)
-      val batches = shuffled.grouped(math.max(1, shuffled.size / 3)).toList
-      val incremental = batches.foldLeft(Seq.empty[graft.streaming.SessState]) {
-        (carried, b) => mergeSessions(carried, b, gapMs)
-      }.map(s => (s.startMs, s.lastMs, s.n))
-      assert(incremental === reference, s"case $i incremental ($batches)")
     }
   }
 }

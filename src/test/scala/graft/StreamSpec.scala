@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.CdcMerge
 import graft.sources.LakeTable
-import graft.streaming.{CdcStream, Session, SessionEvent, StreamAnalytics}
+import graft.streaming.CdcStream
 
 /** Structured-Streaming scenarios: multi-batch replay, resume-with-new-data from
   * the same checkpoint, crash-orphan tolerance (FIXTURES.md §2.3 crash-resume). */
@@ -92,156 +92,6 @@ class StreamSpec extends SparkSpec {
     val all = ChangeGen.events(spark, 500L, 10, 5, 0.0, 0.0).unionByName(
       ChangeGen.events(spark, 300L, 10, 5, 0.0, 0.0, seed = 7L, lsnStart = 1000L))
     assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(all)).isEmpty)
-  }
-
-  test("watermarked windowed aggregation counts events per tumbling window") {
-    import spark.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(java.sql.Timestamp, String)](
-      implicitly[org.apache.spark.sql.Encoder[(java.sql.Timestamp, String)]], spark)
-    val events = ms.toDF().toDF("ts", "role")
-    val q = StreamAnalytics.windowedCounts(events, "5 minutes", "10 minutes")
-      .writeStream.format("memory").queryName("wc").outputMode("append").start()
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    try {
-      ms.addData((t(0), "user"), (t(1), "user"), (t(2), "assistant"), (t(6), "user"))
-      q.processAllAvailable()
-      // push the watermark far past the first windows so they finalize
-      ms.addData((t(59), "user"))
-      q.processAllAvailable()
-    } finally q.stop()
-    val rows = spark.table("wc")
-      .select(col("w_start").cast("string"), col("role"), col("n_events"))
-      .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2))).toSet
-    assert(rows.contains(("2024-01-01 10:00:00", "user", 2L)))
-    assert(rows.contains(("2024-01-01 10:00:00", "assistant", 1L)))
-    assert(rows.contains(("2024-01-01 10:05:00", "user", 1L)))
-  }
-
-  test("streaming quality monitor equals its batch twin per finalized window") {
-    import spark.implicits._
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(java.sql.Timestamp, String)](
-      implicitly[org.apache.spark.sql.Encoder[(java.sql.Timestamp, String)]], spark)
-    val events = ms.toDF().toDF("ts", "text")
-    val q = StreamAnalytics.qualityMonitor(events, "5 minutes", "10 minutes")
-      .writeStream.format("memory").queryName("qm").outputMode("append").start()
-    def t(min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 10:$min%02d:00")
-    val good = "the quick brown fox jumps over the lazy dog and then some more " * 2
-    val batch1 = Seq((t(0), good), (t(1), "tiny"), (t(2), null: String), (t(6), good))
-    try {
-      ms.addData(batch1: _*)
-      q.processAllAvailable()
-      ms.addData((t(59), good)) // advance the watermark; earlier windows finalize
-      q.processAllAvailable()
-    } finally q.stop()
-    val streamed = spark.table("qm")
-      .select(col("w_start").cast("string"), col("n_events"), col("n_null_text"),
-        col("avg_quality"), col("n_tokens"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getLong(4))).toSet
-    // the batch twin over the same finalized-window events (same code path —
-    // the watermark is a no-op on batch input)
-    val expected = StreamAnalytics.qualityMonitor(batch1.toDF("ts", "text"))
-      .select(col("w_start").cast("string"), col("n_events"), col("n_null_text"),
-        col("avg_quality"), col("n_tokens"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2),
-        r.getDouble(3), r.getLong(4))).toSet
-    assert(expected.subsetOf(streamed), s"streamed=$streamed expected=$expected")
-    // null text counts as an event with zero tokens, not a quality sample:
-    // avg_quality averages ONLY the two real texts (1.0 and 0.2) — were the
-    // null scored at the 0.2 baseline the window would read 0.4667
-    val w0 = streamed.find(_._1 === "2024-01-01 10:00:00").get
-    assert(w0._2 === 3L && w0._3 === 1L && w0._5 > 0L)
-    assert(w0._4 === 0.6, s"delete events must not dilute avg_quality: $w0")
-  }
-
-  test("flatMapGroupsWithState sessionizer: gap splits, cross-batch state, timeout emission") {
-    import spark.implicits._
-    val gapMs = 30 * 60 * 1000L
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SessionEvent](
-      implicitly[org.apache.spark.sql.Encoder[SessionEvent]], spark)
-    val q = StreamAnalytics.sessionize(ms.toDS(), gapMs, watermark = "0 seconds")
-      .writeStream.format("memory").queryName("sess").outputMode("append").start()
-    def ts(h: Int, min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$min%02d:00")
-    try {
-      // batch 1: conv A has two events 10 min apart (one session so far)
-      ms.addData(SessionEvent("A", ts(10, 0)), SessionEvent("A", ts(10, 10)))
-      q.processAllAvailable()
-      assert(spark.table("sess").count() === 0L) // still open — nothing emitted
-      // batch 2: conv A resumes within the gap (cross-batch state continues the
-      // SAME session), then a far-future event gap-closes it. With the
-      // 0-second watermark delay the watermark reaches 15:00 right after this
-      // batch, passing 10:30 + gap — so the sealed session emits (via the
-      // engine's follow-up timeout batch), and ONLY because the watermark
-      // passed, not because the gap closed (see the late-data spec below)
-      ms.addData(SessionEvent("A", ts(10, 30)), SessionEvent("A", ts(15, 0)))
-      q.processAllAvailable()
-      val closed = spark.table("sess").as[Session].collect()
-      assert(closed.length === 1)
-      assert(closed(0).session_start === ts(10, 0) &&
-        closed(0).session_end === ts(10, 30) && closed(0).n_events === 3L)
-      // batch 3: watermark 20:00 > 15:00 + gap seals conv A's trailing session
-      // by event-time timeout (conv A receives no further data)
-      ms.addData(SessionEvent("B", ts(20, 0)))
-      q.processAllAvailable()
-      ms.addData(SessionEvent("B", ts(20, 1))) // one more trigger to flush timeouts
-      q.processAllAvailable()
-      val all = spark.table("sess").as[Session].collect()
-      assert(all.exists(s => s.conv_id == "A" && s.session_start == ts(15, 0) &&
-        s.n_events == 1L), s"timeout must close the trailing session: ${all.mkString(",")}")
-    } finally q.stop()
-  }
-
-  test("sessionizer late data: events inside the watermark extend, bridge, and backdate sessions") {
-    import spark.implicits._
-    val gapMs = 30 * 60 * 1000L
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[SessionEvent](
-      implicitly[org.apache.spark.sql.Encoder[SessionEvent]], spark)
-    // 2-hour watermark delay: late events up to 2h behind max-seen are admissible
-    val q = StreamAnalytics.sessionize(ms.toDS(), gapMs, watermark = "2 hours")
-      .writeStream.format("memory").queryName("sessl").outputMode("append").start()
-    def ts(h: Int, min: Int) = java.sql.Timestamp.valueOf(f"2024-01-01 $h%02d:$min%02d:00")
-    try {
-      // batch 1: A at 10:10 and 12:00 — two gap-separated intervals, both live
-      // (watermark after this batch = 12:00 − 2h = 10:00)
-      ms.addData(SessionEvent("A", ts(10, 10)), SessionEvent("A", ts(12, 0)))
-      q.processAllAvailable()
-      // batch 2, all LATE but admissible (≥ the 10:00 watermark):
-      //   10:01 BACKDATES the first session's start (math.min),
-      //   10:30 extends its end,
-      //   11:00 + 11:30 BRIDGE the two intervals (every hop ≤ the 30-min gap)
-      //   into ONE session 10:01-12:00 — the round-2 sessionizer had already
-      //   emitted 10:10-10:10 at gap-close, so these events would have seeded
-      //   a spurious overlapping session
-      ms.addData(SessionEvent("A", ts(10, 1)), SessionEvent("A", ts(10, 30)),
-        SessionEvent("A", ts(11, 0)), SessionEvent("A", ts(11, 30)))
-      q.processAllAvailable()
-      assert(spark.table("sessl").count() === 0L) // watermark 10:00 < seal point
-      // batch 3: B far ahead pushes the watermark past 12:00 + gap → seal
-      ms.addData(SessionEvent("B", ts(23, 0)))
-      q.processAllAvailable()
-      val closed = spark.table("sessl").as[Session].collect()
-      assert(closed.length === 1, s"expected ONE bridged session: ${closed.mkString(",")}")
-      assert(closed(0).session_start === ts(10, 1) &&
-        closed(0).session_end === ts(12, 0) && closed(0).n_events === 6L)
-    } finally q.stop()
-  }
-
-  test("batch sessionizer equals the window-function oracle on generated events") {
-    import spark.implicits._
-    val ev = ChangeGen.events(spark, 3000L, numConvs = 25, maxTurns = 8, pDelete = 0.1)
-    val input = ev.select(col("conv_id"), col("ts")).as[SessionEvent]
-    val gapMs = 30 * 60 * 1000L
-    val sessions = StreamAnalytics.sessionizeBatch(input, gapMs)
-      .groupBy("conv_id").agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
-    // independent oracle: lag-window break counting (the q_sessionize form)
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("conv_id").orderBy("ts")
-    val oracle = ev.select(col("conv_id"), col("ts"))
-      .withColumn("prev", lag("ts", 1).over(w))
-      .withColumn("brk", when(col("prev").isNull ||
-        (unix_timestamp(col("ts")) - unix_timestamp(col("prev"))) * 1000L > gapMs, 1L)
-        .otherwise(0L))
-      .groupBy("conv_id").agg(sum("brk").as("n_sessions"), count(lit(1)).as("n_events"))
-    assert(Oracle.diff(sessions, oracle).isEmpty)
   }
 
   test("incremental near-dup: microbatch loop over the persisted index equals full-corpus dedup") {
@@ -433,37 +283,6 @@ class StreamSpec extends SparkSpec {
       }.nonEmpty)
       assert(pruned, "probe did not filter the bands scan by _p bucket-hash partitions")
     } finally spark.listenerManager.unregister(listener)
-  }
-
-  test("stream-stream enrichment: annotations attach within the window, nulls sealed by watermark") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    def ts(s: String) = java.sql.Timestamp.valueOf(s)
-    val evS = MemoryStream[(String, java.sql.Timestamp)](
-      implicitly[org.apache.spark.sql.Encoder[(String, java.sql.Timestamp)]], spark)
-    val annS = MemoryStream[(String, java.sql.Timestamp, String)](
-      implicitly[org.apache.spark.sql.Encoder[(String, java.sql.Timestamp, String)]], spark)
-    val joined = StreamAnalytics.enrichWithinWindow(
-      evS.toDF().toDF("conv_id", "ts"), annS.toDF().toDF("conv_id", "ats", "label"),
-      Seq("conv_id"), "ts", "ats",
-      watermarkDelay = "10 minutes", joinWindow = "5 minutes")
-    val q = joined.writeStream.format("memory").queryName("ssj")
-      .outputMode("append").start()
-    try {
-      evS.addData(("c1", ts("2024-01-01 10:00:00")), ("c2", ts("2024-01-01 10:01:00")))
-      annS.addData(("c1", ts("2024-01-01 10:02:00"), "ok"),      // within ±5m → match
-        ("c2", ts("2024-01-01 10:30:00"), "too-late"))           // outside window
-      q.processAllAvailable()
-      // advance BOTH watermarks far past the events: the unmatched left row
-      // (c2) can now be sealed and emitted with a null label
-      evS.addData(("zz", ts("2024-01-01 12:00:00")))
-      annS.addData(("zz", ts("2024-01-01 12:00:00"), "x"))
-      q.processAllAvailable()
-      val got = spark.sql("SELECT conv_id, label FROM ssj").collect()
-        .map(r => r.getString(0) -> Option(r.getString(1))).toMap
-      assert(got.get("c1") === Some(Some("ok")), s"got $got")
-      assert(got.get("c2") === Some(None), s"c2 must emit with null label: $got")
-    } finally q.stop()
   }
 
   test("malformed json WAL lines dead-letter with a reason instead of dropping") {
@@ -777,5 +596,31 @@ class StreamSpec extends SparkSpec {
     assert(l.sizes.select("doc_id").as[String].collect().sorted.toSeq === Seq("d1", "d2"))
     assert(l.bands.count() === 2L * cfg.bands)
     assert(l.counts.agg(sum("_n")).as[Long].head() === 2L * cfg.bands)
+  }
+
+  test("near-dup index load: live epochs that wrote no band file read back empty") {
+    import graft.operators.NeardupIndex
+    import org.apache.spark.sql.types.StringType
+    import spark.implicits._
+    val dir = tmpDir("nd-blank-load")
+    // non-null I/U texts with zero tokens: appendBatch appends, but the
+    // epoch's band table has no file to infer a schema from
+    def blank(lsn: Long) = Seq((lsn, ""), (lsn + 1, "   "))
+      .toDF("lsn", "text")
+      .select(lit("c").as("conv_id"), col("lsn").cast("int").as("turn_idx"),
+        col("lsn"), col("text"), lit("I").as("op"))
+    val probe = Seq(("p1", "one two three four five")).toDF("doc_id", "text")
+    def assertEmpty(): Unit = {
+      val l = NeardupIndex.load(spark, dir)
+      Seq(l.bands, l.shingles, l.sizes, l.counts).foreach(t => assert(t.isEmpty))
+      assert(l.bands.schema("doc_id").dataType === StringType)
+      assert(NeardupIndex.batchPairs(spark, dir, probe).isEmpty)
+    }
+    NeardupIndex.appendBatch(dir, blank(1L), epoch = Some(0L))
+    assertEmpty()
+    // compaction folds the blank epoch 0 into a generation with no band file
+    NeardupIndex.appendBatch(dir, blank(3L), epoch = Some(1L))
+    NeardupIndex.compact(spark, dir)
+    assertEmpty()
   }
 }

@@ -881,6 +881,23 @@ object SimOps {
     (0 to radius).flatMap(r => combos(0 until planes, r))
   }
 
+  /** Embedding-cosine near-dup candidate pairs: vectors whose hyperplane-LSH
+    * buckets fall within Hamming distance `radius`, with exact cosine computed
+    * per candidate pair (left_id < right_id). The dedup composition is
+    * `filter(cos >= θ)` + keep-min-id anti-join — the embedding analog of
+    * [[neardupPairs]]. */
+  def cosineNeardupPairs(vecs: DataFrame, idCol: String, vecCol: String,
+                         planes: Int = -1, radius: Int = 1,
+                         maxBucket: Int = 200): DataFrame =
+    // left<right keeps one direction; the pair is also generated exactly once
+    // on that side, because only ONE mask maps bucket(left) onto bucket(right)
+    // (mask = xor of the two buckets) — so no distinct pass is needed.
+    // NOTE the asymmetry under the cap: a pair is kept iff the RIGHT member's
+    // bucket is within the cap (probes are uncapped); the oracle mirrors this.
+    annCandidates(vecs, idCol, vecCol, planes, radius, maxBucket)
+      .filter(col("_qid") < col("_cid"))
+      .select(col("_qid").as("left_id"), col("_cid").as("right_id"), col("cos"))
+
   /** Multi-probe ANN top-k over hyperplane-LSH buckets: each query probes every
     * bucket within Hamming distance `radius` of its own signature, brute-forces
     * cosine against the probed candidates, and keeps the top `k`. Returns
@@ -893,14 +910,30 @@ object SimOps {
     * signature is near-random relative to the query's), and recall scales with
     * the scanned fraction times the LSH advantage. See AnnSpec for the measured
     * curve on the test corpus. */
-  /** Embedding-cosine near-dup candidate pairs: vectors whose hyperplane-LSH
-    * buckets fall within Hamming distance `radius`, with exact cosine computed
-    * per candidate pair (left_id < right_id). The dedup composition is
-    * `filter(cos >= θ)` + keep-min-id anti-join — the embedding analog of
-    * [[neardupPairs]]. */
-  def cosineNeardupPairs(vecs: DataFrame, idCol: String, vecCol: String,
-                         planes: Int = -1, radius: Int = 1,
-                         maxBucket: Int = 200): DataFrame = {
+  def annTopK(vecs: DataFrame, idCol: String, vecCol: String,
+              planes: Int = -1, k: Int = 3, radius: Int = 1,
+              maxBucket: Int = 200): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val cands = annCandidates(vecs, idCol, vecCol, planes, radius, maxBucket)
+      .filter(col("_qid") =!= col("_cid"))
+      .select(col("_qid"), col("_cid").as("nn_id"), col("cos"))
+    val w = Window.partitionBy("_qid").orderBy(col("cos").desc, col("nn_id"))
+    cands.withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("_qid").as(idCol), col("rank"), col("nn_id"), col("cos"))
+  }
+
+  /** The ANN candidate step shared by [[cosineNeardupPairs]] and [[annTopK]]:
+    * every (query `_qid`, candidate `_cid`) whose buckets lie within Hamming
+    * distance `radius`, candidates drawn from the `maxBucket`-capped index,
+    * with their exact `cos`. Self pairs included; callers filter.
+    *
+    * `planes = -1` (the default of both callers) sizes the bucket space from
+    * the corpus via [[planesFor]] — one count() per call; pass an explicit
+    * value where the corpus size is known or pinned (the oracle queries pin 8
+    * so the DuckDB mirror stays static). */
+  private def annCandidates(vecs: DataFrame, idCol: String, vecCol: String,
+                            planes: Int, radius: Int, maxBucket: Int): DataFrame = {
     val p = if (planes > 0) planes else planesFor(vecs.count())
     val index = hyperplaneIndex(vecs, idCol, vecCol, p)
     val bounded = capIndexBuckets(index, maxBucket)
@@ -909,21 +942,11 @@ object SimOps {
       col("_nrm").as("_qn"),
       explode(array(masks.map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("_pb"))
     val dot = FloatVecDot.dot(col("_qv"), col(vecCol))
-    // left<right keeps one direction; the pair is also generated exactly once
-    // on that side, because only ONE mask maps bucket(left) onto bucket(right)
-    // (mask = xor of the two buckets) — so no distinct pass is needed.
-    // NOTE the asymmetry under the cap: a pair is kept iff the RIGHT member's
-    // bucket is within the cap (probes are uncapped); the oracle mirrors this.
     probes.join(bounded, probes("_pb") === bounded("bucket"))
-      .filter(col("_qid") < col(idCol))
-      .select(col("_qid").as("left_id"), col(idCol).as("right_id"),
+      .select(col("_qid"), col(idCol).as("_cid"),
         round(dot / (col("_qn") * col("_nrm")), 6).as("cos"))
   }
 
-  /** `planes = -1` (the default here and in [[cosineNeardupPairs]]) sizes the
-    * bucket space from the corpus via [[planesFor]] — one count() per call;
-    * pass an explicit value where the corpus size is known or pinned (the
-    * oracle queries pin 8 so the DuckDB mirror stays static). */
   /** The ANN index frame (id, vec, _nrm, bucket) as ONE map-side projection:
     * norms are computed once per vector, the bucket rides in via
     * [[hyperplaneBucket]]. No materialization — both consumers (probe side,
@@ -937,27 +960,5 @@ object SimOps {
     vecs.filter(size(col(vecCol)) > 0)
       .select(col(idCol), col(vecCol), nrm.as("_nrm"),
         hyperplaneBucket(col(vecCol), p, d).as("bucket"))
-  }
-
-  def annTopK(vecs: DataFrame, idCol: String, vecCol: String,
-              planes: Int = -1, k: Int = 3, radius: Int = 1,
-              maxBucket: Int = 200): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val p = if (planes > 0) planes else planesFor(vecs.count())
-    val index = hyperplaneIndex(vecs, idCol, vecCol, p)
-    val bounded = capIndexBuckets(index, maxBucket)
-    val masks = probeMasks(p, radius)
-    val probes = index.select(col(idCol).as("_qid"), col(vecCol).as("_qv"),
-      col("_nrm").as("_qn"),
-      explode(array(masks.map(m => col("bucket").bitwiseXOR(lit(m))): _*)).as("_pb"))
-    val dot = FloatVecDot.dot(col("_qv"), col(vecCol))
-    val cands = probes.join(bounded, probes("_pb") === bounded("bucket"))
-      .filter(col("_qid") =!= col(idCol))
-      .select(col("_qid"), col(idCol).as("nn_id"),
-        round(dot / (col("_qn") * col("_nrm")), 6).as("cos"))
-    val w = Window.partitionBy("_qid").orderBy(col("cos").desc, col("nn_id"))
-    cands.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("_qid").as(idCol), col("rank"), col("nn_id"), col("cos"))
   }
 }

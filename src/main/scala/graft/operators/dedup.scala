@@ -18,78 +18,51 @@ import org.apache.spark.sql.functions._
   * shuffle — at 100 TB that is the difference between shuffling the whole stream and
   * shuffling ~|keys| rows. The struct comparison is lexicographic with `lsn` first,
   * so duplicate-LSN redelivery (same payload) resolves deterministically.
+  *
+  * This aggregate is the one LWW kernel: [[lww]] runs it once per key, and
+  * [[lwwSalted]] runs it twice (per (key, salt), then per key) for hot keys.
   */
 object Dedup {
 
   /** One row per key with all original columns, plus `n_events` (how many raw events
     * collapsed into this key — `n_events - 1` is the conflict count for lineage). */
   def lww(df: DataFrame, keyCols: Seq[String] = Seq("conv_id", "turn_idx"),
-          lsnCol: String = "lsn"): DataFrame = {
-    val valueCols = df.columns.filterNot(keyCols.contains).toSeq
-    val ordered = struct((lsnCol +: valueCols.filterNot(_ == lsnCol)).map(col): _*)
-    df.groupBy(keyCols.map(col): _*)
-      .agg(max(ordered).as("_w"), count(lit(1)).as("n_events"), min(col(lsnCol)).as("_lsn_min"))
-      .select(keyCols.map(col) ++ valueCols.map(c => col(s"_w.$c").as(c))
-        :+ col("n_events") :+ col("_lsn_min"): _*)
-  }
+          lsnCol: String = "lsn"): DataFrame =
+    flatten(winners(df, keyCols.map(col), keyCols, lsnCol), df, keyCols)
 
-  /** Two-phase LWW with FIXED-WIDTH aggregation buffers (round-5 experiment,
-    * VERDICT r04 #8): `max(struct(lsn, payload…))` carries the string payload
-    * through the aggregation buffer, which pushes Spark off HashAggregate
-    * (non-primitive buffers → ObjectHashAggregate/SortAggregate). This variant
-    * aggregates `max(lsn)` per key first (primitive buffer, map-side combine,
-    * whole-stage codegen), then joins the winning (key, maxLsn) back to the
-    * raw events to fetch the payload; a final tiny max(struct) over the ~1-row
-    * -per-key survivors resolves duplicate-LSN redelivery ties exactly like
-    * [[lww]]. Trade-off being measured: the join re-shuffles the FULL payload
-    * stream on the keys (no map-side combine of duplicates), but every
-    * aggregate on the hot path is hash-based. Output is column-identical to
-    * [[lww]]. Select per-session via `spark.graft.dedup.strategy=twophase`
-    * (see CdcMerge); the winner of the measured comparison rides BASELINE.md. */
-  /** `joinSide`: a metrics-free TWIN of `df` for the join-back branch. The
-    * two-phase plan scans the input twice (aggregate + join); if `df` carries
-    * an `observe()`, the duplicated CollectMetrics node would double-count its
-    * metrics (the Observation-resolution bug class caught in round 4). Pass
-    * the same data WITHOUT the observation; the aggregate branch — which scans
-    * every row exactly once — keeps the observed frame so the metrics resolve
-    * with this plan's action. */
-  def lwwTwoPhase(df: DataFrame, keyCols: Seq[String] = Seq("conv_id", "turn_idx"),
-                  lsnCol: String = "lsn",
-                  joinSide: Option[DataFrame] = None): DataFrame = {
-    val valueCols = df.columns.filterNot(keyCols.contains).toSeq
-    val ordered = struct((lsnCol +: valueCols.filterNot(_ == lsnCol)).map(col): _*)
-    val winners = df.groupBy(keyCols.map(col): _*)
-      .agg(max(col(lsnCol)).as("_maxlsn"), count(lit(1)).as("n_events"),
-        min(col(lsnCol)).as("_lsn_min"))
-    joinSide.getOrElse(df).join(winners, keyCols)
-      .filter(col(lsnCol) === col("_maxlsn"))
-      .groupBy(keyCols.map(col): _*)
-      .agg(max(ordered).as("_w"), max("n_events").as("n_events"),
-        min("_lsn_min").as("_lsn_min")) // constant within the group either way
-      .select(keyCols.map(col) ++ valueCols.map(c => col(s"_w.$c").as(c))
-        :+ col("n_events") :+ col("_lsn_min"): _*)
-  }
-
-  /** Explicitly salted two-phase LWW (north rule: "salts hot conv_id keys before the
-    * key-partitioned shuffle"). Phase 1 aggregates on (key, salt) — a hot key's
-    * events spread over `saltBuckets` reducers — phase 2 reduces the ≤saltBuckets
-    * survivors per key. Spark's partial aggregation already absorbs most skew
-    * map-side; the explicit salt additionally protects the reduce side when partial
-    * aggregation degrades (high map-side key cardinality → hash-map spill).
+  /** Salted two-level [[lww]] (north rule: "salts hot conv_id keys before the
+    * key-partitioned shuffle"). Level 1 runs the kernel on (key, salt) — a hot
+    * key's events spread over `saltBuckets` reducers — level 2 reduces the
+    * ≤saltBuckets survivors per key. Spark's partial aggregation already absorbs
+    * most skew map-side; the explicit salt additionally protects the reduce side
+    * when partial aggregation degrades (high map-side key cardinality → hash-map
+    * spill).
     */
   def lwwSalted(df: DataFrame, keyCols: Seq[String] = Seq("conv_id", "turn_idx"),
                 lsnCol: String = "lsn", saltBuckets: Int = 16): DataFrame = {
-    val valueCols = df.columns.filterNot(keyCols.contains).toSeq
-    val ordered = struct((lsnCol +: valueCols.filterNot(_ == lsnCol)).map(col): _*)
     val salt = pmod(xxhash64(col(lsnCol)), lit(saltBuckets)).as("_salt")
-    val phase1 = df.groupBy((keyCols.map(col) :+ salt): _*)
-      .agg(max(ordered).as("_w"), count(lit(1)).as("n_events"), min(col(lsnCol)).as("_lsn_min"))
-    phase1.groupBy(keyCols.map(col): _*)
+    val level1 = winners(df, keyCols.map(col) :+ salt, keyCols, lsnCol)
+    flatten(level1.groupBy(keyCols.map(col): _*)
       .agg(max(col("_w")).as("_w"), sum("n_events").as("n_events"),
-        min("_lsn_min").as("_lsn_min"))
-      .select(keyCols.map(col) ++ valueCols.map(c => col(s"_w.$c").as(c))
-        :+ col("n_events") :+ col("_lsn_min"): _*)
+        min("_lsn_min").as("_lsn_min")), df, keyCols)
   }
+
+  private def valueCols(df: DataFrame, keyCols: Seq[String]): Seq[String] =
+    df.columns.filterNot(keyCols.contains).toSeq
+
+  /** The LWW kernel: per `groupCols` group, `_w` = max(struct(lsn, other value
+    * columns)), `n_events` and `_lsn_min`. */
+  private def winners(df: DataFrame, groupCols: Seq[Column], keyCols: Seq[String],
+                      lsnCol: String): DataFrame = {
+    val ordered = struct((lsnCol +: valueCols(df, keyCols).filterNot(_ == lsnCol)).map(col): _*)
+    df.groupBy(groupCols: _*)
+      .agg(max(ordered).as("_w"), count(lit(1)).as("n_events"), min(col(lsnCol)).as("_lsn_min"))
+  }
+
+  /** Keys, `_w` flattened back to `df`'s value columns, `n_events`, `_lsn_min`. */
+  private def flatten(agg: DataFrame, df: DataFrame, keyCols: Seq[String]): DataFrame =
+    agg.select(keyCols.map(col) ++ valueCols(df, keyCols).map(c => col(s"_w.$c").as(c))
+      :+ col("n_events") :+ col("_lsn_min"): _*)
 }
 
 /** Hot-key detection for choosing the salted path.

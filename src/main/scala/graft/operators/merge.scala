@@ -121,6 +121,10 @@ object CdcMerge {
 
   /** How many epochs a skew sample stays fresh. */
   val skewSampleEvery: Int = 8
+  /** Salt width of the hot-key dedup. */
+  private val saltBuckets: Int = 16
+  /** Largest batch key set the cow merge broadcasts. */
+  private val broadcastKeyLimit: Long = 1000000L
   private val skewCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Double)]()
 
@@ -168,9 +172,7 @@ object CdcMerge {
       batch: DataFrame,
       epochId: Long,
       queryId: String,
-      broadcastKeyLimit: Long = 1000000L,
       saltThreshold: Double = 0.2,
-      saltBuckets: Int = 16,
       mode: String = "mor", // "mor" (append winners, resolve on read) | "cow"
       knownRoles: Option[Seq[String]] = None, // P6 concept-existence guard
       sideWrites: Seq[() => Unit] = Nil
@@ -209,43 +211,29 @@ object CdcMerge {
     val schemas = if (schemaChanged) snap.schemas + (schemaId.toString -> evolved.json)
                   else snap.schemas
 
-    // 4. LWW dedup — salted two-phase when a sampled hot key exceeds the threshold
-    //    (north rule: salt hot conv_ids before the key-partitioned shuffle).
-    //    The sample is re-taken only every `skewSampleEvery` epochs per (table,
-    //    query): skew drifts slowly, and a per-batch sampling job is pure serial
-    //    overhead in the stream's critical path.
+    // 4. LWW dedup — one max(struct(lsn, …)) aggregate per key; salted two-level
+    //    when a sampled hot key reaches the threshold (north rule: salt hot
+    //    conv_ids before the key-partitioned shuffle). The sample is re-taken
+    //    only every `skewSampleEvery` epochs per (table, query): skew drifts
+    //    slowly, and a per-batch sampling job is pure serial overhead in the
+    //    stream's critical path. A sample from a LATER epoch is stale (a table
+    //    recreated at the same path restarts its epochs), never reused.
     val skewKey = s"${table.dir}|$queryId"
-    // METRICS-FREE twin of `good`: an Observation resolves with the FIRST
-    // action over its plan, and any extra action (the skew sample) — or a
-    // DUPLICATED CollectMetrics node (the two-phase dedup's self-join) —
-    // would resolve rejectObs with wrong counts (bug class caught by the
-    // malformed-json-line StreamSpec case). Everything except the one
-    // aggregate branch that legitimately scans each row once must use the
-    // twin, never the observed plan.
+    // METRICS-FREE twin of `good` for the skew sample: an Observation
+    // resolves with the FIRST action over its plan, so sampling the observed
+    // plan would resolve rejectObs with the sample's counts.
     val goodNoObs = batch.filter(rejectReason(batch, knownRoles).isNull)
     val hotShare = Option(skewCache.get(skewKey)) match {
-      case Some((sampledAt, share)) if epochId - sampledAt < skewSampleEvery => share
+      case Some((sampledAt, share))
+          if epochId - sampledAt >= 0 && epochId - sampledAt < skewSampleEvery => share
       case _ =>
         val share = Skew.topKeyShare(goodNoObs, "conv_id")
         skewCache.put(skewKey, (epochId, share))
         share
     }
-    // Strategy (measured, BASELINE.md round 5): the two-phase fixed-width
-    // form beat max(struct(...)) by ~24% at the 10⁸-event grounding scale
-    // (both ABBA arms), so it is the DEFAULT. A hot batch still takes the
-    // salted struct path: two-phase's join-back funnels ALL of a hot key's
-    // payload rows through one reducer, exactly the case salting exists for.
-    // spark.graft.dedup.strategy=struct|twophase forces either.
-    val deduped = batch.sparkSession.conf.getOption("spark.graft.dedup.strategy") match {
-      case Some("twophase") =>
-        Dedup.lwwTwoPhase(good, Schemas.keyCols, "lsn", joinSide = Some(goodNoObs))
-      case Some("struct") =>
-        if (hotShare >= saltThreshold) Dedup.lwwSalted(good, Schemas.keyCols, "lsn", saltBuckets)
-        else Dedup.lww(good, Schemas.keyCols, "lsn")
-      case _ =>
-        if (hotShare >= saltThreshold) Dedup.lwwSalted(good, Schemas.keyCols, "lsn", saltBuckets)
-        else Dedup.lwwTwoPhase(good, Schemas.keyCols, "lsn", joinSide = Some(goodNoObs))
-    }
+    val deduped =
+      if (hotShare >= saltThreshold) Dedup.lwwSalted(good, Schemas.keyCols, "lsn", saltBuckets)
+      else Dedup.lww(good, Schemas.keyCols, "lsn")
     val changes = deduped
       .withColumn("_gbucket", LakeTable.bucketCol(col("conv_id"), snap.numBuckets))
       .persist(StorageLevel.MEMORY_AND_DISK)

@@ -136,22 +136,50 @@ class CdcMergeSpec extends SparkSpec {
     assert(r.applied)
     assert(t.snapshot.summary("graft.salted") === "true")
     assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(ev)).isEmpty)
-    // salted, unsalted, and two-phase dedup agree row-for-row (incl. the
+    // salted and unsalted dedup agree row-for-row (incl. the
     // duplicate-lsn redelivery tie-break: union the batch with itself)
     val evDup = ev.unionByName(ev.limit(500))
     val a = Dedup.lww(evDup).orderBy("conv_id", "turn_idx").collect().toSeq
     val b = Dedup.lwwSalted(evDup).orderBy("conv_id", "turn_idx").collect().toSeq
-    val c = Dedup.lwwTwoPhase(evDup).orderBy("conv_id", "turn_idx").collect().toSeq
     assert(a === b)
-    assert(a === c) // incl. n_events: both count every raw pre-tie row
+  }
 
-    // and end-to-end: a merge under the twophase strategy yields the same state
-    spark.conf.set("spark.graft.dedup.strategy", "twophase")
-    try {
-      val t2 = freshTable("hot2p")
-      assert(CdcMerge.applyBatch(t2, ev, 0L, "q").applied)
-      assert(Oracle.diff(CdcMerge.state(t2), Oracle.expectedState(ev)).isEmpty)
-    } finally spark.conf.unset("spark.graft.dedup.strategy")
+  test("skew cache: a table recreated at the same path does not inherit a later epoch's sample") {
+    val dir = tmpDir("skewreuse")
+    def create() = LakeTable.create(spark, dir, CdcMerge.physicalSchema(Schemas.transcript), 16)
+    val hot = ChangeGen.events(spark, 20000L, numConvs = 50, maxTurns = 10,
+      hotShare = 0.3, pDelete = 0.05)
+    val old = create()
+    assert(CdcMerge.applyBatch(old, hot, 5L, "q", saltThreshold = 0.2).applied)
+    assert(old.snapshot.summary("graft.salted") === "true")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+    // the new table's stream restarts at epoch 0, below the cached sample's 5
+    val t = create()
+    val uniform = ChangeGen.events(spark, 20000L, numConvs = 2000, maxTurns = 10,
+      pDelete = 0.05)
+    assert(CdcMerge.applyBatch(t, uniform, 0L, "q", saltThreshold = 0.2).applied)
+    assert(t.snapshot.summary("graft.salted") === "false")
+    assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(uniform)).isEmpty)
+  }
+
+  test("unsalted dedup is one aggregate: no executed plan of the merge joins") {
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val t = freshTable("onejoinless")
+    val ev = ChangeGen.events(spark, 5000L, numConvs = 200, maxTurns = 10, pDelete = 0.1)
+    // dirty rows, so the reject count the dedup scan observes is not zero
+    val bad = ev.limit(15).withColumn("op", lit("X")).withColumn("lsn", col("lsn") + 1000000L)
+    val (r, plans) = executedPlans(CdcMerge.applyBatch(t, ev.unionByName(bad), 0L, "q"))
+    assert(r.applied && t.snapshot.summary("graft.salted") === "false")
+    val executed = plans.flatMap(planNodes)
+    assert(executed.exists(_.isInstanceOf[InMemoryTableScanExec]), "the dedup plan was not seen")
+    val joins = executed.collect { case j: BaseJoinExec => j.nodeName }
+    assert(joins.isEmpty, s"joins in the merge's plans: $joins")
+    // the reject observation and the conflict count still resolve exactly
+    val keys = ev.select("conv_id", "turn_idx").distinct().count()
+    assert(r.rejects === 15L)
+    assert(r.keysTouched === keys && r.conflicts === 5000L - keys)
+    assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(ev)).isEmpty)
   }
 
   test("lineage: per-bucket LSN ranges, applied rows, deletes and conflicts are emitted") {

@@ -2,7 +2,12 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.GraftTestBridge
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,6 +17,35 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   def tmpDir(prefix: String): String =
     Files.createTempDirectory(s"graft-$prefix").toString
+
+  /** Runs `body`; returns its result and the executed plan of every query
+    * that succeeded meanwhile (the listener bus is drained on both sides). */
+  def executedPlans[T](body: => T): (T, Seq[SparkPlan]) = {
+    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan; () }
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    GraftTestBridge.drainListenerBus(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    val result = try {
+      val r = body
+      GraftTestBridge.drainListenerBus(spark.sparkContext)
+      r
+    } finally spark.listenerManager.unregister(listener)
+    (result, plans.synchronized(plans.toList))
+  }
+
+  /** Every executed node, through AQE stages and into cached plans: a
+    * persisted table's plan is shared by every scan of it, so one node
+    * instance = one computation, and its row metric counts each run. */
+  def planNodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case s: QueryStageExec => planNodes(s.plan)
+    case m: InMemoryTableScanExec => planNodes(m.relation.cachedPlan)
+    case other => other.children.flatMap(planNodes)
+  })
 }
 
 object SparkSpec {

@@ -512,42 +512,16 @@ class StreamSpec extends SparkSpec {
     import graft.operators.NeardupIndex
     import org.apache.spark.sql.catalyst.expressions.aggregate.{Final, Min}
     import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import spark.implicits._
     val docs = (0 until 60).map(i =>
       (s"d$i", s"shared words across docs plus token$i and tail ${i % 7}")).toDF("doc_id", "text")
     val cfg = NeardupIndex.Config(shingleN = 2)
     val dir = tmpDir("nd-once")
-    val plans = scala.collection.mutable.ArrayBuffer.empty[SparkPlan]
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      override def onSuccess(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit =
-        plans.synchronized { plans += qe.executedPlan; () }
-      override def onFailure(funcName: String,
-                             qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = ()
-    }
-    org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
-    spark.listenerManager.register(listener)
-    try {
-      NeardupIndex.append(dir, docs, cfg, epoch = Some(0L))
-      org.apache.spark.GraftTestBridge.drainListenerBus(spark.sparkContext)
-    } finally spark.listenerManager.unregister(listener)
-    // every executed node, through AQE stages and into cached plans: a
-    // persisted table's plan is shared by every scan of it, so one node
-    // instance = one computation, and its row metric counts each run
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case s: QueryStageExec => nodes(s.plan)
-      case m: InMemoryTableScanExec => nodes(m.relation.cachedPlan)
-      case other => other.children.flatMap(nodes)
-    })
+    val (_, plans) = executedPlans(NeardupIndex.append(dir, docs, cfg, epoch = Some(0L)))
     def distinctNodes(pred: BaseAggregateExec => Boolean): Seq[BaseAggregateExec] = {
       val seen = new java.util.IdentityHashMap[SparkPlan, Unit]()
-      plans.synchronized(plans.toList).flatMap(nodes).collect {
+      plans.flatMap(planNodes).collect {
         case a: BaseAggregateExec if pred(a) && !seen.containsKey(a) => seen.put(a, ()); a
       }
     }

@@ -192,18 +192,14 @@ object SimOps {
 
   /** [[contaminationCounts]] against a PRECOMPUTED gram-hash set (column `_h`),
     * keyed by arbitrary columns — the form the CDC stream uses: the benchmark
-    * hashes once at setup and each microbatch pays only its own shingling.
-    * `broadcastGrams=false` drops the broadcast hint for a benchmark too big
-    * for executor memory (a mega-suite of eval sets): the semi join then
-    * shuffles both sides on `_h` — still never a document-pair join. */
+    * hashes once at setup and each microbatch pays only its own shingling. */
   def contaminationAgainst(corpus: DataFrame, grams: DataFrame,
                            keyCols: Seq[String], textCol: String,
-                           n: Int = 3, broadcastGrams: Boolean = true): DataFrame = {
+                           n: Int = 3): DataFrame = {
     val keyed = corpus.select(struct(keyCols.map(col): _*).as("_key"), col(textCol))
-    val gramSide = grams.select(col("_h"))
     shingleRows(keyed, "_key", textCol, n)
       .select(col("_key"), xxhash64(col("_sh")).as("_h"))
-      .join(if (broadcastGrams) broadcast(gramSide) else gramSide, Seq("_h"), "left_semi")
+      .join(broadcast(grams.select(col("_h"))), Seq("_h"), "left_semi")
       .dropDuplicates("_key", "_h")
       .groupBy("_key").agg(count(lit(1)).as("overlap_ngrams"))
       .select(keyCols.map(k => col(s"_key.$k").as(k)) :+ col("overlap_ngrams"): _*)

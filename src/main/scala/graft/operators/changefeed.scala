@@ -14,15 +14,15 @@ import graft.sources.LakeTable
   * let an operator ask "what did load N change" — here that question is a
   * first-class relational operator over snapshot versions.
   *
-  * Scale shape: ONE shuffle total. Both versions' raw rows are tagged with a
-  * generation flag and aggregated together — the per-key winner at v1 and at
-  * v2 come out of a single hash aggregate (two conditional `max(struct)`s,
-  * map-side combinable), instead of the naive two-resolve + full-outer-join
-  * plan (two shuffles plus a join). Under merge-on-read the v1 files are a
-  * subset of v2's, so the union never reads a byte twice per version pair
-  * beyond the shared prefix being scanned once per generation tag; the
-  * aggregate state per key is two fixed-shape structs regardless of how many
-  * duplicate versions a hot key accumulated.
+  * Scale shape: ONE scan and ONE shuffle total. [[betweenVersions]] has one
+  * read path, [[graft.sources.LakeTable.readVersionsTagged]]: each file of the
+  * two manifests' union is read once, aligned to the to-version's schema
+  * (across schema evolution too) and tagged with its membership in either
+  * version. The per-key winner at v1 and at v2 then come out of a single hash
+  * aggregate (two conditional `max(struct)`s, map-side combinable), instead
+  * of the naive two-resolve + full-outer-join plan (two shuffles plus a
+  * join); the aggregate state per key is two fixed-shape structs regardless
+  * of how many duplicate versions a hot key accumulated.
   */
 object ChangeFeed {
 
@@ -39,6 +39,10 @@ object ChangeFeed {
     * not emitted; a higher LSN with a byte-identical payload IS emitted as an
     * update (the row version advanced — CDF reports row versions, not byte
     * diffs, matching the reference's UPDATE_DATE stamping on re-loads).
+    *
+    * No engine path runs this form: it is the two-read reference
+    * (`readAsOf(v1)` tagged 1 ∪ `readAsOf(v2)` tagged 2) that ChangeFeedSpec
+    * and LakeIoSpec check [[betweenVersions]] against.
     */
   private[graft] def diffTagged(tagged: DataFrame, keyCols: Seq[String],
                                 payloadCols: Seq[String]): DataFrame =
@@ -47,9 +51,10 @@ object ChangeFeed {
       .withColumn("_in2", col("_gen") === 2), keyCols, payloadCols)
 
   /** [[diffTagged]] over boolean `_in1` / `_in2` MEMBERSHIP columns instead of
-    * an exclusive generation tag — the shape the one-scan
-    * [[graft.sources.LakeTable.readVersionsTagged]] read produces, where a
-    * row from a file shared by both manifests belongs to BOTH generations. */
+    * an exclusive generation tag — the shape
+    * [[graft.sources.LakeTable.readVersionsTagged]] produces, where a row
+    * from a file shared by both manifests belongs to BOTH generations. This
+    * is the form [[betweenVersions]] runs. */
   private[graft] def diffMembership(tagged: DataFrame, keyCols: Seq[String],
                                     payloadCols: Seq[String]): DataFrame = {
     // _lsn leads the struct so max() picks the per-generation winner by LSN;
@@ -80,27 +85,13 @@ object ChangeFeed {
 
   /** Change feed between two committed snapshot versions of a lake table
     * (`fromVersion` exclusive of its own changes — the feed is "what happened
-    * AFTER v1 up to and including v2"). */
+    * AFTER v1 up to and including v2"), with `toVersion`'s payload columns. */
   def betweenVersions(table: LakeTable, fromVersion: Long, toVersion: Long): DataFrame = {
     require(fromVersion < toVersion,
       s"fromVersion must precede toVersion, got $fromVersion >= $toVersion")
-    // ONE scan of the two manifests' file-set union with per-file membership
-    // tags (round-6 optimization): the old two-readAsOf union scanned the
-    // merge-on-read shared file prefix twice. Falls back to that form only
-    // when a schema evolution lies between the versions (readVersionsTagged
-    // returns None), where each generation must align to its own schema.
-    table.readVersionsTagged(fromVersion, toVersion) match {
-      case Some(tagged) =>
-        val payload = table.snapshotAt(toVersion).schema.fieldNames.toSeq
-          .filterNot(c => CdcMerge.sysCols.contains(c) || Schemas.keyCols.contains(c))
-        diffMembership(tagged, Schemas.keyCols, payload)
-      case None =>
-        val payload = table.schema.fieldNames.toSeq
-          .filterNot(c => CdcMerge.sysCols.contains(c) || Schemas.keyCols.contains(c))
-        val tagged = table.readAsOf(fromVersion).withColumn("_gen", lit(1))
-          .unionByName(table.readAsOf(toVersion).withColumn("_gen", lit(2)), true)
-        diffTagged(tagged, Schemas.keyCols, payload)
-    }
+    val payload = table.snapshotAt(toVersion).schema.fieldNames.toSeq
+      .filterNot(c => CdcMerge.sysCols.contains(c) || Schemas.keyCols.contains(c))
+    diffMembership(table.readVersionsTagged(fromVersion, toVersion), Schemas.keyCols, payload)
   }
 
   /** SQUASH two consecutive feeds — `a` covering v0→v1 and `b` covering

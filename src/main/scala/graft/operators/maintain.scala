@@ -33,7 +33,7 @@ object Maintain {
     val s = table.snapshot
     val cur = CdcMerge.resolve(table.read())
     val hit = cur.filter(p && !col("_deleted"))
-      .select(LakeTable.bucketCol(col("conv_id"), s.numBuckets).as("b"))
+      .select(table.bucketOf(col("conv_id")).as("b"))
       .distinct().collect().map(_.getInt(0)).toSet
     if (hit.isEmpty) return 0L
     // resolve first (under merge-on-read a key may have stale versions in older
@@ -44,10 +44,7 @@ object Maintain {
     val before = CdcMerge.resolve(table.readBuckets(hit))
       .observe(beforeObs, live.as("live"))
     val kept = before.filter(col("_deleted") || !p).observe(keptObs, live.as("live"))
-    val newFiles = table.writeDataFiles(
-      kept.withColumn("_gbucket", LakeTable.bucketCol(col("conv_id"), s.numBuckets))
-        .repartition(col("_gbucket")),
-      s.version + 1, s.currentSchemaId)
+    val newFiles = table.writeDataFiles(kept, s.version + 1, s.currentSchemaId)
     // both observations resolved by the write job — no extra count() scans
     def liveOf(o: org.apache.spark.sql.Observation): Long =
       o.get.get("live").flatMap(Option(_)).map(_.asInstanceOf[Long]).getOrElse(0L)
@@ -65,17 +62,10 @@ object Maintain {
     * (reference dest/I2b2QueryResultsHandler.java:1116-1139); Iceberg analog:
     * rewrite_data_files.
     */
-  def compact(table: LakeTable, purgeTombstonesBelow: Long = Long.MinValue): Unit = {
-    val s = table.snapshot
-    val all = CdcMerge.resolve(table.read())
-      .filter(!(col("_deleted") && col("_lsn") < purgeTombstonesBelow))
-      .withColumn("_gbucket", LakeTable.bucketCol(col("conv_id"), s.numBuckets))
-      .repartition(col("_gbucket"))
-    val newFiles = table.writeDataFiles(all, s.version + 1, s.currentSchemaId)
-    table.commit(newFiles, s.schemas, s.currentSchemaId, s.applied,
+  def compact(table: LakeTable, purgeTombstonesBelow: Long = Long.MinValue): Unit =
+    rewrite(table, table.numBuckets, purgeTombstonesBelow,
       Map("graft.operation" -> "compact",
           "graft.purgeBelow" -> purgeTombstonesBelow.toString))
-  }
 
   /** Rebucket: rewrite the table under a NEW bucket count and commit it
     * atomically — the 100-TB growth migration (more buckets → one bucket's
@@ -86,19 +76,21 @@ object Maintain {
   def rebucket(table: LakeTable, newBuckets: Int,
                purgeTombstonesBelow: Long = Long.MinValue): Unit = {
     require(newBuckets > 0, s"newBuckets must be positive: $newBuckets")
+    rewrite(table, newBuckets, purgeTombstonesBelow,
+      Map("graft.operation" -> "rebucket", "graft.numBuckets" -> newBuckets.toString))
+  }
+
+  /** Rewrite the whole table LWW-resolved, one file per bucket under
+    * `numBuckets`, dropping tombstones below `purgeBelow`; the epoch ledger
+    * carries over. */
+  private def rewrite(table: LakeTable, numBuckets: Int, purgeBelow: Long,
+                      summary: Map[String, String]): Unit = {
     val s = table.snapshot
-    val parallelism = table.spark.conf.get("spark.sql.shuffle.partitions").toInt
     val all = CdcMerge.resolve(table.read())
-      .filter(!(col("_deleted") && col("_lsn") < purgeTombstonesBelow))
-      .withColumn("_gbucket", LakeTable.bucketCol(col("conv_id"), newBuckets))
-      // explicit partition count: an un-pinned repartition(col) gets
-      // AQE-coalesced to few fat partitions and the write serializes
-      .repartition(parallelism, col("_gbucket"))
-    val newFiles = table.writeDataFiles(all, s.version + 1, s.currentSchemaId)
-    table.commit(newFiles, s.schemas, s.currentSchemaId, s.applied,
-      Map("graft.operation" -> "rebucket",
-          "graft.numBuckets" -> newBuckets.toString),
-      newNumBuckets = Some(newBuckets))
+      .filter(!(col("_deleted") && col("_lsn") < purgeBelow))
+    val newFiles = table.writeDataFiles(all, s.version + 1, s.currentSchemaId, numBuckets)
+    table.commit(newFiles, s.schemas, s.currentSchemaId, s.applied, summary,
+      newNumBuckets = Some(numBuckets))
   }
 
   /** Garbage-collect data files referenced by NO snapshot (crash orphans) or only by

@@ -234,16 +234,14 @@ object CdcMerge {
     val deduped =
       if (hotShare >= saltThreshold) Dedup.lwwSalted(good, Schemas.keyCols, "lsn", saltBuckets)
       else Dedup.lww(good, Schemas.keyCols, "lsn")
-    val changes = deduped
-      .withColumn("_gbucket", LakeTable.bucketCol(col("conv_id"), snap.numBuckets))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val changes = deduped.persist(StorageLevel.MEMORY_AND_DISK)
 
     // side writes start once the plan is built: they overlap the dedup, stats
     // and data write below, and the finally waits for them whatever happens
     val side = new SideWrites(spark, sideWrites)
     try {
       // 5. Per-bucket lineage stats in ONE aggregation (also yields touched buckets).
-      val stats = changes.groupBy("_gbucket").agg(
+      val stats = changes.groupBy(table.bucketOf(col("conv_id")).as("bucket")).agg(
         min("_lsn_min").as("lsn_min"), max("lsn").as("lsn_max"),
         count(lit(1)).as("rows_applied"),
         sum(when(col("op") === "D", 1L).otherwise(0L)).as("deletes"),
@@ -299,23 +297,15 @@ object CdcMerge {
       //    resolved — unmatched old rows pass through an anti-join against the
       //    (usually broadcast) batch key set so the target side is never shuffled;
       //    matched rows re-enter the LWW aggregation with the batch winners.
+      //
+      //    Either way the rows go to LakeTable.writeDataFiles, which buckets
+      //    them and shuffles them to their writing tasks.
       val changePhysical = LakeTable.align(
         changes.withColumn("_lsn", col("lsn"))
           .withColumn("_deleted", col("op") === "D"),
         evolved)
-      // Pinned partition count for the pre-write shuffle: without it AQE coalesces
-      // this exchange to ~64MB partitions and the parquet write serializes onto
-      // 1-2 tasks — measured as flat N→4N scaling.
-      // = shuffle.partitions, NOT max(·, touched buckets): partitionBy splits each
-      // task's output per bucket anyway, so file count stays ~|touched| while task
-      // count tracks the cluster size (64 tasks on 2 cores is pure overhead).
-      val writeParallelism = spark.conf.get("spark.sql.shuffle.partitions").toInt
       val (merged, kept) = mode match {
-        case "mor" =>
-          val m = changePhysical
-            .withColumn("_gbucket", LakeTable.bucketCol(col("conv_id"), snap.numBuckets))
-            .repartition(writeParallelism, col("_gbucket"))
-          (m, snap.files)
+        case "mor" => (changePhysical, snap.files)
         case "cow" =>
           val old = LakeTable.align(table.readBuckets(touched), evolved)
           val keys = changes.select(Schemas.keyCols.map(col): _*)
@@ -325,10 +315,8 @@ object CdcMerge {
           val winners = Dedup.lww(matchedOld.unionByName(changePhysical),
               Schemas.keyCols, "_lsn")
             .drop("n_events", "_lsn_min")
-          val m = untouchedRows.unionByName(winners)
-            .withColumn("_gbucket", LakeTable.bucketCol(col("conv_id"), snap.numBuckets))
-            .repartition(writeParallelism, col("_gbucket"))
-          (m, snap.files.filterNot(f => touched.contains(f.bucket)))
+          (untouchedRows.unionByName(winners),
+            snap.files.filterNot(f => touched.contains(f.bucket)))
       }
 
       val newFiles = table.writeDataFiles(merged, snap.version + 1, schemaId)

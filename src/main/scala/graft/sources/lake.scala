@@ -221,6 +221,11 @@ private[sources] final class ManifestFileIndex(files: Seq[FileStatus]) extends F
   * query per table — matching the reference's one-load-at-a-time design
   * (reference dest/I2b2QueryResultsHandler.java:318-703).
   *
+  * The table owns its file layout: [[writeDataFiles]] is the one writer of
+  * data files (the merge, `deleteWhere`, `compact` and `rebucket` hand it
+  * rows, it buckets and partitions them), and callers name a row's bucket
+  * only through [[bucketOf]].
+  *
   * Scale notes: `bucket = pmod(xxhash64(conv_id), numBuckets)` gives file-level
   * pruning for the MERGE (only buckets present in a batch are read/rewritten);
   * at 100 TB raise `numBuckets` (e.g. 4096) so a bucket rewrite fits an executor.
@@ -243,6 +248,8 @@ final class LakeTable(val spark: SparkSession, val dir: String,
   def numBuckets: Int = snap.numBuckets
   def appliedEpoch(queryId: String): Long = snap.applied.getOrElse(queryId, -1L)
 
+  /** The bucket [[writeDataFiles]] files a `conv_id` under, at the current
+    * bucket count. */
   def bucketOf(c: Column): Column = bucketCol(c, snap.numBuckets)
 
   /** Read the current snapshot, aligned to the current schema. */
@@ -263,51 +270,31 @@ final class LakeTable(val spark: SparkSession, val dir: String,
     readFiles(s, s.files)
   }
 
-  /** One-scan CHANGE-FEED read (round-6 optimization, guide §1.2 "remove
-    * passes"): the UNION of two snapshots' file sets is read ONCE, each row
-    * tagged with boolean `_in1` / `_in2` membership columns derived from its
-    * file's presence in the respective manifest. Under merge-on-read v1's
-    * files are typically a shared prefix of v2's, which the old two-readAsOf
-    * union scanned TWICE. File names are unique table-wide
-    * (`data/e<version>_b<bucket>_<n>.parquet`), so membership keys on the
-    * basename via a broadcast (name, _in1, _in2) table — no extra shuffle.
-    * Returns None when a schema evolution lies between the versions
-    * (different current schema, or a schema id whose definition changed) —
-    * callers then fall back to the two-read union, which aligns each
-    * generation to its own snapshot schema. */
-  def readVersionsTagged(v1: Long, v2: Long): Option[DataFrame] = {
+  /** One-scan CHANGE-FEED read: every row of the two snapshots' file-set
+    * union, each file read ONCE and its rows tagged with boolean `_in1` /
+    * `_in2` membership columns — a row from a file both manifests list
+    * belongs to both generations (under merge-on-read v1's files are mostly a
+    * prefix of v2's, which a two-readAsOf union would scan twice). The union
+    * is three file groups — only in v1, in both, only in v2 — each read with
+    * the tags as literals and aligned to v2's current schema. Evolution only
+    * appends nullable columns and widens numbers (plans/evolve.scala), so a
+    * v1 row aligned to v2's schema carries the values it had at v1: the same
+    * frame as aligning each generation to its own schema, then unioning. */
+  def readVersionsTagged(v1: Long, v2: Long): DataFrame = {
     val s1 = snapshotAt(v1)
     val s2 = snapshotAt(v2)
-    val compatible = s1.currentSchemaId == s2.currentSchemaId &&
-      s1.schemas.forall { case (k, v) => s2.schemas.get(k).contains(v) }
-    if (!compatible) return None
-    val f1 = s1.files.map(_.path).toSet
-    val f2 = s2.files.map(_.path).toSet
-    val union = s1.files ++ s2.files.filterNot(f => f1.contains(f.path))
-    if (union.isEmpty) return Some(
-      align(spark.createDataFrame(List.empty[org.apache.spark.sql.Row].asJava,
-          s2.schema), s2.schema)
-        .withColumn("_in1", lit(false)).withColumn("_in2", lit(false)))
-    val statuses = fileStatuses(union, s"v$v1/v$v2")
-    def base(p: String) = p.split('/').last
-    val names = spark.createDataFrame(union.map(f =>
-      org.apache.spark.sql.Row(base(f.path), f1.contains(f.path), f2.contains(f.path))).asJava,
-      StructType(Seq(
-        org.apache.spark.sql.types.StructField("_gfile", org.apache.spark.sql.types.StringType, false),
-        org.apache.spark.sql.types.StructField("_in1", org.apache.spark.sql.types.BooleanType, false),
-        org.apache.spark.sql.types.StructField("_in2", org.apache.spark.sql.types.BooleanType, false))))
-    val cur = s2.schema
-    val tagged = union.groupBy(_.schemaId).map { case (sid, group) =>
-      val g = scan(s2.schemaFor(sid), group.map(f => statuses(f.path)))
-      val have = g.columns.toSet
-      // align to the current schema INLINE so the _metadata file column can
-      // ride along (the align() helper projects it away)
-      g.select(cur.fields.toSeq.map { fl =>
-        if (have.contains(fl.name)) col(fl.name).cast(fl.dataType).as(fl.name)
-        else lit(null).cast(fl.dataType).as(fl.name)
-      } :+ element_at(split(col("_metadata.file_path"), "/"), -1).as("_gfile"): _*)
-    }.reduce(_.unionByName(_))
-    Some(tagged.join(broadcast(names), "_gfile").drop("_gfile"))
+    s1.files.map(_.schemaId).distinct.foreach { id =>
+      require(s2.schemas.get(id.toString) == s1.schemas.get(id.toString),
+        s"v$v2 does not define schema $id as v$v1 does, which v$v1's files use")
+    }
+    val in1 = s1.files.map(_.path).toSet
+    val in2 = s2.files.map(_.path).toSet
+    Seq((s1.files.filterNot(f => in2(f.path)), true, false),
+        (s2.files.filter(f => in1(f.path)), true, true),
+        (s2.files.filterNot(f => in1(f.path)), false, true))
+      .map { case (files, a, b) =>
+        readFiles(s2, files).withColumn("_in1", lit(a)).withColumn("_in2", lit(b))
+      }.reduce(_.unionByName(_))
   }
 
   /** The committed snapshot metadata at `version` (strict: every segment
@@ -360,11 +347,26 @@ final class LakeTable(val spark: SparkSession, val dir: String,
       new StructType(), nullable(schema).asInstanceOf[StructType], None,
       new ParquetFileFormat, Map.empty)(spark))
 
-  /** Write `df` (which must contain a `_gbucket` int column) as new data files;
-    * returns the FileEntry list. Not yet committed. */
-  def writeDataFiles(df: DataFrame, version: Long, schemaId: Int): List[FileEntry] = {
+  /** Write `rows` as new data files under `numBuckets`; returns their
+    * FileEntry list. Not yet committed. The table owns the layout: every row
+    * goes to bucket [[LakeTable.bucketCol]] of its `conv_id` (a `_gbucket`
+    * column already in `rows` is replaced), and each bucket is written by
+    * exactly one task, so a call writes one file per bucket it holds rows
+    * for. */
+  def writeDataFiles(rows: DataFrame, version: Long, schemaId: Int,
+                     numBuckets: Int = snap.numBuckets): List[FileEntry] = {
     val tmp = s"$dir/_tmp_e$version"
-    df.write.mode("overwrite").partitionBy("_gbucket").parquet(tmp)
+    // Pinned partition count for the pre-write shuffle: without it AQE
+    // coalesces this exchange to ~64MB partitions and the parquet write
+    // serializes onto 1-2 tasks — measured as flat N→4N scaling.
+    // = shuffle.partitions, NOT max(·, buckets): partitionBy splits each
+    // task's output per bucket anyway, so file count stays one per bucket
+    // while task count tracks the cluster size (64 tasks on 2 cores is pure
+    // overhead).
+    val parallelism = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    rows.withColumn("_gbucket", bucketCol(col("conv_id"), numBuckets))
+      .repartition(parallelism, col("_gbucket"))
+      .write.mode("overwrite").partitionBy("_gbucket").parquet(tmp)
     io.mkdirs(s"$dir/data")
     val entries = scala.collection.mutable.ListBuffer[FileEntry]()
     io.listDir(tmp)

@@ -111,6 +111,66 @@ class ChangeFeedSpec extends SparkSpec {
       "control: the two-read union does scan the shared prefix twice")
   }
 
+  /** Over every pair of `versions`, betweenVersions equals diffTagged over the
+    * two time-travel reads, with the to-version's payload columns. */
+  private def assertFeedsMatchTwoReads(t: LakeTable, versions: Seq[Long]): Unit =
+    versions.combinations(2).foreach { case Seq(from, to) =>
+      val payload = t.snapshotAt(to).schema.fieldNames.toSeq
+        .filterNot(c => CdcMerge.sysCols.contains(c) || Schemas.keyCols.contains(c))
+      val expected = ChangeFeed.diffTagged(
+        t.readAsOf(from).withColumn("_gen", lit(1))
+          .unionByName(t.readAsOf(to).withColumn("_gen", lit(2)), true),
+        Schemas.keyCols, payload)
+      val feed = ChangeFeed.betweenVersions(t, from, to)
+      assert(feed.schema.map(f => (f.name, f.dataType)) ===
+        expected.schema.map(f => (f.name, f.dataType)), s"feed($from, $to) columns")
+      assert(expected.count() > 0, s"feed($from, $to) is empty: nothing is compared")
+      assert(feed.exceptAll(expected).isEmpty && expected.exceptAll(feed).isEmpty,
+        s"feed($from, $to) differs from the two-read union")
+    }
+
+  test("betweenVersions across column adds: each feed carries its to-version's columns") {
+    val t = LakeTable.create(spark, tmpDir("cfevo"),
+      CdcMerge.physicalSchema(Schemas.transcript), 8)
+    def epoch(e: Int, n: Long, convs: Int, pDelete: Double) =
+      ChangeGen.events(spark, n, numConvs = convs, maxTurns = 5, pDelete = pDelete,
+        seed = 30L + e, lsnStart = e * 10000L)
+    assert(CdcMerge.applyBatch(t, epoch(0, 800L, 20, 0.05), 0L, "q").applied)
+    val v1 = t.snapshot.version
+    assert(CdcMerge.applyBatch(t, epoch(1, 200L, 6, 0.2)
+      .withColumn("tool_version", concat(lit("v"), col("lsn") % 3)), 1L, "q").applied)
+    val v2 = t.snapshot.version
+    assert(CdcMerge.applyBatch(t, epoch(2, 200L, 6, 0.2)
+      .withColumn("tool_version", concat(lit("w"), col("lsn") % 3))
+      .withColumn("score", (col("lsn") % 7).cast("double")), 2L, "q").applied)
+    val v3 = t.snapshot.version
+    assert(t.snapshot.files.map(_.schemaId).distinct.size === 3)
+    assertFeedsMatchTwoReads(t, Seq(v1, v2, v3))
+    val cols12 = ChangeFeed.betweenVersions(t, v1, v2).columns.toSet
+    assert(cols12.contains("tool_version") && !cols12.contains("score"))
+    assert(ChangeFeed.betweenVersions(t, v1, v3)
+      .filter(col("score").isNotNull).limit(1).count() === 1L)
+  }
+
+  test("betweenVersions across an int→long widen and a later column add") {
+    val t = LakeTable.create(spark, tmpDir("cfwiden"),
+      CdcMerge.physicalSchema(Schemas.transcript), 8)
+    def epoch(e: Int, n: Long, convs: Int, pDelete: Double) =
+      ChangeGen.events(spark, n, numConvs = convs, maxTurns = 5, pDelete = pDelete,
+        seed = 40L + e, lsnStart = e * 10000L)
+    assert(CdcMerge.applyBatch(t, epoch(0, 800L, 15, 0.05), 0L, "q").applied)
+    val v1 = t.snapshot.version
+    assert(CdcMerge.applyBatch(t, epoch(1, 200L, 4, 0.2)
+      .withColumn("turn_idx", col("turn_idx").cast("long")), 1L, "q").applied)
+    val v2 = t.snapshot.version
+    assert(CdcMerge.applyBatch(t, epoch(2, 200L, 4, 0.2)
+      .withColumn("turn_idx", col("turn_idx").cast("long"))
+      .withColumn("tool_version", concat(lit("v"), col("lsn") % 3)), 2L, "q").applied)
+    val v3 = t.snapshot.version
+    assert(t.schema("turn_idx").dataType === org.apache.spark.sql.types.LongType)
+    assertFeedsMatchTwoReads(t, Seq(v1, v2, v3))
+  }
+
   test("squash(feed(v0,v1), feed(v1,v2)) equals feed(v0,v2): classification and LSNs exact, payloads exact except squashed-delete") {
     val t = LakeTable.create(spark, tmpDir("cfsq"),
       CdcMerge.physicalSchema(Schemas.transcript), 8)

@@ -14,6 +14,63 @@ class MaintainSpec extends SparkSpec {
     (t, ev)
   }
 
+  /** Every file in `files` holds only rows of its own bucket under `numBuckets`. */
+  private def assertBucketed(t: LakeTable, files: Seq[graft.sources.FileEntry],
+                             numBuckets: Int): Unit = {
+    assert(files.nonEmpty)
+    files.groupBy(_.schemaId).foreach { case (sid, group) =>
+      val bucketByName = group.map(f => f.path.split('/').last -> f.bucket).toMap
+      spark.read.schema(t.snapshot.schemaFor(sid))
+        .parquet(group.map(f => s"${t.dir}/${f.path}"): _*)
+        .select(element_at(split(col("_metadata.file_path"), "/"), -1),
+          LakeTable.bucketCol(col("conv_id"), numBuckets))
+        .distinct().collect().foreach { r =>
+          assert(bucketByName(r.getString(0)) === r.getInt(1),
+            s"${r.getString(0)} holds rows of bucket ${r.getInt(1)}")
+        }
+    }
+  }
+
+  test("file layout: merge (mor, cow), deleteWhere, compact and rebucket file rows by bucket") {
+    val t = LakeTable.create(spark, tmpDir("layout"),
+      CdcMerge.physicalSchema(Schemas.transcript), 8)
+    // each write files one bucket per file: the files of one version carry
+    // distinct buckets
+    def check(): Unit = {
+      val s = t.snapshot
+      assertBucketed(t, s.files, s.numBuckets)
+      val written = s.files.filter(_.path.startsWith(s"data/e${s.version}_"))
+      assert(written.nonEmpty && written.map(_.bucket).distinct.size === written.size)
+    }
+    val e0 = ChangeGen.events(spark, 2000L, numConvs = 30, maxTurns = 6, pDelete = 0.1)
+    assert(CdcMerge.applyBatch(t, e0, 0L, "q").applied)
+    check()
+    val e1 = ChangeGen.events(spark, 300L, numConvs = 30, maxTurns = 6, pDelete = 0.1,
+      seed = 5L, lsnStart = 5000L)
+    assert(CdcMerge.applyBatch(t, e1, 1L, "q", mode = "cow").applied)
+    check()
+    val victim = CdcMerge.state(t).select("conv_id").head().getString(0)
+    assert(Maintain.deleteWhere(t, col("conv_id") === victim) > 0L)
+    check()
+    Maintain.compact(t)
+    check()
+    assert(t.snapshot.files.map(_.bucket).distinct.size === t.snapshot.files.size)
+    Maintain.rebucket(t, newBuckets = 16)
+    check()
+    assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(e0.unionByName(e1))
+      .filter(col("conv_id") =!= victim)).isEmpty)
+  }
+
+  test("writeDataFiles buckets a frame that carries no bucket column") {
+    val (t, _) = loaded("layout-raw")
+    val rows = CdcMerge.state(t).withColumn("_lsn", lit(0L)).withColumn("_deleted", lit(false))
+    assert(!rows.columns.contains("_gbucket"))
+    val files = t.writeDataFiles(rows, version = 999L, schemaId = t.snapshot.currentSchemaId)
+    assertBucketed(t, files, t.numBuckets)
+    assert(files.map(_.bucket).distinct.size === files.size)
+    assert(files.map(_.rows).sum === rows.count())
+  }
+
   test("rebucket: state survives, new bucket layout prunes, streaming ledger carries over") {
     val (t, ev) = loaded("rebucket")
     val before = CdcMerge.state(t).orderBy("conv_id", "turn_idx").collect().toSeq

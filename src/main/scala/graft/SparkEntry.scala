@@ -760,9 +760,9 @@ object SparkEntry {
       // corpus via the persisted-index join shape (batch bands ⋈ index bands,
       // index side bucket-capped) — never re-pairing the corpus against itself
       val docs = t(s, d, "documents")
-      SimOps.incrementalNeardupPairs(
-          batch = docs.filter(col("doc_id") % 10 === 0),
-          indexDocs = docs.filter(col("doc_id") % 10 =!= 0),
+      val index = SimOps.neardupIndexTables(docs.filter(col("doc_id") % 10 =!= 0),
+        "doc_id", "text", shingleN = 2, k = 32, bands = 8, rowsPerBand = 4)
+      SimOps.incrementalPairsAgainst(index, docs.filter(col("doc_id") % 10 === 0),
           "doc_id", "text", shingleN = 2, k = 32, bands = 8, rowsPerBand = 4,
           maxBucket = 200)
         .select(col("new_id"), col("old_id"), round(col("jaccard"), 4).as("jac"))
@@ -1564,8 +1564,8 @@ object SparkEntry {
 
   /** CTEs: documents → distinct word-n-gram shingle arrays (`sharr`), exploded
     * hashes, 32-element minhash `sig`, and (band, bucket) rows mirroring
-    * SimOps.{wordShingles, minhashSignatures, bandBuckets} with k=32, 8 bands
-    * of 4 rows. */
+    * SimOps.{wordShingles, minhashSignaturesFromRows, bandBuckets} with k=32,
+    * 8 bands of 4 rows. */
   private def lshCtesSql(shingleN: Int, k: Int = 32, bands: Int = 8,
                          rowsPerBand: Int = 4, suffix: String = "",
                          where: String = ""): String = {
@@ -1651,13 +1651,13 @@ object SparkEntry {
         SELECT left_id, right_id, hamming FROM pairs WHERE hamming <= $maxHamming"""
   }
 
-  /** Shared ANN CTEs mirroring SimOps.hyperplaneSignatures + the Hamming≤1
+  /** Shared ANN CTEs mirroring SimOps.hyperplaneBucket + the Hamming≤1
     * probe expansion: integer-math plane dots (order-independent sign),
     * sequential-fold cosine (list_reduce's left-to-right order =
     * Spark aggregate()'s). Exposes CTEs ex/coefs/dots/sig/idx/probes and the
     * `cosExpr` for a probes-p × idx-i join. */
   private val annPlanes = 8
-  // index-side bucket cap, part of the operator contract (SimOps.capIndexBuckets)
+  // index-side bucket cap, part of the operator contract (SimOps.annTopK)
   private val annMaxBucket = 200
   private def annCosExprSql: String = {
     def fold(items: String) =

@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Engine-portable hashing. Every similarity signature in this engine derives
@@ -152,11 +153,14 @@ object SimOps {
 
   /** Jaccard similarity of two distinct-element arrays
     * (|∩| / (|A|+|B|−|∩|), the form the DuckDB oracle mirrors exactly). */
-  def jaccard(a: Column, b: Column): Column = {
-    val common = size(array_intersect(a, b))
-    common.cast("double") /
-      greatest(size(a) + size(b) - common, lit(1)).cast("double")
-  }
+  def jaccard(a: Column, b: Column): Column =
+    jaccardRatio(size(array_intersect(a, b)), size(a), size(b))
+
+  /** The one Jaccard ratio: |A∩B| / (|A|+|B|−|A∩B|) from the intersection and
+    * the two set sizes, the denominator floored at 1 (two empty sets score 0).
+    * [[jaccard]] and both relational verifies share it. */
+  private def jaccardRatio(common: Column, szA: Column, szB: Column): Column =
+    common.cast("double") / greatest(szA + szB - common, lit(1)).cast("double")
 
   /** Benchmark decontamination: for each corpus document, how many DISTINCT
     * word n-grams it shares with ANY benchmark/eval document — the overlap
@@ -215,17 +219,12 @@ object SimOps {
 
   // ── MinHash + LSH ──────────────────────────────────────────────────────────
 
-  /** MinHash signatures, relational form: one row per `idCol` with a k-element
-    * `sig` array. Universal-hash family (a_i·h + b_i mod 2^31−1) over a single
-    * portable md5 hash per shingle; k min-aggregates are fully codegen'd with
-    * map-side partial aggregation — shuffle volume is one row per (doc, task). */
-  def minhashSignatures(docs: DataFrame, idCol: String, shinglesCol: String,
-                        k: Int = 32): DataFrame =
-    minhashSignaturesFromRows(
-      docs.select(col(idCol), explode(col(shinglesCol)).as("_sh")), idCol, k)
-
-  /** MinHash signatures from (id, _sh) shingle ROWS (see [[shingleRows]]);
-    * duplicate shingles are harmless (min is idempotent). */
+  /** MinHash signatures from (id, _sh) shingle ROWS (see [[shingleRows]]):
+    * one row per `idCol` with a k-element `sig` array. Universal-hash family
+    * (a_i·h + b_i mod 2^31−1) over a single portable md5 hash per shingle; k
+    * min-aggregates are fully codegen'd with map-side partial aggregation —
+    * shuffle volume is one row per (doc, task). Duplicate shingles are
+    * harmless (min is idempotent). */
   def minhashSignaturesFromRows(rows: DataFrame, idCol: String,
                                 k: Int = 32): DataFrame = {
     val hashed = rows.withColumn("_h0", pmod(md5Long(col("_sh")), lit(M31)))
@@ -235,84 +234,81 @@ object SimOps {
       .select(col(idCol), array((0 until k).map(i => col(s"_m$i")): _*).as("sig"))
   }
 
-  /** LSH band keys for a MinHash signature: `bands` portable hashes of
-    * `rowsPerBand`-sized signature slices ("b,m1,m2,..."). Two documents
-    * sharing any band key are near-dup candidates. */
-  def lshBands(sig: Column, bands: Int, rowsPerBand: Int): Column =
-    transform(sequence(lit(0), lit(bands - 1)),
-      b => md5Long(concat(b.cast("string"), lit(","),
-        concat_ws(",", slice(sig, b * rowsPerBand + 1, lit(rowsPerBand))))))
-
-  /** One (id, band, bucket) row per band per document. */
+  /** One (id, band, bucket) row per band per document: `bands` portable hashes
+    * of `rowsPerBand`-sized signature slices ("b,m1,m2,..."). Two documents
+    * sharing any (band, bucket) are near-dup candidates. */
   def bandBuckets(sigs: DataFrame, idCol: String,
                   bands: Int = 8, rowsPerBand: Int = 4): DataFrame =
-    sigs.select(col(idCol), posexplode(lshBands(col("sig"), bands, rowsPerBand)))
+    sigs.select(col(idCol), posexplode(transform(sequence(lit(0), lit(bands - 1)),
+        b => md5Long(concat(b.cast("string"), lit(","),
+          concat_ws(",", slice(col("sig"), b * rowsPerBand + 1, lit(rowsPerBand))))))))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bucket"))
 
-  /** Distinct candidate pairs (left_id < right_id) from LSH band buckets.
-    *
-    * Scale shape: a per-bucket equi-self-join — pairs are generated bucket-by-
-    * bucket on the reducers, never via a global cross join, and never via a
-    * `collect_set` of ids into one array (a single hot bucket would OOM one
-    * reducer). Buckets larger than `maxBucket` are dropped entirely: a
-    * degenerate bucket (e.g. near-empty documents sharing trivial shingles)
-    * contributes O(n²) useless pairs; real near-dup sets are small. The cap is
-    * part of the operator's CONTRACT (the oracle applies the same cap). */
-  def candidatePairs(bandsDf: DataFrame, idCol: String,
-                     maxBucket: Int = 200): DataFrame =
-    rawCandidatePairs(bandsDf, idCol, maxBucket).distinct()
+  // ── the near-dup skeleton: block → purge → compare → (verify) → cluster ─────
 
-  /** Candidate pairs WITH band-collision duplicates (a pair sharing b band
-    * buckets appears b times). NOT safe to feed into
-    * [[verifiedPairsFromRows]], which requires DISTINCT pairs (duplicates
-    * inflate the intersection count via join fan-out → jaccard > 1);
-    * [[candidatePairs]] is the deduplicated form every verify path uses. A
-    * fused variant that skipped the distinct was measured SLOWER and rejected
-    * — see the verifiedPairsFromRows scaladoc for the numbers. */
-  def rawCandidatePairs(bandsDf: DataFrame, idCol: String,
-                        maxBucket: Int = 200): DataFrame = {
-    // Bucket sizing as a WINDOW count over (band, bucket) instead of the old
-    // aggregate + join-back (round-6 optimization, guide §2.4 "two operations
-    // keyed the same way share one exchange"): the window's (band, bucket)
-    // exchange is the SAME one the pair self-join needs, so both join sides
-    // are ReusedExchange reads of one shuffle — the shingle→minhash→band
-    // pipeline below it runs ONCE with no materialization job, and the
-    // separate `sizes` aggregate shuffle is gone. Post-shuffle the self-join
-    // is a sort-merge on already-partitioned, already-sorted input: zero
-    // additional exchanges before the pair distinct.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("band", "bucket")
-    val bounded = bandsDf.withColumn("_n", count(lit(1)).over(w))
+  /** Block purging: drops every block (the rows sharing all of `keys`) that
+    * holds more than `maxBucket` rows. A degenerate block (near-empty documents
+    * sharing trivial shingles, all-zero vectors) contributes O(n²) useless
+    * pairs; real near-dup sets are small. The cap is part of each operator's
+    * CONTRACT (the oracle applies the same cap).
+    *
+    * The block size is a WINDOW count, not an aggregate + join-back (round-6,
+    * guide §2.4 "two operations keyed the same way share one exchange"): the
+    * window's exchange on `keys` is the one the equi-join on `keys` that
+    * follows needs, so the cap costs no shuffle of its own. */
+  private def capBuckets(blocks: DataFrame, keys: Seq[String],
+                         maxBucket: Int): DataFrame =
+    blocks.withColumn("_n", count(lit(1)).over(Window.partitionBy(keys.map(col): _*)))
       .filter(col("_n") <= maxBucket).drop("_n")
-    bounded.as("a").join(bounded.as("b"),
-        col("a.band") === col("b.band") && col("a.bucket") === col("b.bucket") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
+
+  /** Every pair of rows sharing all of `keys`, the smaller id on side `a`:
+    * a per-block equi-self-join, so pairs are generated block by block on the
+    * reducers, never via a global cross join, and never via a `collect_set` of
+    * ids into one array (a single hot block would OOM one reducer). A pair
+    * sharing several blocks appears once per shared block; callers select
+    * from `a.*` / `b.*` and take the distinct. */
+  private def blockSelfJoin(blocks: DataFrame, idCol: String,
+                            keys: Seq[String]): DataFrame =
+    blocks.as("a").join(blocks.as("b"),
+      keys.map(k => col(s"a.$k") === col(s"b.$k")).reduce(_ && _) &&
+        col(s"a.$idCol") < col(s"b.$idCol"))
+
+  /** Distinct candidate pairs (left_id < right_id) from LSH band buckets, with
+    * buckets larger than `maxBucket` purged ([[capBuckets]]).
+    *
+    * Plan shape: the cap's (band, bucket) window exchange is the one the pair
+    * self-join needs, so both join sides are reads of one shuffle — the
+    * shingle→minhash→band pipeline below it runs ONCE with no materialization
+    * job. Post-shuffle the self-join is a sort-merge on already-partitioned,
+    * already-sorted input: zero additional exchanges before the pair
+    * distinct. Verify paths need the distinct: a duplicate pair inflates the
+    * intersection count through join fan-out (jaccard > 1). */
+  def candidatePairs(bandsDf: DataFrame, idCol: String,
+                     maxBucket: Int = 200): DataFrame = {
+    val keys = Seq("band", "bucket")
+    blockSelfJoin(capBuckets(bandsDf, keys, maxBucket), idCol, keys)
       .select(col(s"a.$idCol").as("left_id"), col(s"b.$idCol").as("right_id"))
+      .distinct()
   }
 
-  /** Verify candidate pairs with exact Jaccard, relationally: per-doc DISTINCT
-    * shingle rows self-joined through the pair list count intersections
-    * (codegen'd hash join keyed by the shingle's 64-bit hash — a shuffle-size
-    * optimization only; jaccard VALUES are hash-independent), then
-    * |A∪B| = |A|+|B|−|A∩B|. Pairs sharing zero shingles produce no row —
-    * equivalent under any `jaccard >= θ` downstream filter.
+  /** Verify candidate pairs with exact Jaccard, relationally: the per-doc
+    * DISTINCT shingle-hash table `shingles` (id, _s) — the one
+    * [[neardupIndexTables]] builds and the persisted index stores — is joined
+    * to both sides of each pair to count intersections (codegen'd hash join
+    * keyed by the shingle's 64-bit hash — a shuffle-size optimization only;
+    * jaccard VALUES are hash-independent), then |A∪B| = |A|+|B|−|A∩B|. Pairs
+    * sharing zero shingles produce no row — equivalent under any `jaccard >= θ`
+    * downstream filter.
     *
     * `pairs` must be DISTINCT (left_id, right_id) rows. A fused variant that
-    * feeds rawCandidatePairs' duplicates into a count(distinct shingle) here —
+    * fed un-deduplicated candidates into a count(distinct shingle) here —
     * saving the distinct shuffle — was MEASURED SLOWER at sf0.1 (8.4s vs 7.3s
     * single-shot: the (l,r,s)-keyed partial aggregate and the dup-inflated
     * join fan-out cost more than the pair-keyed distinct they replaced, whose
     * map-side partial aggregation already shrinks the shuffle), so the
     * straightforward shape stays. */
-  def verifiedPairsFromRows(rows: DataFrame, pairs: DataFrame,
-                            idCol: String): DataFrame = {
-    // hash BEFORE the distinct, dedup on (id, hash): the dedup shuffle then
-    // carries an 8-byte long per shingle instead of the shingle string
-    // (round-6, guide §2.3 "shuffle keys and metadata instead of payloads");
-    // equal shingles ⟺ equal hashes, so the distinct set — and with it every
-    // count — is unchanged barring the same ~n²/2^64 collision odds the join
-    // below already accepts
-    val dist = rows.select(col(idCol), xxhash64(col("_sh")).as("_s"))
-      .dropDuplicates(idCol, "_s")
+  def verifiedPairs(shingles: DataFrame, pairs: DataFrame,
+                    idCol: String): DataFrame = {
     // per-doc distinct-shingle size as a WINDOW count over the idCol
     // partition, carried THROUGH the pair join as extra grouping keys
     // (functionally dependent on left_id/right_id, so grouping is unchanged)
@@ -323,10 +319,9 @@ object SimOps {
     // be reused by the left pair join, but only in the at-scale sort-merge
     // shape; at bench scale the planner broadcasts the pair joins, so no
     // exchange is shared and the window pays its own exchange + sort (the
-    // same limit as the rejected merge-hint entry for rawCandidatePairs in
-    // OPTIMIZATION_r06.md)
-    val wSz = org.apache.spark.sql.expressions.Window.partitionBy(idCol)
-    val sized = dist.withColumn("_sz", count(lit(1)).over(wSz))
+    // same limit as the rejected merge-hint entry for the candidate self-join
+    // in OPTIMIZATION_r06.md)
+    val sized = shingles.withColumn("_sz", count(lit(1)).over(Window.partitionBy(idCol)))
     val l = sized.select(col(idCol).as("left_id"), col("_s"), col("_sz").as("_sza"))
     val r = sized.select(col(idCol).as("_rid"), col("_s").as("_s2"),
       col("_sz").as("_szb"))
@@ -335,25 +330,20 @@ object SimOps {
       .groupBy("left_id", "right_id", "_sza", "_szb")
       .agg(count(lit(1)).as("_common"))
       .select(col("left_id"), col("right_id"),
-        (col("_common").cast("double") /
-          greatest(col("_sza") + col("_szb") - col("_common"), lit(1)).cast("double"))
-          .as("jaccard"))
+        jaccardRatio(col("_common"), col("_sza"), col("_szb")).as("jaccard"))
   }
 
-  /** The end-to-end near-dup dedup pipeline: shingle → minhash → LSH bands →
-    * candidate pairs → exact-jaccard verify. Returns (left_id, right_id,
-    * jaccard) for every candidate pair with ≥1 shared shingle. Compose with a
-    * `jaccard >= θ` filter + keep-min-id anti-join for the survivor set. */
+  /** The end-to-end near-dup dedup pipeline: the index tables (shingle →
+    * minhash → LSH bands, and distinct shingle hashes) → candidate pairs →
+    * exact-jaccard verify. Returns (left_id, right_id, jaccard) for every
+    * candidate pair with ≥1 shared shingle. Compose with a `jaccard >= θ`
+    * filter + keep-min-id anti-join for the survivor set, or with
+    * [[connectedComponents]] for one survivor per cluster. */
   def neardupPairs(docs: DataFrame, idCol: String, textCol: String,
                    shingleN: Int = 3, k: Int = 32, bands: Int = 8,
                    rowsPerBand: Int = 4, maxBucket: Int = 200): DataFrame = {
-    // shingle rows feed both the signature branch and the verify branch —
-    // materialize once (trading cache/disk for not re-tokenizing the corpus)
-    val rows = materialize(shingleRows(docs, idCol, textCol, shingleN))
-    val sigs = minhashSignaturesFromRows(rows, idCol, k)
-    val pairs = candidatePairs(bandBuckets(sigs, idCol, bands, rowsPerBand),
-      idCol, maxBucket)
-    verifiedPairsFromRows(rows, pairs, idCol)
+    val idx = neardupIndexTables(docs, idCol, textCol, shingleN, k, bands, rowsPerBand)
+    verifiedPairs(idx.shingles, candidatePairs(idx.bands, idCol, maxBucket), idCol)
   }
 
   /** TRANSITIVE near-dup grouping: connected components over an undirected
@@ -377,7 +367,8 @@ object SimOps {
     * materializing components as arrays on one reducer. If maxIter rounds do
     * not converge (an adversarial long-chain graph), the operator ESCALATES
     * to [[connectedComponentsStar]] — the diameter-independent O(log n)-round
-    * algorithm — instead of returning partially-propagated labels; the fast
+    * algorithm — seeded with the edges plus one (node, label) edge per
+    * relabelled node, instead of returning partially-propagated labels; the fast
     * dense-family path stays the default because its per-round cost is lower
     * (one join vs two plus an edge-set diff). */
   def connectedComponents(pairs: DataFrame, leftCol: String, rightCol: String,
@@ -435,11 +426,16 @@ object SimOps {
     if (changed == 0)
       labels.select(col("_id").as(idCol), col("_lbl").as("group_id"))
     else {
-      // diameter exceeded the propagation bound (a long-chain graph): switch
-      // to the O(log n)-round algorithm instead of failing
+      // diameter exceeded the propagation bound (a long-chain graph): finish
+      // with the O(log n)-round algorithm, seeded with the rounds already run.
+      // Each relabelled node gains an edge to its label — a node of its own
+      // component — so the components and their minima are unchanged, while
+      // every node starts within one hop of a node maxIter hops away
       System.err.println(s"[graft] connectedComponents: min-label propagation " +
         s"did not converge in $maxIter rounds, switching to large-star/small-star")
-      connectedComponentsStar(pairs, leftCol, rightCol, idCol)
+      val labelEdges = labels.filter(col("_lbl") =!= col("_id"))
+        .select(col("_id").as("_a"), col("_lbl").as("_b"))
+      connectedComponentsStar(edges.unionByName(labelEdges), "_a", "_b", idCol)
     }
   }
 
@@ -551,15 +547,19 @@ object SimOps {
         bands.groupBy("band", "bucket").agg(count(lit(1)).as("_n")))
   }
 
-  /** Derive the index tables for a document set (one shingle pass). */
+  /** Derive the index tables for a document set (one shingle pass, shared by
+    * the band branch and the shingle-hash branch). */
   def neardupIndexTables(docs: DataFrame, idCol: String, textCol: String,
                          shingleN: Int = 3, k: Int = 32, bands: Int = 8,
                          rowsPerBand: Int = 4): NeardupIndexTables = {
     val rows = materialize(shingleRows(docs, idCol, textCol, shingleN))
     val bb = bandBuckets(minhashSignaturesFromRows(rows, idCol, k),
       idCol, bands, rowsPerBand).withColumn("_p", bandPartCol)
-    // hash before the distinct — same values, 8-byte dedup shuffle rows
-    // (see verifiedPairsFromRows)
+    // hash BEFORE the distinct, dedup on (id, hash): the dedup shuffle then
+    // carries an 8-byte long per shingle instead of the shingle string
+    // (round-6, guide §2.3 "shuffle keys and metadata instead of payloads");
+    // equal shingles ⟺ equal hashes, so the distinct set — and with it every
+    // jaccard count — is unchanged barring ~n²/2^64 collision odds
     val dist = rows.select(col(idCol), xxhash64(col("_sh")).as("_s"))
       .dropDuplicates(idCol, "_s")
     NeardupIndexTables.derive(bb, dist, idCol)
@@ -630,22 +630,8 @@ object SimOps {
       .join(b.sizes.select(col(idCol).as("new_id"), col("_sz").as("_sza")), "new_id")
       .join(candSizes, "old_id")
       .select(col("new_id"), col("old_id"),
-        (col("_common").cast("double") /
-          greatest(col("_sza") + col("_szb") - col("_common"), lit(1)).cast("double"))
-          .as("jaccard"))
+        jaccardRatio(col("_common"), col("_sza"), col("_szb")).as("jaccard"))
   }
-
-  /** Convenience form deriving the index tables from the index DOCUMENTS
-    * in-flight (the lake-persisted path loads them instead — see
-    * operators.NeardupIndex). */
-  def incrementalNeardupPairs(batch: DataFrame, indexDocs: DataFrame,
-                              idCol: String, textCol: String,
-                              shingleN: Int = 3, k: Int = 32, bands: Int = 8,
-                              rowsPerBand: Int = 4,
-                              maxBucket: Int = 200): DataFrame =
-    incrementalPairsAgainst(
-      neardupIndexTables(indexDocs, idCol, textCol, shingleN, k, bands, rowsPerBand),
-      batch, idCol, textCol, shingleN, k, bands, rowsPerBand, maxBucket)
 
   // ── SimHash ────────────────────────────────────────────────────────────────
 
@@ -682,9 +668,9 @@ object SimOps {
       posexplode(array((0 until 4).map(b =>
         shiftright(col("simhash"), 16 * b).bitwiseAND(0xFFFFL)): _*)))
       .withColumnsRenamed(Map("pos" -> "band", "col" -> "bv"))
-    bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.bv") === col("b.bv") &&
-          col(s"a.$idCol") < col(s"b.$idCol"))
+    // the band rows carry the fingerprint, so the pair is verified straight
+    // off the self-join's output
+    blockSelfJoin(bands, idCol, Seq("band", "bv"))
       .select(col(s"a.$idCol").as("left_id"), col(s"b.$idCol").as("right_id"),
         hamming64(col("a.simhash"), col("b.simhash")).cast("long").as("hamming"))
       .distinct() // a close pair can collide in several bands
@@ -693,10 +679,10 @@ object SimOps {
 
   // ── hyperplane-LSH ANN ─────────────────────────────────────────────────────
 
-  /** Pure-Scala twin of [[PortableHash.md5Long]] for DRIVER-side constant
-    * derivation (the plane coefficient table): first 15 hex chars of md5,
-    * parsed base-16 — bit-identical to the Column form (FunctionsSpec sweeps
-    * both). 60-bit, non-negative. */
+  /** Pure-Scala twin of [[PortableHash.md5Long]] for constant derivation
+    * (the plane coefficient table): first 15 hex chars of md5, parsed
+    * base-16 — bit-identical to the Column form (FunctionsSpec sweeps both).
+    * 60-bit, non-negative. */
   private[graft] def md5LongScala(s: String): Long = {
     val md = java.security.MessageDigest.getInstance("MD5")
     val hex = md.digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -706,57 +692,29 @@ object SimOps {
 
   /** Plane coefficient in [-1000, 1000): the SAME md5("p,d") % 2000 − 1000
     * derivation the relational form used (md5Long is non-negative, so Scala
-    * `%` and Spark `%` agree), now a driver-side constant. */
+    * `%` and Spark `%` agree), computed by the [[HyperplaneBucket]] kernel. */
   private[graft] def planeCoef(p: Int, d: Int): Long =
     md5LongScala(s"$p,$d") % 2000L - 1000L
 
-
   /** MAP-SIDE hyperplane bucket expression over a float-vector column: the
-    * codegen'd [[HyperplaneBucket]] kernel over the driver-computed
-    * [[planeCoef]] table — for each plane p, the exact integer dot of
-    * floor(1000·x_i) against the plane's coefficients, bit p = sign(dot_p).
-    * Dimensions past a vector's length (and null elements) contribute 0 —
-    * exactly the relational form's inner coef join over only-existing
-    * elements. Integer math keeps the bucket reproducible under any
-    * partitioning and in the oracle engine. Round-6 optimization (guide §2.4
-    * "remove shuffles outright"): signature derivation was an explode shuffle
-    * + aggregate + join-back PER CALL; as a projection it costs zero
-    * exchanges and fuses into whatever scan needs it. */
-  def hyperplaneBucket(vecCol: Column, planes: Int, d: Int): Column =
-    HyperplaneBucket.bucket(vecCol, planes, math.max(d, 1),
-      Array.tabulate(planes * math.max(d, 1))(idx =>
-        planeCoef(idx / math.max(d, 1), idx % math.max(d, 1))))
-
-  /** Longest vector length (one cheap max(size) aggregate — column-pruned
-    * scan, no shuffle beyond the 1-row final). */
-  private def dimOf(vecs: DataFrame, vecCol: String): Int =
-    vecs.agg(max(size(col(vecCol)))).head() match {
-      case r if r.isNullAt(0) => 0
-      case r => r.getInt(0)
-    }
-
-  /** Random-hyperplane LSH signatures for cosine ANN: one row per id with an
-    * integer `bucket` (bit p = sign of dot(vec, plane_p)).
+    * codegen'd [[HyperplaneBucket]] kernel, which derives the [[planeCoef]]
+    * table itself for each dimension it meets — for each plane p, the exact
+    * integer dot of floor(1000·x_i) against the plane's coefficients, bit p =
+    * sign(dot_p). Null elements contribute 0. Integer math keeps the bucket
+    * reproducible under any partitioning and in the oracle engine.
     *
     * Planes are pseudo-random integer coefficients in [-1000, 1000) derived
-    * from md5("p,d") ([[planeCoef]]). The dot product is exact INTEGER math
-    * over floor(1000·x): float sums are order-sensitive and a near-zero dot
-    * could flip sign under a different partitioning (or in the oracle
-    * engine); integer sums are associative, so the bucket is reproducible
-    * everywhere.
+    * from md5("p,d"). Float sums are order-sensitive and a near-zero dot could
+    * flip sign under a different partitioning (or in the oracle engine);
+    * integer sums are associative, so the bucket is reproducible everywhere.
     *
-    * The signature is the MAP-SIDE [[hyperplaneBucket]] projection: zero
-    * exchanges (the relational explode + coef-join + aggregate form it
-    * replaces paid a shuffle and a join-back per call; the coefficient table
-    * — planes×d longs — ships once per task inside the codegen'd kernel).
-    * Vectors with ZERO elements yield no signature row (the old relational
-    * inner join dropped them; the size > 0 filter preserves that). */
-  def hyperplaneSignatures(vecs: DataFrame, idCol: String, vecCol: String,
-                           planes: Int = 8): DataFrame = {
-    val d = dimOf(vecs, vecCol)
-    vecs.filter(size(col(vecCol)) > 0)
-      .select(col(idCol), hyperplaneBucket(col(vecCol), planes, d).as("bucket"))
-  }
+    * Round-6 optimization (guide §2.4 "remove shuffles outright"): signature
+    * derivation was an explode shuffle + aggregate + join-back PER CALL; as a
+    * projection it costs zero exchanges and fuses into whatever scan needs
+    * it. Building it runs no job: the coefficient table is sized by the
+    * vectors the kernel meets, not by a max(size) pass over the input. */
+  def hyperplaneBucket(vecCol: Column, planes: Int): Column =
+    HyperplaneBucket.bucket(vecCol, planes)
 
   // ── IVF-Flat ANN ───────────────────────────────────────────────────────────
 
@@ -782,7 +740,6 @@ object SimOps {
     * (idCol, rank, nn_id, cos). */
   def ivfTopK(vecs: DataFrame, idCol: String, vecCol: String,
               c: Int = 16, nProbe: Int = 4, k: Int = 3): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val nrm = sqrt(FloatVecDot.dot(col(vecCol), col(vecCol)))
     // the c centroid rows are BOUNDED METADATA (the 16-row table previously
     // broadcast) — collecting them to the driver lets every (vector ×
@@ -850,24 +807,6 @@ object SimOps {
     math.min(24, math.max(8, needed))
   }
 
-  /** Index side bounded to buckets of ≤ `maxBucket` members (the
-    * candidatePairs guard, applied to the embedding family): a degenerate
-    * bucket — all-zero vectors, a heavily clustered corpus, or planes too few
-    * for the corpus size — would otherwise make the probe join quadratic on
-    * one key. Like maxBucket in [[candidatePairs]], the cap is part of the
-    * operator CONTRACT (the oracle applies the same cap); vectors in dropped
-    * buckets still PROBE (they appear on the query side), they just stop being
-    * candidates. */
-  private def capIndexBuckets(index: DataFrame, maxBucket: Int): DataFrame = {
-    // bucket population as a WINDOW count instead of aggregate + join-back
-    // (round-6, the rawCandidatePairs pattern): the window's bucket exchange
-    // is the SAME partitioning the probe equi-join on bucket needs, so the
-    // cap costs no additional shuffle of the index side
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("bucket")
-    index.withColumn("_bn", count(lit(1)).over(w))
-      .filter(col("_bn") <= maxBucket).drop("_bn")
-  }
-
   /** All probe masks within Hamming distance `radius` of a signature
     * (0 = own bucket only; 1 adds single-bit flips; 2 adds bit pairs …). */
   def probeMasks(planes: Int, radius: Int): Seq[Long] = {
@@ -909,7 +848,6 @@ object SimOps {
   def annTopK(vecs: DataFrame, idCol: String, vecCol: String,
               planes: Int = -1, k: Int = 3, radius: Int = 1,
               maxBucket: Int = 200): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val cands = annCandidates(vecs, idCol, vecCol, planes, radius, maxBucket)
       .filter(col("_qid") =!= col("_cid"))
       .select(col("_qid"), col("_cid").as("nn_id"), col("cos"))
@@ -921,8 +859,15 @@ object SimOps {
 
   /** The ANN candidate step shared by [[cosineNeardupPairs]] and [[annTopK]]:
     * every (query `_qid`, candidate `_cid`) whose buckets lie within Hamming
-    * distance `radius`, candidates drawn from the `maxBucket`-capped index,
-    * with their exact `cos`. Self pairs included; callers filter.
+    * distance `radius`, with their exact `cos`. Self pairs included; callers
+    * filter.
+    *
+    * The index side is bounded to buckets of ≤ `maxBucket` members
+    * ([[capBuckets]], the candidatePairs guard applied to the embedding
+    * family): a degenerate bucket — all-zero vectors, a heavily clustered
+    * corpus, or planes too few for the corpus size — would otherwise make the
+    * probe join quadratic on one key. Vectors in dropped buckets still PROBE
+    * (they appear on the query side), they just stop being candidates.
     *
     * `planes = -1` (the default of both callers) sizes the bucket space from
     * the corpus via [[planesFor]] — one count() per call; pass an explicit
@@ -932,7 +877,7 @@ object SimOps {
                             planes: Int, radius: Int, maxBucket: Int): DataFrame = {
     val p = if (planes > 0) planes else planesFor(vecs.count())
     val index = hyperplaneIndex(vecs, idCol, vecCol, p)
-    val bounded = capIndexBuckets(index, maxBucket)
+    val bounded = capBuckets(index, Seq("bucket"), maxBucket)
     val masks = probeMasks(p, radius)
     val probes = index.select(col(idCol).as("_qid"), col(vecCol).as("_qv"),
       col("_nrm").as("_qn"),
@@ -948,13 +893,13 @@ object SimOps {
     * [[hyperplaneBucket]]. No materialization — both consumers (probe side,
     * candidate side) re-run a column-pruned scan + projection, which at any
     * scale is cheaper than the old signature shuffle + join-back + checkpoint
-    * job the relational signature form required. */
+    * job the relational signature form required. Vectors with ZERO elements
+    * get no index row. */
   private def hyperplaneIndex(vecs: DataFrame, idCol: String, vecCol: String,
                               p: Int): DataFrame = {
     val nrm = sqrt(FloatVecDot.dot(col(vecCol), col(vecCol)))
-    val d = dimOf(vecs, vecCol)
     vecs.filter(size(col(vecCol)) > 0)
       .select(col(idCol), col(vecCol), nrm.as("_nrm"),
-        hyperplaneBucket(col(vecCol), p, d).as("bucket"))
+        hyperplaneBucket(col(vecCol), p).as("bucket"))
   }
 }

@@ -80,15 +80,17 @@ object FloatVecDot {
 }
 
 /** Native Catalyst expression: the hyperplane-LSH bucket of one float vector
-  * against a FIXED plane-coefficient table (`coefs(p*d + i)` = integer
-  * coefficient of dimension i in plane p; see `SimOps.planeCoef`).
+  * against `planes` fixed pseudo-random planes (coefficient of dimension i in
+  * plane p = `SimOps.planeCoef(p, i)`).
   *
   * For each plane p it computes the exact integer dot
-  * Σ_i floor(1000·x_i)·c_{p,i} over the vector's first min(len, d) elements
-  * (null elements contribute 0) and sets bit p of the result iff the dot is
-  * positive — bit-for-bit the value of the relational
-  * explode → coef-join → sum → sign pipeline it replaces (FunctionsSpec
-  * asserts equality), and of the DuckDB oracle's mirror of that pipeline.
+  * Σ_i floor(1000·x_i)·c_{p,i} over the vector's elements (null elements
+  * contribute 0) and sets bit p of the result iff the dot is positive —
+  * bit-for-bit the value of the relational explode → coef-join → sum → sign
+  * pipeline it replaces (FunctionsSpec asserts equality), and of the DuckDB
+  * oracle's mirror of that pipeline. The coefficients come from a
+  * [[PlaneCoefs]] table that grows to the longest vector met, so building
+  * the expression needs no pass over the input to learn the dimension.
   *
   * Round-6 optimization (guide §1.2 step 2 "per-task work", §2.4 "remove
   * shuffles outright"): as a PROJECTION the signature costs zero exchanges
@@ -100,11 +102,10 @@ object FloatVecDot {
   * Second custom Expression after [[FloatVecDot]], same justification
   * pattern: a hot-path arithmetic kernel the built-in surface cannot express
   * efficiently. */
-case class HyperplaneBucket(child: Expression, planes: Int, d: Int,
-                            coefs: Array[Long])
+case class HyperplaneBucket(child: Expression, planes: Int)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  require(coefs.length == planes * d,
-    s"coefs must be planes*d = ${planes * d} longs, got ${coefs.length}")
+
+  private val coefs = new PlaneCoefs(planes)
 
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(FloatType, _) => TypeCheckResult.TypeCheckSuccess
@@ -116,14 +117,15 @@ case class HyperplaneBucket(child: Expression, planes: Int, d: Int,
 
   override def nullSafeEval(v: Any): Any = {
     val x = v.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), d)
+    val n = x.numElements()
+    val cf = coefs.upTo(n)
     val dots = new Array[Long](planes)
     var i = 0
     while (i < n) {
       if (!x.isNullAt(i)) {
         val xi = math.floor(x.getFloat(i).toDouble * 1000.0).toLong
         var p = 0
-        while (p < planes) { dots(p) += xi * coefs(p * d + i); p += 1 }
+        while (p < planes) { dots(p) += xi * cf(i * planes + p); p += 1 }
       }
       i += 1
     }
@@ -135,21 +137,23 @@ case class HyperplaneBucket(child: Expression, planes: Int, d: Int,
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, x => {
-      val cf = ctx.addReferenceObj("hpCoefs", coefs, "long[]")
+      val table = ctx.addReferenceObj("hpCoefs", coefs, classOf[PlaneCoefs].getName)
       val n = ctx.freshName("n")
+      val cf = ctx.freshName("cf")
       val dots = ctx.freshName("dots")
       val i = ctx.freshName("i")
       val p = ctx.freshName("p")
       val xi = ctx.freshName("xi")
       val b = ctx.freshName("b")
       s"""
-         |int $n = java.lang.Math.min($x.numElements(), $d);
+         |int $n = $x.numElements();
+         |long[] $cf = $table.upTo($n);
          |long[] $dots = new long[$planes];
          |for (int $i = 0; $i < $n; $i++) {
          |  if (!$x.isNullAt($i)) {
          |    long $xi = (long) java.lang.Math.floor(((double) $x.getFloat($i)) * 1000.0);
          |    for (int $p = 0; $p < $planes; $p++) {
-         |      $dots[$p] += $xi * $cf[$p * $d + $i];
+         |      $dots[$p] += $xi * $cf[$i * $planes + $p];
          |    }
          |  }
          |}
@@ -166,9 +170,31 @@ case class HyperplaneBucket(child: Expression, planes: Int, d: Int,
 }
 
 object HyperplaneBucket {
-  def bucket(vec: Column, planes: Int, d: Int, coefs: Array[Long]): Column =
-    GraftColumnBridge.column(HyperplaneBucket(
-      GraftColumnBridge.expression(vec), planes, d, coefs))
+  def bucket(vec: Column, planes: Int): Column =
+    GraftColumnBridge.column(HyperplaneBucket(GraftColumnBridge.expression(vec), planes))
+}
+
+/** The plane coefficients [[HyperplaneBucket]] dots against, dimension-major
+  * (`SimOps.planeCoef(p, i)` at `i * planes + p`), computed the first time a
+  * vector with dimension i is met and kept. The table only grows, so each
+  * coefficient is derived once per task (one md5 each); reads are a volatile
+  * load and a length check. */
+final class PlaneCoefs(planes: Int) extends Serializable {
+  @volatile private var table = new Array[Long](0)
+
+  /** A table covering dimensions 0 until `dims` (possibly more). */
+  def upTo(dims: Int): Array[Long] = {
+    val t = table
+    if (t.length >= dims * planes) t else grow(dims)
+  }
+
+  private def grow(dims: Int): Array[Long] = synchronized {
+    val old = table
+    if (old.length < dims * planes)
+      table = Array.tabulate(dims * planes)(j =>
+        if (j < old.length) old(j) else SimOps.planeCoef(j % planes, j / planes))
+    table
+  }
 }
 
 /** Native Catalyst expression: the 64-bit SimHash of a text's whitespace

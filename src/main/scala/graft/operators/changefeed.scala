@@ -54,7 +54,7 @@ object ChangeFeed {
     * an exclusive generation tag — the shape
     * [[graft.sources.LakeTable.readVersionsTagged]] produces, where a row
     * from a file shared by both manifests belongs to BOTH generations. This
-    * is the form [[betweenVersions]] runs. */
+    * is the form [[betweenVersions]] and [[byWatermark]] run. */
   private[graft] def diffMembership(tagged: DataFrame, keyCols: Seq[String],
                                     payloadCols: Seq[String]): DataFrame = {
     // _lsn leads the struct so max() picks the per-generation winner by LSN;
@@ -141,30 +141,18 @@ object ChangeFeed {
 
   /** Watermark form for append-only event logs (no tombstones): the change
     * feed between LWW states "events with lsn <= t1" and "lsn <= t2", computed
-    * from the ONE source scan — the watermark predicates are the generation
-    * tags, so no self-union and no second read. Deletes cannot occur (every
-    * event is an upsert); emits insert/update only. */
+    * from the ONE source scan by [[diffMembership]] — the watermark predicates
+    * are the membership tags, so no self-union and no second read: every row
+    * <= t2 belongs to the new state, and the rows <= t1 to the old one too.
+    * Deletes cannot occur (every event is an upsert); emits insert/update
+    * only. */
   def byWatermark(events: DataFrame, keyCols: Seq[String], lsnCol: String,
                   payloadCols: Seq[String], t1: Long, t2: Long): DataFrame = {
     require(t1 < t2, s"watermarks must advance, got $t1 >= $t2")
-    val tagged = events.filter(col(lsnCol) <= t2)
-      .withColumn("_gen", when(col(lsnCol) <= t1, lit(1)).otherwise(lit(2)))
+    diffMembership(events.filter(col(lsnCol) <= t2)
+      .withColumn("_in1", col(lsnCol) <= t1)
+      .withColumn("_in2", lit(true))
       .withColumn("_lsn", col(lsnCol))
-      .withColumn("_deleted", lit(false))
-    // an old-generation row is visible to BOTH watermarks: duplicate it into
-    // gen 2 virtually by computing the v2 winner over ALL rows <= t2. Rather
-    // than union the prefix twice, fold it in the aggregate: v2 = max over
-    // every row, v1 = max over gen-1 rows only.
-    val ver = struct((col("_lsn") +: col("_deleted") +: payloadCols.map(col)): _*)
-    val agg = tagged.groupBy(keyCols.map(col): _*).agg(
-      max(when(col("_gen") === 1, ver)).as("_v1"),
-      max(ver).as("_v2"))
-    val change = when(col("_v1").isNull, "insert")
-      .when(col("_v2._lsn") > col("_v1._lsn"), "update")
-    agg.withColumn(changeCol, change)
-      .filter(col(changeCol).isNotNull)
-      .select(keyCols.map(col) ++ Seq(col(changeCol),
-        col("_v1._lsn").as("_old_lsn"), col("_v2._lsn").as("_new_lsn")) ++
-        payloadCols.map(p => col("_v2").getField(p).as(p)): _*)
+      .withColumn("_deleted", lit(false)), keyCols, payloadCols)
   }
 }

@@ -120,7 +120,8 @@ class FunctionsSpec extends SparkSpec {
 
   test("relational minhash signatures: dups identical, near-dups mostly agree") {
     val sh = docs.select(col("doc_id"), SimOps.wordShingles(col("text"), 2).as("sh"))
-    val sigs = SimOps.minhashSignatures(sh, "doc_id", "sh", 32)
+    val sigs = SimOps.minhashSignaturesFromRows(
+        sh.select(col("doc_id"), explode(col("sh")).as("_sh")), "doc_id", 32)
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(sigs(1L) === sigs(4L))
     val agree12 = sigs(1L).zip(sigs(2L)).count { case (a, b) => a == b }
@@ -140,7 +141,7 @@ class FunctionsSpec extends SparkSpec {
   test("hyperplane LSH buckets exact dups together") {
     val e = Seq((1L, Seq(1.0f, 0.5f, -0.2f)), (2L, Seq(1.0f, 0.5f, -0.2f)),
       (3L, Seq(-1.0f, -0.5f, 0.9f))).toDF("vec_id", "embedding")
-    val b = SimOps.hyperplaneSignatures(e, "vec_id", "embedding", 8)
+    val b = e.select(col("vec_id"), SimOps.hyperplaneBucket(col("embedding"), 8))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(b(1L) === b(2L))
     assert(b(1L) !== b(3L)) // exactly opposite vector flips every plane sign
@@ -207,10 +208,11 @@ class FunctionsSpec extends SparkSpec {
           when(col(s"_dot$p") > 0, lit(1L << p)).otherwise(lit(0L)))
           .reduce(_ + _).as("bucket"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val kernel = SimOps.hyperplaneSignatures(vecs, "vec_id", "embedding", planes)
+    val kernel = vecs.filter(size(col("embedding")) > 0)
+      .select(col("vec_id"), SimOps.hyperplaneBucket(col("embedding"), planes))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(kernel === relational)
-    // driver-side coef twin == the Column md5 derivation it replaced
+    // the kernel's Scala coef twin == the Column md5 derivation it replaced
     val sparkCoefs = coefs.collect().flatMap(r =>
       (0 until planes).map(p => (p, r.getInt(0)) -> r.getLong(1 + p))).toMap
     sparkCoefs.foreach { case ((p, d), v) =>
@@ -270,36 +272,52 @@ class FunctionsSpec extends SparkSpec {
 
   test("components fixpoint checks are cheap: convergence signals ride the per-round action") {
     import spark.implicits._
-    // count SQL EXECUTIONS (actions) during a propagate-loop run — raw job
-    // counts are AQE-noisy (one action fans into a job per shuffle stage).
-    // The changed-count rides the materialization action via observe(), so
+    // count SQL EXECUTIONS (actions) during a propagate-loop run. The
+    // changed-count rides the materialization action via observe(), so
     // each round must cost ONE action (the localCheckpoint), not two
     // (checkpoint + count)
-    val execs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onOtherEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit =
-        e match {
-          case _: org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart =>
-            execs.incrementAndGet(); ()
-          case _ => ()
-        }
-    }
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("left_id", "right_id")
     // warm up once (codegen, shuffles) so the counted run is steady-state
     SimOps.connectedComponents(pairs, "left_id", "right_id").collect()
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      SimOps.connectedComponents(pairs, "left_id", "right_id").collect()
-      // listener events are delivered asynchronously; give the bus a beat
-      Thread.sleep(500)
-      // this graph converges in 2 propagate rounds + 1 no-change round: with
-      // the per-round count() this cost 9 actions (2 setup checkpoints +
-      // 3 × (checkpoint + count) + collect); with the observe()-folded
-      // signal it is 6 — allow 7 for one stray fallback scan
-      val n = execs.get()
-      assert(n <= 7, s"propagate loop spent $n actions — the changed-count " +
-        "signal is paying extra actions per round again")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val (_, n) = sqlExecutions(
+      SimOps.connectedComponents(pairs, "left_id", "right_id").collect())
+    // this graph converges in 2 propagate rounds + 1 no-change round: with
+    // the per-round count() this cost 9 actions (2 setup checkpoints +
+    // 3 × (checkpoint + count) + collect); with the observe()-folded
+    // signal it is 6 — allow 7 for one stray fallback scan
+    assert(n <= 7, s"propagate loop spent $n actions — the changed-count " +
+      "signal is paying extra actions per round again")
+  }
+
+  test("components escalation keeps the min-label rounds: star starts from their labels") {
+    import spark.implicits._
+    // a 30-node chain does not converge in 25 min-label rounds (its diameter
+    // is 29). Escalation seeds large-star/small-star with the propagated
+    // labels, which already reach 26 hops: star needs 2 rounds, where
+    // restarting it from the raw chain needed 6 (34 actions against 38)
+    val chain = (1L until 30L).map(i => (i, i + 1)).toDF("left_id", "right_id")
+    val (got, n) = sqlExecutions(
+      SimOps.connectedComponents(chain, "left_id", "right_id", maxIter = 25)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    assert(got === (1L to 30L).map(_ -> 1L).toMap)
+    // 2 setup checkpoints + 25 rounds + collect = 28 outside star; star pays
+    // 2 setup actions, one per round and 2 exact convergence checks. The
+    // bound leaves room for 3 fallback scans of a withheld observation
+    assert(n <= 37, s"escalated components spent $n actions — star restarted " +
+      "from the raw pairs instead of the propagated labels")
+  }
+
+  test("building the ANN operators with explicit planes starts no SQL execution") {
+    import spark.implicits._
+    val e = Seq((1L, Seq(1.0f, 0.5f, -0.2f)), (2L, Seq(1.0f, 0.5f, -0.2f)),
+      (3L, Seq(-1.0f, -0.5f, 0.9f))).toDF("vec_id", "embedding")
+    val ((top, pairs), n) = sqlExecutions((
+      SimOps.annTopK(e, "vec_id", "embedding", planes = 8, k = 2),
+      SimOps.cosineNeardupPairs(e, "vec_id", "embedding", planes = 8)))
+    assert(n === 0, s"building the ANN frames ran $n SQL executions")
+    assert(top.filter(col("rank") === 1).count() === 2L)
+    assert(pairs.select("left_id", "right_id").collect().map(r =>
+      (r.getLong(0), r.getLong(1))).toSet === Set((1L, 2L)))
   }
 
   test("incremental exact dedup flags batch docs whose fingerprint is already ingested") {

@@ -47,9 +47,50 @@ class PlanSpec extends SparkSpec {
   test("relational minhash compiles to codegen'd aggregates over an explode") {
     import spark.implicits._
     val sh = Seq((1L, Seq("a b", "b c"))).toDF("doc_id", "sh")
-    val plan = graft.functions.SimOps.minhashSignatures(sh, "doc_id", "sh", 8)
+    val plan = graft.functions.SimOps.minhashSignaturesFromRows(
+        sh.select(col("doc_id"), explode(col("sh")).as("_sh")), "doc_id", 8)
       .queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate") && plan.contains("Generate"), plan)
+  }
+
+  test("without broadcast joins both sides of the band self-join read one (band, bucket) shuffle") {
+    // the at-scale shape, where no side fits the broadcast threshold: the
+    // bucket-cap window's (band, bucket) exchange is the partitioning the
+    // pair self-join needs, so its second side is a ReusedExchange of the
+    // first — the shingle → minhash → band pipeline shuffles once
+    import org.apache.spark.sql.catalyst.expressions.Attribute
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.ShuffleQueryStageExec
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
+    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      es.collect { case a: Attribute => a.name }
+    // the first shuffle below a join side (a unary chain down to it)
+    def shuffleOf(p: SparkPlan): SparkPlan = p match {
+      case s: ShuffleQueryStageExec => s.plan
+      case e @ (_: ShuffleExchangeExec | _: ReusedExchangeExec) => e
+      case other => shuffleOf(other.children.head)
+    }
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val df = SparkEntry.queries("q_ngram_jaccard")(spark, sf)
+      df.collect() // the reuse is decided as AQE creates the query stages
+      val joins = planNodes(df.queryExecution.executedPlan).collect {
+        case j: SortMergeJoinExec if names(j.leftKeys) == Seq("band", "bucket") => j
+      }
+      assert(joins.size === 1, s"expected one band self-join:\n${df.queryExecution.executedPlan}")
+      val Seq(l, r) = Seq(joins.head.left, joins.head.right).map(shuffleOf)
+      val (reused, first) = (l, r) match {
+        case (x: ReusedExchangeExec, y) => (x, y)
+        case (y, x: ReusedExchangeExec) => (x, y)
+        case _ => fail(s"neither self-join side reuses the other's exchange:\n${joins.head}")
+      }
+      assert(reused.child.canonicalized === first.canonicalized)
+      first.outputPartitioning match {
+        case h: HashPartitioning => assert(names(h.expressions) === Seq("band", "bucket"))
+        case other => fail(s"expected a (band, bucket) hash exchange, got $other")
+      }
+    } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
   }
 
   test("code-mapping decode broadcasts the mapping dimension") {

@@ -3,10 +3,12 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.GraftTestBridge
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
@@ -35,6 +37,27 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
       r
     } finally spark.listenerManager.unregister(listener)
     (result, plans.synchronized(plans.toList))
+  }
+
+  /** Runs `body`; returns its result and the number of SQL executions
+    * (actions) it started — raw job counts are AQE-noisy, one action fans into
+    * a job per shuffle stage. The listener bus is drained on both sides. */
+  def sqlExecutions[T](body: => T): (T, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case _: SparkListenerSQLExecutionStart => n.incrementAndGet(); ()
+        case _ => ()
+      }
+    }
+    GraftTestBridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    val result = try {
+      val r = body
+      GraftTestBridge.drainListenerBus(spark.sparkContext)
+      r
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (result, n.get())
   }
 
   /** Every executed node, through AQE stages and into cached plans: a

@@ -542,9 +542,15 @@ object SimOps {
       * caller that already holds the two base tables (e.g. just written) never
       * recomputes them. */
     def derive(bands: DataFrame, shingles: DataFrame, idCol: String): NeardupIndexTables =
-      NeardupIndexTables(bands, shingles,
-        shingles.groupBy(idCol).agg(count(lit(1)).as("_sz")),
-        bands.groupBy("band", "bucket").agg(count(lit(1)).as("_n")))
+      NeardupIndexTables(bands, shingles, sizesOf(shingles, idCol), countsOf(bands))
+
+    /** `sizes`: distinct shingles per id. */
+    def sizesOf(shingles: DataFrame, idCol: String): DataFrame =
+      shingles.groupBy(idCol).agg(count(lit(1)).as("_sz"))
+
+    /** `counts`: members per band bucket. */
+    def countsOf(bands: DataFrame): DataFrame =
+      bands.groupBy("band", "bucket").agg(count(lit(1)).as("_n"))
   }
 
   /** Derive the index tables for a document set (one shingle pass, shared by

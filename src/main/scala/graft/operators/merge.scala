@@ -1,11 +1,6 @@
 package graft.operators
 
-import java.util.concurrent.{CompletionException, ExecutorService, Executors}
-
-import scala.util.Try
-
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -26,7 +21,8 @@ final case class BatchResult(
 
 /** The MERGE-apply heart of the engine: per microbatch —
   * validate → dedup (LWW by max LSN, salted under skew) → evolve schema →
-  * copy-on-write merge of only the touched buckets → lineage → atomic commit.
+  * merge (merge-on-read by default: append the batch winners, readers resolve;
+  * or copy-on-write of only the touched buckets) → lineage → atomic commit.
   *
   * Reference semantics being reproduced (SURVEY.md §2.1 S8, §7.2):
   *  - staged rows merged with insert/update/logical-delete resolution in one pass
@@ -38,10 +34,11 @@ final case class BatchResult(
   *  - post-apply verification counts → per-bucket lineage rows
   *    (reference dest/I2b2QueryResultsHandler.java:705-837).
   *
-  * Scale design: the target side is NEVER shuffled — survivors come from a
-  * file-pruned scan of touched buckets anti-joined against the (usually broadcast)
-  * batch key set; only the rewritten data moves, partitioned by bucket. The batch
-  * side is reduced map-side by the aggregate-based dedup before any shuffle.
+  * Scale design: the target side is NEVER shuffled — merge-on-read does not
+  * read it, and copy-on-write takes survivors from a file-pruned scan of touched
+  * buckets anti-joined against the (usually broadcast) batch key set; only the
+  * written data moves, partitioned by bucket. The batch side is reduced map-side
+  * by the aggregate-based dedup before any shuffle.
   */
 object CdcMerge {
 
@@ -128,45 +125,14 @@ object CdcMerge {
   private val skewCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Double)]()
 
-  /** Driver threads for [[applyBatch]]'s side writes: daemon, created on
-    * demand and reaped when idle, so concurrency follows the side writes
-    * actually submitted. */
-  private lazy val sidePool: ExecutorService = Executors.newCachedThreadPool { r =>
-    val t = new Thread(r, "graft-side-write")
-    t.setDaemon(true)
-    t
-  }
-
-  /** The side writes of one batch, started on [[sidePool]] threads that carry
-    * the caller's thread-locals (active session, local properties: job group,
-    * job tags, SQL execution id), so the stream's cancellation reaches their
-    * jobs as it reaches the merge's own. */
-  private final class SideWrites(spark: SparkSession, writes: Seq[() => Unit]) {
-    private val running = writes.map(w => SQLExecution.withThreadLocalCaptured(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], sidePool)(w()))
-
-    /** Wait for every side write; rethrow the first failure. */
-    def await(): Unit = {
-      val failures = running.flatMap(f => Try(f.join()).failed.toOption.map {
-        case c: CompletionException if c.getCause != null => c.getCause
-        case e => e
-      })
-      failures.headOption.foreach { e => failures.tail.foreach(e.addSuppressed); throw e }
-    }
-
-    /** Wait for every side write, ignoring failures: none outlives its batch.
-      * `join` is uninterruptible, and a stopped stream cancels the side
-      * writes' jobs through the job group they carry. */
-    def drain(): Unit = running.foreach(f => Try(f.join()))
-  }
-
   /** Apply one microbatch. `sideWrites` (the stream's near-dup index append
     * and contamination screen) run CONCURRENTLY with the dedup and data write
     * and only for an epoch this call applies; every one has finished before
     * any manifest commit, the empty-batch commit included. A side-write
     * failure fails the batch with nothing committed, so a redelivered epoch
     * redoes its side writes (each is an epoch-keyed overwrite) before the
-    * ledger can skip it. */
+    * ledger can skip it. The merge's own dead-letter and lineage writes start
+    * once the stats are in and likewise land before the commit. */
   def applyBatch(
       table: LakeTable,
       batch: DataFrame,
@@ -238,7 +204,7 @@ object CdcMerge {
 
     // side writes start once the plan is built: they overlap the dedup, stats
     // and data write below, and the finally waits for them whatever happens
-    val side = new SideWrites(spark, sideWrites)
+    val side = new SideWrites(spark).start(sideWrites)
     try {
       // 5. Per-bucket lineage stats in ONE aggregation (also yields touched buckets).
       val stats = changes.groupBy(table.bucketOf(col("conv_id")).as("bucket")).agg(
@@ -249,24 +215,40 @@ object CdcMerge {
       ).collect()
 
       // the observation resolved with the stats job (same scan)
-      val nRejects = {
-        val metrics = rejectObs.get
-        val n = metrics.get("n_rejects").flatMap(Option(_))
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
-        // warn ONCE per distinct unknown guard value per JVM (reference analog:
-        // PropositionFactHandler.java:145-149's warn-once on missing concepts)
-        metrics.get("unknown_roles").flatMap(Option(_)).foreach { vs =>
-          vs.asInstanceOf[scala.collection.Seq[String]].foreach { v =>
-            if (warnedUnknown.add(v))
-              System.err.println(s"[graft] WARN unknown role '$v' diverted to dead-letter (warn-once)")
-          }
+      val metrics = rejectObs.get
+      val nRejects = metrics.get("n_rejects").flatMap(Option(_))
+        .map(_.asInstanceOf[Long]).getOrElse(0L)
+      // warn ONCE per distinct unknown guard value per JVM (reference analog:
+      // PropositionFactHandler.java:145-149's warn-once on missing concepts)
+      metrics.get("unknown_roles").flatMap(Option(_)).foreach { vs =>
+        vs.asInstanceOf[scala.collection.Seq[String]].foreach { v =>
+          if (warnedUnknown.add(v))
+            System.err.println(s"[graft] WARN unknown role '$v' diverted to dead-letter (warn-once)")
         }
-        if (n > 0)
-          batch.withColumn("reason", rejectReason(batch, knownRoles))
-            .filter(col("reason").isNotNull)
-            .write.mode(SaveMode.Overwrite).parquet(rejectsPath)
-        n
       }
+
+      // The stats-only writes: the dead-letter rows (a dirty batch only) and
+      // the lineage rows need nothing but the stats, so they start now and run
+      // BESIDE the data write below; the commit waits for them. Lineage lands
+      // BEFORE the commit: a crash in between re-runs the epoch and rewrites
+      // the same paths deterministically.
+      val rejectsWrite = if (nRejects == 0) None else Some { () =>
+        batch.withColumn("reason", rejectReason(batch, knownRoles))
+          .filter(col("reason").isNotNull)
+          .write.mode(SaveMode.Overwrite).parquet(rejectsPath)
+      }
+      val lineageWrite = if (stats.isEmpty) None else {
+        import spark.implicits._
+        val lineage = stats.toSeq.map { r =>
+          graft.LineageRow(queryId, epochId, r.getInt(0), r.getLong(1), r.getLong(2),
+            r.getLong(3), r.getLong(4), r.getLong(5))
+        }.toDF()
+        Some { () =>
+          lineage.coalesce(1).write.mode(SaveMode.Overwrite)
+            .parquet(s"${table.dir}/_lineage/q=$queryId/e=$epochId")
+        }
+      }
+      side.start(rejectsWrite.toSeq ++ lineageWrite.toSeq)
 
       if (stats.isEmpty) {
         // Empty batch still advances the ledger so redelivery is skipped.
@@ -291,7 +273,9 @@ object CdcMerge {
       //    winners are appended — no target read, no write amplification; readers
       //    resolve max-_lsn per key (Iceberg MoR analog; reference analog: the
       //    append-on-update flag, dest/I2b2QueryResultsHandler.java:678).
-      //    Maintain.compact folds versions back to one row per key.
+      //    Maintain.compact folds versions back to one row per key. A bucket's
+      //    appended rows are its `rows_applied`, so the stats give the new
+      //    files' row counts.
       //
       //    mode="cow" (copy-on-write): touched buckets are rewritten fully
       //    resolved — unmatched old rows pass through an anti-join against the
@@ -304,8 +288,9 @@ object CdcMerge {
         changes.withColumn("_lsn", col("lsn"))
           .withColumn("_deleted", col("op") === "D"),
         evolved)
-      val (merged, kept) = mode match {
-        case "mor" => (changePhysical, snap.files)
+      val (merged, kept, bucketRows) = mode match {
+        case "mor" =>
+          (changePhysical, snap.files, stats.map(r => r.getInt(0) -> r.getLong(3)).toMap)
         case "cow" =>
           val old = LakeTable.align(table.readBuckets(touched), evolved)
           val keys = changes.select(Schemas.keyCols.map(col): _*)
@@ -316,23 +301,14 @@ object CdcMerge {
               Schemas.keyCols, "_lsn")
             .drop("n_events", "_lsn_min")
           (untouchedRows.unionByName(winners),
-            snap.files.filterNot(f => touched.contains(f.bucket)))
+            snap.files.filterNot(f => touched.contains(f.bucket)), Map.empty[Int, Long])
       }
 
-      val newFiles = table.writeDataFiles(merged, snap.version + 1, schemaId)
+      val newFiles = table.writeDataFiles(merged, snap.version + 1, schemaId,
+        bucketRows = bucketRows)
 
-      // 7. Lineage BEFORE the commit: a crash in between re-runs the epoch and
-      //    rewrites the same path deterministically.
-      import spark.implicits._
-      val lineage = stats.toSeq.map { r =>
-        graft.LineageRow(queryId, epochId, r.getInt(0), r.getLong(1), r.getLong(2),
-          r.getLong(3), r.getLong(4), r.getLong(5))
-      }.toDF()
-      lineage.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"${table.dir}/_lineage/q=$queryId/e=$epochId")
-
-      // 8. Atomic snapshot commit carrying the epoch ledger — once every
-      //    side write has landed.
+      // 7. Atomic snapshot commit carrying the epoch ledger — once every
+      //    side write and stats-only write has landed.
       side.await()
       table.commit(kept ++ newFiles, schemas, schemaId,
         snap.applied + (queryId -> epochId),

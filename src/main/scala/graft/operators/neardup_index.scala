@@ -8,10 +8,10 @@ import graft.functions.SimOps
 import graft.sources.{LakeIO, NioLakeIO}
 
 /** Persisted near-dup index — the sibling-table pattern (`_lineage`,
-  * `_rejects`) applied to similarity. Three parquet tables under `dir`
-  * (`bands/`, `shingles/`, `sizes/`) hold the LSH band buckets, distinct
-  * 64-bit shingle hashes, and per-doc shingle-set sizes of everything
-  * ingested so far, so each CDC microbatch can
+  * `_rejects`) applied to similarity. Four parquet tables under `dir`
+  * (`bands/`, `shingles/`, `sizes/`, `counts/`) hold the LSH band buckets,
+  * distinct 64-bit shingle hashes, per-doc shingle-set sizes and per-bucket
+  * membership counts of everything ingested so far, so each CDC microbatch can
   *
   *  1. find its near-dups against the WHOLE corpus without re-shingling it
   *     ([[batchPairs]] — an equi-join against the index's band buckets,
@@ -19,10 +19,11 @@ import graft.sources.{LakeIO, NioLakeIO}
   *  2. [[append]] its own rows, keeping the index current — [[CdcStream]]
   *     does this automatically when `neardupIndexDir` is configured, beside
   *     the merge (concurrently with its dedup and data write), and the merge's
-  *     manifest commit waits for the append to land.
+  *     manifest commit waits for the append to land. A batch with nothing to
+  *     index (delete-only, all rejected) appends an empty epoch.
   *
   * EXACTLY-ONCE BY EPOCH-KEYED OVERWRITES: each append lands in a
-  * deterministic `e=<epoch>` subdirectory of all three tables with OVERWRITE
+  * deterministic `e=<epoch>` subdirectory of all four tables with OVERWRITE
   * semantics, so a crash-redelivered microbatch (structured streaming replays
   * at most the last uncommitted epoch, under its original epoch id) rewrites
   * the same directories instead of duplicating rows — the `_contam`
@@ -106,7 +107,7 @@ object NeardupIndex {
     io.replaceStringAtomic(ledgerPath(dir),
       s"""{"gen":${l.gen},"compactedThrough":${l.compactedThrough}}""")
 
-  /** Epoch numbers present on disk — the UNION across all three tables, so a
+  /** Epoch numbers present on disk — the UNION across all four tables, so a
     * partially-deleted epoch (crash mid-GC) is still seen and re-collected. */
   private def liveEpochs(io: LakeIO, dir: String): Seq[Long] =
     tableNames.flatMap { t =>
@@ -167,22 +168,31 @@ object NeardupIndex {
       (liveEpochs(io, dir) :+ led.compactedThrough :+ -1L).max + 1)
     val t = SimOps.neardupIndexTables(docs, cfg.idCol, cfg.textCol,
       cfg.shingleN, cfg.k, cfg.bands, cfg.rowsPerBand)
-    val (bandsDir, shinglesDir) = (s"$dir/bands/e=$e", s"$dir/shingles/e=$e")
-    t.bands.write.mode("overwrite").partitionBy("_p").parquet(bandsDir)
-    t.shingles.write.mode("overwrite").parquet(shinglesDir)
-    // each table computed ONCE: `sizes` and `counts` derive from the band rows
+    // each table computed ONCE: `counts` and `sizes` derive from the band rows
     // and shingle hashes just written, read back, instead of re-running the
-    // shingle distinct and the MinHash aggregate. Persisting the two would
+    // MinHash aggregate and the shingle distinct. Persisting the two would
     // save the same work, but a cached plan is planned without AQE's
     // partition coalescing, so the bands and shingles writes would land in
     // several times more files. The read-back carries the written schemas: a
     // batch with no tokens writes no band file, and must read back empty.
+    // The two chains, bands → counts and shingles → sizes, share only the
+    // shingle rows `neardupIndexTables` already materialized, so they run
+    // concurrently.
     val spark = docs.sparkSession
-    val d = SimOps.NeardupIndexTables.derive(
-      spark.read.schema(t.bands.schema).parquet(bandsDir),
-      spark.read.schema(t.shingles.schema).parquet(shinglesDir), cfg.idCol)
-    d.sizes.write.mode("overwrite").parquet(s"$dir/sizes/e=$e")
-    d.counts.write.mode("overwrite").parquet(s"$dir/counts/e=$e")
+    def path(name: String) = s"$dir/$name/e=$e"
+    def readBack(name: String, written: DataFrame) =
+      spark.read.schema(written.schema).parquet(path(name))
+    SideWrites.runAll(spark,
+      () => {
+        t.bands.write.mode("overwrite").partitionBy("_p").parquet(path("bands"))
+        SimOps.NeardupIndexTables.countsOf(readBack("bands", t.bands))
+          .write.mode("overwrite").parquet(path("counts"))
+      },
+      () => {
+        t.shingles.write.mode("overwrite").parquet(path("shingles"))
+        SimOps.NeardupIndexTables.sizesOf(readBack("shingles", t.shingles), cfg.idCol)
+          .write.mode("overwrite").parquet(path("sizes"))
+      })
     refresh(spark, dir)
   }
 
@@ -190,7 +200,7 @@ object NeardupIndex {
     * compaction GC replaces files in place, and a session-cached InMemoryFileIndex
     * would otherwise serve the deleted paths (FAILED_READ_FILE on next query). */
   private def refresh(spark: SparkSession, dir: String): Unit =
-    spark.catalog.refreshByPath(dir) // prefix-invalidates all three tables + gens
+    spark.catalog.refreshByPath(dir) // prefix-invalidates all four tables + gens
 
   /** Load the logical index: current compacted generation ∪ epochs above the
     * ledger mark. A pure scan — no distinct, no aggregation (duplicate-freedom
@@ -300,8 +310,9 @@ object NeardupIndex {
         col("turn_idx").isNotNull && col("text").isNotNull)
       .select(concat_ws("#", col("conv_id"), col("turn_idx"), col("lsn"))
         .as(cfg.idCol), col("text").as(cfg.textCol))
-    // an all-rejected/delete-only batch has nothing to index; skipping also
-    // avoids creating a zero-file parquet dir that a later read can't infer
-    if (!docs.isEmpty) append(dir, docs, cfg, epoch, io)
+    // an all-rejected/delete-only batch has nothing to index and appends an
+    // empty epoch, which [[load]] reads like any other: checking for it first
+    // would cost a job on every batch
+    append(dir, docs, cfg, epoch, io)
   }
 }

@@ -110,6 +110,9 @@ object GraftSession {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")
+      // file:// through a LocalFileSystem that sets permissions via java.nio,
+      // not a forked `chmod` per created file (sources/localfs.scala)
+      .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
     extra.foreach { case (k, v) => b.config(k, v) }
     // ops escape hatch: arbitrary session confs via SPARK_GRAFT_SPARK_CONF
     // ("k=v;k=v"), e.g. a low manifest segmentThreshold for a CLI probe

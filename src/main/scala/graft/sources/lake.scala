@@ -134,8 +134,9 @@ class HadoopLakeIO(conf: org.apache.hadoop.conf.Configuration) extends LakeIO {
   * indexes into the snapshot's schema registry (files written before a schema
   * evolution keep their original physical schema — evolution never rewrites data);
   * `rows` is the file's physical row count (from its parquet footer at commit
-  * time — includes tombstones and superseded merge-on-read versions, so it is a
-  * file-size statistic, not the table's live-row count). */
+  * time, or from the merge-on-read merge's per-bucket stats — includes
+  * tombstones and superseded merge-on-read versions, so it is a file-size
+  * statistic, not the table's live-row count). */
 final case class FileEntry(path: String, bucket: Int, schemaId: Int, rows: Long)
 
 /** Reference to one immutable SEGMENT manifest: the file list of one bucket
@@ -352,9 +353,13 @@ final class LakeTable(val spark: SparkSession, val dir: String,
     * goes to bucket [[LakeTable.bucketCol]] of its `conv_id` (a `_gbucket`
     * column already in `rows` is replaced), and each bucket is written by
     * exactly one task, so a call writes one file per bucket it holds rows
-    * for. */
+    * for. `bucketRows` is the caller's count of `rows` per bucket, when it
+    * already has one (the merge-on-read merge's stats): a bucket written as
+    * exactly one file takes its `rows` from there; every other file's
+    * `rows` comes from its parquet footer. */
   def writeDataFiles(rows: DataFrame, version: Long, schemaId: Int,
-                     numBuckets: Int = snap.numBuckets): List[FileEntry] = {
+                     numBuckets: Int = snap.numBuckets,
+                     bucketRows: Map[Int, Long] = Map.empty): List[FileEntry] = {
     val tmp = s"$dir/_tmp_e$version"
     // Pinned partition count for the pre-write shuffle: without it AQE
     // coalesces this exchange to ~64MB partitions and the parquet write
@@ -373,21 +378,23 @@ final class LakeTable(val spark: SparkSession, val dir: String,
       .filter(p => io.isDirectory(p) && baseName(p).startsWith("_gbucket="))
       .foreach { bdir =>
         val bucket = baseName(bdir).stripPrefix("_gbucket=").toInt
-        io.listDir(bdir)
-          .filter(f => baseName(f).endsWith(".parquet")).zipWithIndex
-          .foreach { case (f, i) =>
-            val name = f"data/e${version}_b${bucket}_$i%05d.parquet"
-            io.move(f, s"$dir/$name")
-            entries += FileEntry(name, bucket, schemaId, -1L)
-          }
+        val files = io.listDir(bdir).filter(f => baseName(f).endsWith(".parquet"))
+        val known = if (files.size == 1) bucketRows.getOrElse(bucket, -1L) else -1L
+        files.zipWithIndex.foreach { case (f, i) =>
+          val name = f"data/e${version}_b${bucket}_$i%05d.parquet"
+          io.move(f, s"$dir/$name")
+          entries += FileEntry(name, bucket, schemaId, known)
+        }
       }
     io.deleteRecursively(tmp)
     // footer reads run CONCURRENTLY (one small metadata read per file): done
     // serially they would add O(files) driver latency to every commit — a
     // fixed per-epoch cost that taxes high-parallelism replay epochs hardest
     import scala.collection.parallel.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf() // once, outside the par loop
-    entries.toList.par.map(e => e.copy(rows = parquetRows(conf, s"$dir/${e.path}"))).toList
+    lazy val conf = spark.sessionState.newHadoopConf() // once, if a footer is read
+    entries.toList.par.map { e =>
+      if (e.rows >= 0) e else e.copy(rows = parquetRows(conf, s"$dir/${e.path}"))
+    }.toList
   }
 
   /** Physical row count from the parquet footer (one small metadata read per

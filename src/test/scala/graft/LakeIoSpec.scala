@@ -143,4 +143,59 @@ class LakeIoSpec extends SparkSpec {
     assert(e.getMessage.contains("already vacuumed"), e.getMessage)
     assert(CdcMerge.state(t).count() > 0)
   }
+
+  test("local session file:// FileSystem: no chmod fork, Hadoop's permission bits, .crc sidecars kept") {
+    import java.nio.file.{Files, Path, Paths}
+    import java.nio.file.attribute.PosixFilePermissions
+    import scala.jdk.CollectionConverters._
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import org.apache.hadoop.fs.permission.FsPermission
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(FsPermission.getUMask(conf) === new FsPermission("022"))
+    /** The command line of every process the JVM starts while `body` runs. */
+    def processes(body: => Unit): Seq[String] = {
+      val rec = new Recording()
+      rec.enable("jdk.ProcessStart")
+      rec.start()
+      try body finally rec.stop()
+      val dump = Files.createTempFile("graft-procs", ".jfr")
+      try {
+        rec.dump(dump)
+        RecordingFile.readAllEvents(dump).asScala.map(_.getString("command")).toSeq
+      } finally { rec.close(); Files.delete(dump) }
+    }
+    assert(processes(new ProcessBuilder("true").start().waitFor()).exists(_.contains("true")),
+      "the recording misses started processes")
+    // a merge with dead-letter rows: Hadoop writes the data, rejects and lineage
+    val t = LakeTable.create(spark, tmpDir("lakeio-fs"),
+      CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 8)
+    val ev = ChangeGen.events(spark, 2000L, numConvs = 40, maxTurns = 8, pDelete = 0.1)
+    val batch = ev.unionByName(ev.limit(5).withColumn("op", lit("X")))
+    val started = processes(assert(CdcMerge.applyBatch(t, batch, 0L, "q").rejects >= 5L))
+    assert(!started.exists(_.contains("chmod")), started.mkString("forked:\n", "\n", ""))
+    // the bits Hadoop's shell path sets under umask 022; sidecars still written
+    def mode(p: Path): String = PosixFilePermissions.toString(Files.getPosixFilePermissions(p))
+    Seq("_rejects", "_lineage").map(d => Paths.get(t.dir, d, "q=q", "e=0")).foreach { d =>
+      assert(mode(d) === "rwxr-xr-x", d)
+      val files = Files.list(d).iterator().asScala.toSeq
+      assert(files.exists(_.getFileName.toString.endsWith(".parquet.crc")), s"no .crc in $d")
+      files.foreach(f => assert(mode(f) === "rw-r--r--", f))
+    }
+    t.snapshot.files.foreach(f => assert(mode(Paths.get(t.dir, f.path)) === "rw-r--r--", f))
+    // explicit bits land as asked, less the umask
+    val fs = FileSystem.get(new java.net.URI("file:///"), conf)
+    val d = new HPath(tmpDir("lakeio-fs-bits"), "d")
+    assert(fs.mkdirs(d, new FsPermission("770")))
+    fs.create(new HPath(d, "f"), new FsPermission("660"), true, 4096, 1.toShort, 1L << 20, null)
+      .close()
+    val (dp, fp) = (Paths.get(d.toUri.getPath), Paths.get(d.toUri.getPath, "f"))
+    assert(mode(dp) === "rwxr-x---" && mode(fp) === "rw-r-----")
+    assert(Files.exists(Paths.get(d.toUri.getPath, ".f.crc")))
+    // the sticky bit has no nio form: Hadoop's own path sets it
+    fs.setPermission(d, new FsPermission("1750"))
+    val m = Files.getAttribute(dp, "unix:mode").asInstanceOf[Int]
+    assert((m & Integer.parseInt("7777", 8)) === Integer.parseInt("1750", 8))
+  }
 }

@@ -41,6 +41,15 @@ class MaintainSpec extends SparkSpec {
       assertBucketed(t, s.files, s.numBuckets)
       val written = s.files.filter(_.path.startsWith(s"data/e${s.version}_"))
       assert(written.nonEmpty && written.map(_.bucket).distinct.size === written.size)
+      // every entry's rows is its file's footer count, so physicalRows is too
+      val footers = s.files.map { f =>
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(s"${t.dir}/${f.path}"), spark.sparkContext.hadoopConfiguration)
+        scala.util.Using.resource(org.apache.parquet.hadoop.ParquetFileReader.open(in))(
+          _.getRecordCount)
+      }
+      assert(s.files.map(_.rows) === footers)
+      assert(t.physicalRows === footers.sum)
     }
     val e0 = ChangeGen.events(spark, 2000L, numConvs = 30, maxTurns = 6, pDelete = 0.1)
     assert(CdcMerge.applyBatch(t, e0, 0L, "q").applied)

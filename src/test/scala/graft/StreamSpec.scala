@@ -565,6 +565,12 @@ class StreamSpec extends SparkSpec {
     val docs = Seq(("d1", "one two three four five"), ("d2", "one two three four six"))
       .toDF("doc_id", "text")
     NeardupIndex.append(dir, docs, epoch = Some(1L))
+    // a delete-only batch has nothing to index: it appends an empty epoch too,
+    // with no job to find that out — the shingle checkpoint and four writes
+    val deletes = blank.withColumn("op", lit("D")).withColumn("text", lit("one two three"))
+    val (_, executions) = sqlExecutions(NeardupIndex.appendBatch(dir, deletes, epoch = Some(2L)))
+    assert(executions === 5, "an append runs the checkpoint and one write per table")
+    assert(new java.io.File(s"$dir/sizes/e=2").isDirectory, "no epoch appended")
     val l = NeardupIndex.load(spark, dir)
     val cfg = NeardupIndex.Config()
     assert(l.sizes.select("doc_id").as[String].collect().sorted.toSeq === Seq("d1", "d2"))

@@ -14,7 +14,12 @@ import graft.streaming.CdcStream
   *   Replay run  <srcDir> <tableDir> <ckptDir> [queryId] [numBuckets] [maxFilesPerTrigger] [neardupIndexDir] [contamBenchDir]
   *   Replay show <tableDir> [n]
   *   Replay showAt <tableDir> <version> [n]   // time travel
+  *   Replay compact <tableDir> [purgeTombstonesBelowLsn]
+  *   Replay rebucket <tableDir> <numBuckets> [purgeTombstonesBelowLsn]
+  *   Replay truncate <tableDir>
+  *   Replay vacuum <tableDir> [keepSnapshots]
   *   Replay curate <tableDir> <outDir> [minQuality] [benchGramsDir] [neardupTheta] [redact]
+  *   Replay compactIndex <neardupIndexDir>
   *   Replay changes <tableDir> <fromVersion> <toVersion> [n]   // change-data-feed read
   *   Replay lineage <tableDir> <queryId>
   * }}}

@@ -524,34 +524,16 @@ object SimOps {
   private def bandPartCol: Column =
     pmod(xxhash64(col("bucket")), lit(neardupBandPartitions.toLong)).cast("int")
 
-  /** The four relational tables a persistable near-dup index consists of:
-    * `bands` (id, band, bucket, _p — see [[neardupBandPartitions]]), `shingles`
-    * (id, _s — distinct 64-bit shingle hashes), `sizes` (id, _sz —
-    * distinct-shingle count), and `counts` (band, bucket, _n — per-bucket
-    * membership counts, STORED at write time so the query-path bucket cap
-    * never re-aggregates the bands table). Together they let a NEW microbatch
+  /** The two relational tables a persistable near-dup index consists of:
+    * `bands` (id, band, bucket, _p — see [[neardupBandPartitions]]) and
+    * `shingles` (id, _s — distinct 64-bit shingle hashes). Everything else the
+    * query path needs — bucket membership counts for the cap, shingle-set
+    * sizes for the verify — it counts over the rows it already reads, so the
+    * index stores nothing it could derive. Together they let a NEW microbatch
     * find its near-dups against an already-ingested corpus WITHOUT re-shingling
     * it — the missing piece between the corpus-at-rest dedup family and this
     * engine's incremental CDC ingest. */
-  final case class NeardupIndexTables(bands: DataFrame, shingles: DataFrame,
-                                      sizes: DataFrame, counts: DataFrame)
-
-  object NeardupIndexTables {
-    /** The index over `bands` and `shingles`, with `sizes` (distinct shingles
-      * per id) and `counts` (members per band bucket) derived from them — so a
-      * caller that already holds the two base tables (e.g. just written) never
-      * recomputes them. */
-    def derive(bands: DataFrame, shingles: DataFrame, idCol: String): NeardupIndexTables =
-      NeardupIndexTables(bands, shingles, sizesOf(shingles, idCol), countsOf(bands))
-
-    /** `sizes`: distinct shingles per id. */
-    def sizesOf(shingles: DataFrame, idCol: String): DataFrame =
-      shingles.groupBy(idCol).agg(count(lit(1)).as("_sz"))
-
-    /** `counts`: members per band bucket. */
-    def countsOf(bands: DataFrame): DataFrame =
-      bands.groupBy("band", "bucket").agg(count(lit(1)).as("_n"))
-  }
+  final case class NeardupIndexTables(bands: DataFrame, shingles: DataFrame)
 
   /** Derive the index tables for a document set (one shingle pass, shared by
     * the band branch and the shingle-hash branch). */
@@ -568,7 +550,7 @@ object SimOps {
     // jaccard count — is unchanged barring ~n²/2^64 collision odds
     val dist = rows.select(col(idCol), xxhash64(col("_sh")).as("_s"))
       .dropDuplicates(idCol, "_s")
-    NeardupIndexTables.derive(bb, dist, idCol)
+    NeardupIndexTables(bb, dist)
   }
 
   /** Near-dup pairs of a NEW batch against an EXISTING index: the batch's band
@@ -582,19 +564,28 @@ object SimOps {
     * SCALE CONTRACT — batch ≪ index; nothing on the query path is
     * proportional to the index size except one pruned, shuffle-free columnar
     * scan of the slim bands table:
-    *  1. the bucket cap reads the STORED `counts` table (its one aggregation
-    *     runs over per-epoch partial counts — rows ∝ buckets touched, never
-    *     docs × bands) and only over-cap buckets survive to a broadcast
-    *     anti-join, so the round-4 full-bands `groupBy` is gone;
+    *  1. the bucket cap counts only the buckets the batch touches: the pruned
+    *     index bands scan is broadcast-semi-joined to the batch's distinct
+    *     (band, bucket) set and counted by a map-side partial aggregate, so
+    *     what shuffles is one partial count per touched bucket and task,
+    *     never an index row; only over-cap buckets survive to a broadcast
+    *     anti-join. (Not [[capBuckets]]' window, which would shuffle every
+    *     member of a degenerate bucket the batch touches.) Every row of one
+    *     bucket carries the same `_p`, so the pruned scan holds complete
+    *     counts, and rows are duplicate-free at rest, so they are the
+    *     bucket's true membership;
     *  2. the index bands scan is pruned to the `_p` bucket-hash partitions the
     *     batch's own buckets occupy (a driver-side distinct over the SMALL
     *     batch — at 16 partitions a single-doc probe reads ~1/16 of a
-    *     partitioned index layout) and then streams through two
-    *     BROADCAST joins (over-cap anti, batch-bands inner) — the index side
-    *     never shuffles;
+    *     partitioned index layout) and then streams through three
+    *     BROADCAST joins (touched-bucket semi, over-cap anti, batch-bands
+    *     inner) — the index side never shuffles;
     *  3. the shingle verify first narrows `idx.shingles` by a broadcast
     *     semi-join on candidate old_ids (map-side; no index shuffle), so only
-    *     candidates' shingles reach the join that computes intersections. */
+    *     candidates' shingles reach the join that computes intersections, and
+    *     each side's shingle-set size is a window count over those rows and
+    *     the batch's own (fewer exchanges than [[verifiedPairs]] over their
+    *     union, whose window is planned once per join side). */
   def incrementalPairsAgainst(idx: NeardupIndexTables, batch: DataFrame,
                               idCol: String, textCol: String,
                               shingleN: Int = 3, k: Int = 32, bands: Int = 8,
@@ -603,11 +594,6 @@ object SimOps {
     val b = neardupIndexTables(batch, idCol, textCol, shingleN, k, bands, rowsPerBand)
     val bBands = materialize(
       b.bands.select(col(idCol).as("new_id"), col("band"), col("bucket"), col("_p")))
-    // over-cap buckets only (small by construction: buckets holding > maxBucket
-    // members); global membership = sum of the stored per-epoch partials
-    val overCap = idx.counts.groupBy("band", "bucket")
-      .agg(sum(col("_n")).as("_n")).filter(col("_n") > maxBucket)
-      .select("band", "bucket")
     // prune the index scan to the batch's own bucket-hash partitions: equal
     // buckets imply equal _p, so the filter loses nothing, and on the
     // _p-partitioned lake layout it becomes static partition pruning
@@ -616,25 +602,28 @@ object SimOps {
       if (idx.bands.columns.contains("_p"))
         idx.bands.filter(col("_p").isin(batchParts: _*))
       else idx.bands
-    val bounded = idxBands0.select(col(idCol).as("old_id"), col("band"), col("bucket"))
-      .join(broadcast(overCap), Seq("band", "bucket"), "left_anti")
+    val idxBands = idxBands0.select(col(idCol).as("old_id"), col("band"), col("bucket"))
+    // over-cap buckets among those the batch touches (small by construction)
+    val overCap = idxBands
+      .join(broadcast(bBands.select("band", "bucket").distinct()), Seq("band", "bucket"),
+        "left_semi")
+      .groupBy("band", "bucket").agg(count(lit(1)).as("_n"))
+      .filter(col("_n") > maxBucket).select("band", "bucket")
+    val bounded = idxBands.join(broadcast(overCap), Seq("band", "bucket"), "left_anti")
     val pairs = materialize(bounded
       .join(broadcast(bBands.select("new_id", "band", "bucket")), Seq("band", "bucket"))
       .select("new_id", "old_id").distinct())
-    val oldIds = pairs.select("old_id").distinct()
-    // narrow the index shingles to candidates map-side before intersecting
-    val candShingles = idx.shingles.select(col(idCol).as("old_id"), col("_s"))
-      .join(broadcast(oldIds), Seq("old_id"), "left_semi")
-      .select(col("old_id").as("_oid"), col("_s").as("_s2"))
-    val common = pairs
-      .join(b.shingles.select(col(idCol).as("new_id"), col("_s")), "new_id")
+    // narrow the index shingles to candidates map-side before intersecting;
+    // each side's shingle-set size is a window count over its own rows
+    val candShingles = idx.shingles.select(col(idCol).as("_oid"), col("_s").as("_s2"))
+      .join(broadcast(pairs.select(col("old_id").as("_oid")).distinct()), Seq("_oid"),
+        "left_semi")
+      .withColumn("_szb", count(lit(1)).over(Window.partitionBy("_oid")))
+    val bSized = b.shingles.select(col(idCol).as("new_id"), col("_s"))
+      .withColumn("_sza", count(lit(1)).over(Window.partitionBy("new_id")))
+    pairs.join(bSized, "new_id")
       .join(candShingles, col("old_id") === col("_oid") && col("_s") === col("_s2"))
-      .groupBy("new_id", "old_id").agg(count(lit(1)).as("_common"))
-    val candSizes = idx.sizes.select(col(idCol).as("old_id"), col("_sz").as("_szb"))
-      .join(broadcast(oldIds), Seq("old_id"), "left_semi")
-    common
-      .join(b.sizes.select(col(idCol).as("new_id"), col("_sz").as("_sza")), "new_id")
-      .join(candSizes, "old_id")
+      .groupBy("new_id", "old_id", "_sza", "_szb").agg(count(lit(1)).as("_common"))
       .select(col("new_id"), col("old_id"),
         jaccardRatio(col("_common"), col("_sza"), col("_szb")).as("jaccard"))
   }

@@ -8,10 +8,9 @@ import graft.functions.SimOps
 import graft.sources.{LakeIO, NioLakeIO}
 
 /** Persisted near-dup index — the sibling-table pattern (`_lineage`,
-  * `_rejects`) applied to similarity. Four parquet tables under `dir`
-  * (`bands/`, `shingles/`, `sizes/`, `counts/`) hold the LSH band buckets,
-  * distinct 64-bit shingle hashes, per-doc shingle-set sizes and per-bucket
-  * membership counts of everything ingested so far, so each CDC microbatch can
+  * `_rejects`) applied to similarity. Two parquet tables under `dir`
+  * (`bands/`, `shingles/`) hold the LSH band buckets and distinct 64-bit
+  * shingle hashes of everything ingested so far, so each CDC microbatch can
   *
   *  1. find its near-dups against the WHOLE corpus without re-shingling it
   *     ([[batchPairs]] — an equi-join against the index's band buckets,
@@ -23,16 +22,17 @@ import graft.sources.{LakeIO, NioLakeIO}
   *     index (delete-only, all rejected) appends an empty epoch.
   *
   * EXACTLY-ONCE BY EPOCH-KEYED OVERWRITES: each append lands in a
-  * deterministic `e=<epoch>` subdirectory of all four tables with OVERWRITE
+  * deterministic `e=<epoch>` subdirectory of both tables with OVERWRITE
   * semantics, so a crash-redelivered microbatch (structured streaming replays
   * at most the last uncommitted epoch, under its original epoch id) rewrites
   * the same directories instead of duplicating rows — the `_contam`
   * per-epoch-overwrite pattern, applied to the index. Because rows are
   * duplicate-free AT REST, [[load]] is a pure scan+union: no full-index
-  * `distinct()`, no per-batch size re-aggregation (sizes are STORED at write
-  * time) — per-batch index-read cost is O(files touched), independent of how
-  * many documents the index holds (StreamSpec pins the aggregate-free read
-  * plan).
+  * `distinct()` — per-batch index-read cost is O(files touched), independent
+  * of how many documents the index holds (StreamSpec pins the aggregate-free
+  * read plan). Nothing derivable is stored: the query path counts bucket
+  * members and shingle-set sizes over the rows it reads anyway (see
+  * [[SimOps.incrementalPairsAgainst]]).
   *
   * UPDATE semantics: the stream stamps ids as `conv#turn#lsn`, so an updated
   * turn indexes as a NEW document and the superseded version remains listed —
@@ -64,17 +64,16 @@ import graft.sources.{LakeIO, NioLakeIO}
   * Hadoop FileSystem for object stores) — same abstraction as the lake
   * manifests.
   *
-  * Scale notes (round 5 layout): `bands/` is partitioned by `_p` — the
-  * bucket-hash range `pmod(xxhash64(bucket), 16)` — within each epoch and
-  * each compacted generation, so a batch probe statically prunes its index
-  * scan to the partitions its own buckets occupy; and per-bucket membership
-  * counts are a fourth sibling table (`counts/`, maintained at append and
-  * SUMMED at compaction), so the query-path bucket cap reads stored partials
-  * (rows ∝ buckets touched) instead of re-aggregating the full bands table.
-  * With [[SimOps.incrementalPairsAgainst]]'s broadcast-join shape the index
-  * side never shuffles at query time; the only per-query term that grows with
-  * the index is the pruned columnar scan of the slim (id, band, bucket)
-  * partitions themselves.
+  * Scale notes: `bands/` is partitioned by `_p` — the bucket-hash range
+  * `pmod(xxhash64(bucket), 16)` — within each epoch and each compacted
+  * generation, so a batch probe statically prunes its index scan to the
+  * partitions its own buckets occupy. All rows of one bucket share one `_p`,
+  * so the query-path bucket cap counts complete buckets over that pruned scan
+  * (only the buckets the batch touches; a map-side partial count, never a
+  * full-bands aggregate). With [[SimOps.incrementalPairsAgainst]]'s
+  * broadcast-join shape the index side never shuffles at query time; the only
+  * per-query term that grows with the index is the pruned columnar scan of the
+  * slim (id, band, bucket) partitions themselves.
   */
 object NeardupIndex {
 
@@ -82,7 +81,7 @@ object NeardupIndex {
                           shingleN: Int = 3, k: Int = 32, bands: Int = 8,
                           rowsPerBand: Int = 4, maxBucket: Int = 200)
 
-  private val tableNames = Seq("bands", "shingles", "sizes", "counts")
+  private val tableNames = Seq("bands", "shingles")
 
   private final case class Ledger(gen: Long, compactedThrough: Long)
   private val emptyLedger = Ledger(-1L, -1L)
@@ -107,7 +106,7 @@ object NeardupIndex {
     io.replaceStringAtomic(ledgerPath(dir),
       s"""{"gen":${l.gen},"compactedThrough":${l.compactedThrough}}""")
 
-  /** Epoch numbers present on disk — the UNION across all four tables, so a
+  /** Epoch numbers present on disk — the UNION across both tables, so a
     * partially-deleted epoch (crash mid-GC) is still seen and re-collected. */
   private def liveEpochs(io: LakeIO, dir: String): Seq[Long] =
     tableNames.flatMap { t =>
@@ -127,16 +126,14 @@ object NeardupIndex {
     val (band, bucket) = (StructField("band", IntegerType), StructField("bucket", LongType))
     Map(
       "bands" -> StructType(Seq(id, band, bucket, StructField("_p", IntegerType))),
-      "shingles" -> StructType(Seq(id, StructField("_s", LongType))),
-      "sizes" -> StructType(Seq(id, StructField("_sz", LongType))),
-      "counts" -> StructType(Seq(band, bucket, StructField("_n", LongType))))
+      "shingles" -> StructType(Seq(id, StructField("_s", LongType))))
   }
 
   /** Reads the index's tables with their fixed schemas. The id field comes
-    * from `sizes` under `idFrom`: not partitioned, so every append writes a
+    * from `shingles` under `idFrom`: not partitioned, so every append writes a
     * file there, empty or not. */
   private final class Tables(spark: SparkSession, dir: String, idFrom: String) {
-    private val schema = schemas(spark.read.parquet(s"$idFrom/sizes").schema.head)
+    private val schema = schemas(spark.read.parquet(s"$idFrom/shingles").schema.head)
     /** All per-epoch directories of `name`, with their `e` column. */
     def epochs(name: String): DataFrame =
       spark.read.schema(schema(name).add("e", LongType)).parquet(s"$dir/$name")
@@ -168,31 +165,13 @@ object NeardupIndex {
       (liveEpochs(io, dir) :+ led.compactedThrough :+ -1L).max + 1)
     val t = SimOps.neardupIndexTables(docs, cfg.idCol, cfg.textCol,
       cfg.shingleN, cfg.k, cfg.bands, cfg.rowsPerBand)
-    // each table computed ONCE: `counts` and `sizes` derive from the band rows
-    // and shingle hashes just written, read back, instead of re-running the
-    // MinHash aggregate and the shingle distinct. Persisting the two would
-    // save the same work, but a cached plan is planned without AQE's
-    // partition coalescing, so the bands and shingles writes would land in
-    // several times more files. The read-back carries the written schemas: a
-    // batch with no tokens writes no band file, and must read back empty.
-    // The two chains, bands → counts and shingles → sizes, share only the
-    // shingle rows `neardupIndexTables` already materialized, so they run
-    // concurrently.
+    // the two writes share only the shingle rows `neardupIndexTables` already
+    // materialized, so they run concurrently
     val spark = docs.sparkSession
     def path(name: String) = s"$dir/$name/e=$e"
-    def readBack(name: String, written: DataFrame) =
-      spark.read.schema(written.schema).parquet(path(name))
     SideWrites.runAll(spark,
-      () => {
-        t.bands.write.mode("overwrite").partitionBy("_p").parquet(path("bands"))
-        SimOps.NeardupIndexTables.countsOf(readBack("bands", t.bands))
-          .write.mode("overwrite").parquet(path("counts"))
-      },
-      () => {
-        t.shingles.write.mode("overwrite").parquet(path("shingles"))
-        SimOps.NeardupIndexTables.sizesOf(readBack("shingles", t.shingles), cfg.idCol)
-          .write.mode("overwrite").parquet(path("sizes"))
-      })
+      () => t.bands.write.mode("overwrite").partitionBy("_p").parquet(path("bands")),
+      () => t.shingles.write.mode("overwrite").parquet(path("shingles")))
     refresh(spark, dir)
   }
 
@@ -200,11 +179,11 @@ object NeardupIndex {
     * compaction GC replaces files in place, and a session-cached InMemoryFileIndex
     * would otherwise serve the deleted paths (FAILED_READ_FILE on next query). */
   private def refresh(spark: SparkSession, dir: String): Unit =
-    spark.catalog.refreshByPath(dir) // prefix-invalidates all four tables + gens
+    spark.catalog.refreshByPath(dir) // prefix-invalidates both tables + gens
 
   /** Load the logical index: current compacted generation ∪ epochs above the
     * ledger mark. A pure scan — no distinct, no aggregation (duplicate-freedom
-    * is a WRITE-side invariant; sizes are stored, not derived). */
+    * is a WRITE-side invariant). */
   def load(spark: SparkSession, dir: String,
            io: LakeIO = NioLakeIO): SimOps.NeardupIndexTables = {
     val led = readLedger(io, dir)
@@ -220,10 +199,7 @@ object NeardupIndex {
       val comp = if (led.gen >= 0) Some(tables.generation(led.gen, name)) else None
       (live.toSeq ++ comp.toSeq).reduce(_.unionByName(_))
     }
-    // counts carries PER-EPOCH partials; the query path sums them (rows ∝
-    // buckets touched, never docs × bands — compaction folds them exactly)
-    SimOps.NeardupIndexTables(table("bands"), table("shingles"), table("sizes"),
-      table("counts"))
+    SimOps.NeardupIndexTables(table("bands"), table("shingles"))
   }
 
   /** Near-dup pairs (new_id, old_id, jaccard) of `batch` against the persisted
@@ -253,25 +229,18 @@ object NeardupIndex {
     else {
       val newGen = led.gen + 1
       val tables = new Tables(spark, dir, dir)
-      def mergedRaw(name: String): DataFrame = {
-        val fold = tables.epochs(name).filter(col("e").isin(foldable: _*)).drop("e")
-        val prev = if (led.gen >= 0) Some(tables.generation(led.gen, name)) else None
-        (fold +: prev.toSeq).reduce(_.unionByName(_))
-      }
       // distinct is belt-and-braces (epochs are id-disjoint by contract);
       // it runs HERE, offline at compaction, not per batch query
-      def merged(name: String): DataFrame = mergedRaw(name).distinct()
+      def merged(name: String): DataFrame = {
+        val fold = tables.epochs(name).filter(col("e").isin(foldable: _*)).drop("e")
+        val prev = if (led.gen >= 0) Some(tables.generation(led.gen, name)) else None
+        (fold +: prev.toSeq).reduce(_.unionByName(_)).distinct()
+      }
       val out = s"$dir/compacted/g=$newGen"
-      // one file per partition / one file per table: bounding counts is the point
+      // one file per partition / one file per table: bounding file counts is the point
       merged("bands").repartition(1, col("_p")).write.mode("overwrite")
         .partitionBy("_p").parquet(s"$out/bands")
       merged("shingles").coalesce(1).write.mode("overwrite").parquet(s"$out/shingles")
-      merged("sizes").coalesce(1).write.mode("overwrite").parquet(s"$out/sizes")
-      // counts fold by SUM (per-epoch partials), not distinct — this offline
-      // aggregation is what keeps the per-batch query path aggregation-light
-      mergedRaw("counts").groupBy("band", "bucket")
-        .agg(sum(col("_n")).as("_n"))
-        .coalesce(1).write.mode("overwrite").parquet(s"$out/counts")
       val committed = Ledger(newGen,
         (foldable :+ led.compactedThrough).max)
       writeLedger(io, dir, committed) // the commit point (atomic rename)
@@ -285,9 +254,8 @@ object NeardupIndex {
     * and non-current generations. Pure garbage collection — a crash that
     * skips it leaves dirs [[load]] already ignores, re-collected next time. */
   private def gc(io: LakeIO, dir: String, led: Ledger): Unit = {
-    // snapshot the epoch list BEFORE deleting: liveEpochs lists the bands dir,
-    // and deleting bands/e=* first would hide those epochs from the
-    // shingles/sizes delete passes
+    // snapshot the epoch list BEFORE deleting: liveEpochs lists both tables,
+    // so an epoch a crashed GC left in only one of them is still collected
     val stale = liveEpochs(io, dir).filter(_ <= led.compactedThrough)
     for (t <- tableNames; e <- stale)
       io.deleteRecursively(s"$dir/$t/e=$e")

@@ -409,17 +409,29 @@ object SimOps {
       val selfRows = labels.select(col("_id"), col("_lbl").as("_nl"),
         lit(true).as("_self"))
       // the per-round convergence signal rides the MATERIALIZATION action via
-      // observe() — no extra job per round; observedOrScan falls back to one
-      // cheap scan of the checkpointed frame if the runtime withheld metrics
+      // observe() — no extra job per round; observedMetrics falls back to one
+      // cheap scan of the checkpointed frame if the runtime withheld metrics.
+      // A null id seeds a null _lbl, and _new < null is null: the node would
+      // count as unchanged and come out unlabelled, so the same action counts
+      // null labels and any one fails the run
+      val signals = Seq(
+        coalesce(sum(when(col("_new") < col("_lbl"), 1L).otherwise(0L)), lit(0L))
+          .as("changed"),
+        coalesce(sum(when(col("_lbl").isNull, 1L).otherwise(0L)), lit(0L))
+          .as("null_labels"))
       val obs = Observation()
       val step = materialize(viaNbr.unionByName(selfRows)
         .groupBy("_id").agg(min("_nl").as("_new"),
           max(when(col("_self"), col("_nl"))).as("_lbl"))
-        .observe(obs, coalesce(sum(when(col("_new") < col("_lbl"), 1L)
-          .otherwise(0L)), lit(0L)).as("changed")))
-      changed = observedMetrics(obs, "changed").map(_.head).getOrElse(
-        step.agg(coalesce(sum(when(col("_new") < col("_lbl"), 1L)
-          .otherwise(0L)), lit(0L))).head().getLong(0))
+        .observe(obs, signals.head, signals.tail: _*))
+      val Seq(nChanged, nullLabels) = observedMetrics(obs, "changed", "null_labels")
+        .getOrElse {
+          val r = step.agg(signals.head, signals.tail: _*).head(); Seq(r.getLong(0), r.getLong(1))
+        }
+      if (nullLabels > 0)
+        throw new IllegalStateException(s"connectedComponents: $nullLabels node(s) " +
+          s"got a null label in round ${iter + 1}; the pairs hold a null id")
+      changed = nChanged
       labels = step.select(col("_id"), col("_new").as("_lbl"))
       iter += 1
     }

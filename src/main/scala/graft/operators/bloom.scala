@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
   * before they reach the semi-join's shuffle or probe its hash table.
   *
   * The broadcast-set screen the engine already uses (decontamination,
-  * cow-merge key pruning) ships the full distinct key set to every executor —
+  * near-dup band pruning) ships the full distinct key set to every executor —
   * O(|keys|) broadcast bytes. A Bloom bitmap is FIXED-WIDTH: `mBits` bits
   * regardless of key count, with a false-positive rate ~(1-e^(-k·n/m))^k the
   * caller sizes via `mBits`. At 100 TB the dim side's keys may be far too many

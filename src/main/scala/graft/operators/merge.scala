@@ -6,7 +6,7 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.Schemas
 import graft.plans.SchemaEvolution
-import graft.sources.{FileEntry, LakeTable}
+import graft.sources.LakeTable
 
 /** One applied (or skipped) microbatch. */
 final case class BatchResult(
@@ -16,13 +16,13 @@ final case class BatchResult(
     deletes: Long,
     conflicts: Long,
     rejects: Long,
-    bucketsRewritten: Int
+    bucketsTouched: Int
 )
 
 /** The MERGE-apply heart of the engine: per microbatch —
   * validate → dedup (LWW by max LSN, salted under skew) → evolve schema →
-  * merge (merge-on-read by default: append the batch winners, readers resolve;
-  * or copy-on-write of only the touched buckets) → lineage → atomic commit.
+  * merge (merge-on-read: append the batch winners, readers resolve) → lineage →
+  * atomic commit.
   *
   * Reference semantics being reproduced (SURVEY.md §2.1 S8, §7.2):
   *  - staged rows merged with insert/update/logical-delete resolution in one pass
@@ -34,11 +34,10 @@ final case class BatchResult(
   *  - post-apply verification counts → per-bucket lineage rows
   *    (reference dest/I2b2QueryResultsHandler.java:705-837).
   *
-  * Scale design: the target side is NEVER shuffled — merge-on-read does not
-  * read it, and copy-on-write takes survivors from a file-pruned scan of touched
-  * buckets anti-joined against the (usually broadcast) batch key set; only the
-  * written data moves, partitioned by bucket. The batch side is reduced map-side
-  * by the aggregate-based dedup before any shuffle.
+  * Scale design: the target side is NEVER read — only the written data moves,
+  * partitioned by bucket, and `Maintain.compact` folds the appended versions
+  * back to one row per key. The batch side is reduced map-side by the
+  * aggregate-based dedup before any shuffle.
   */
 object CdcMerge {
 
@@ -63,9 +62,8 @@ object CdcMerge {
   private def payloadSchema(physical: org.apache.spark.sql.types.StructType) =
     org.apache.spark.sql.types.StructType(physical.fields.filterNot(f => sysCols.contains(f.name)))
 
-  /** LWW-resolve raw lake rows: one row per key, max `_lsn` wins. Under
-    * merge-on-read a key may have one version per appended file; under
-    * copy-on-write this is a semantic no-op. */
+  /** LWW-resolve raw lake rows: one row per key, max `_lsn` wins. A key may
+    * have one version per appended file until `Maintain.compact` folds them. */
   def resolve(raw: DataFrame): DataFrame =
     Dedup.lww(raw, Schemas.keyCols, "_lsn").drop("n_events", "_lsn_min")
 
@@ -120,8 +118,6 @@ object CdcMerge {
   val skewSampleEvery: Int = 8
   /** Salt width of the hot-key dedup. */
   private val saltBuckets: Int = 16
-  /** Largest batch key set the cow merge broadcasts. */
-  private val broadcastKeyLimit: Long = 1000000L
   private val skewCache =
     new java.util.concurrent.ConcurrentHashMap[String, (Long, Double)]()
 
@@ -139,11 +135,9 @@ object CdcMerge {
       epochId: Long,
       queryId: String,
       saltThreshold: Double = 0.2,
-      mode: String = "mor", // "mor" (append winners, resolve on read) | "cow"
       knownRoles: Option[Seq[String]] = None, // P6 concept-existence guard
       sideWrites: Seq[() => Unit] = Nil
   ): BatchResult = {
-    require(mode == "mor" || mode == "cow", s"unknown merge mode: $mode")
     val spark = table.spark
     // 1. Exactly-once: skip epochs already in the committed ledger (foreachBatch may
     //    redeliver a batch after crash-restart; the checkpoint replays it, we no-op).
@@ -260,7 +254,6 @@ object CdcMerge {
         return BatchResult(epochId, applied = true, 0, 0, 0, nRejects, 0)
       }
 
-      val touched = stats.map(_.getInt(0)).toSet
       val keysTouched = stats.map(_.getLong(3)).sum
       val deletes = stats.map(_.getLong(4)).sum
       val conflicts = stats.map(_.getLong(5)).sum
@@ -269,56 +262,32 @@ object CdcMerge {
       //    deletes persist as tombstones, so an out-of-order older upsert can never
       //    clobber or resurrect a key.
       //
-      //    mode="mor" (merge-on-read, the streaming-ingest default): ONLY the batch
-      //    winners are appended — no target read, no write amplification; readers
-      //    resolve max-_lsn per key (Iceberg MoR analog; reference analog: the
-      //    append-on-update flag, dest/I2b2QueryResultsHandler.java:678).
-      //    Maintain.compact folds versions back to one row per key. A bucket's
-      //    appended rows are its `rows_applied`, so the stats give the new
-      //    files' row counts.
-      //
-      //    mode="cow" (copy-on-write): touched buckets are rewritten fully
-      //    resolved — unmatched old rows pass through an anti-join against the
-      //    (usually broadcast) batch key set so the target side is never shuffled;
-      //    matched rows re-enter the LWW aggregation with the batch winners.
-      //
-      //    Either way the rows go to LakeTable.writeDataFiles, which buckets
-      //    them and shuffles them to their writing tasks.
+      //    Merge-on-read: ONLY the batch winners are appended — no target read,
+      //    no write amplification; readers resolve max-_lsn per key (Iceberg MoR
+      //    analog; reference analog: the append-on-update flag,
+      //    dest/I2b2QueryResultsHandler.java:678). Maintain.compact folds
+      //    versions back to one row per key. A bucket's appended rows are its
+      //    `rows_applied`, so the stats give the new files' row counts.
+      //    LakeTable.writeDataFiles buckets the rows and shuffles them to their
+      //    writing tasks.
       val changePhysical = LakeTable.align(
         changes.withColumn("_lsn", col("lsn"))
           .withColumn("_deleted", col("op") === "D"),
         evolved)
-      val (merged, kept, bucketRows) = mode match {
-        case "mor" =>
-          (changePhysical, snap.files, stats.map(r => r.getInt(0) -> r.getLong(3)).toMap)
-        case "cow" =>
-          val old = LakeTable.align(table.readBuckets(touched), evolved)
-          val keys = changes.select(Schemas.keyCols.map(col): _*)
-          val keyedKeys = if (keysTouched <= broadcastKeyLimit) broadcast(keys) else keys
-          val untouchedRows = old.join(keyedKeys, Schemas.keyCols, "left_anti")
-          val matchedOld = old.join(keyedKeys, Schemas.keyCols, "left_semi")
-          val winners = Dedup.lww(matchedOld.unionByName(changePhysical),
-              Schemas.keyCols, "_lsn")
-            .drop("n_events", "_lsn_min")
-          (untouchedRows.unionByName(winners),
-            snap.files.filterNot(f => touched.contains(f.bucket)), Map.empty[Int, Long])
-      }
-
-      val newFiles = table.writeDataFiles(merged, snap.version + 1, schemaId,
-        bucketRows = bucketRows)
+      val newFiles = table.writeDataFiles(changePhysical, snap.version + 1, schemaId,
+        bucketRows = stats.map(r => r.getInt(0) -> r.getLong(3)).toMap)
 
       // 7. Atomic snapshot commit carrying the epoch ledger — once every
       //    side write and stats-only write has landed.
       side.await()
-      table.commit(kept ++ newFiles, schemas, schemaId,
+      table.commit(snap.files ++ newFiles, schemas, schemaId,
         snap.applied + (queryId -> epochId),
-        Map("graft.operation" -> "merge", "graft.mode" -> mode,
-            "graft.epoch" -> epochId.toString,
+        Map("graft.operation" -> "merge", "graft.epoch" -> epochId.toString,
             "graft.query" -> queryId, "graft.hotKeyShare" -> f"$hotShare%.3f",
             "graft.salted" -> (hotShare >= saltThreshold).toString))
 
       BatchResult(epochId, applied = true, keysTouched, deletes, conflicts, nRejects,
-        touched.size)
+        stats.length)
     } finally {
       side.drain()
       changes.unpersist()

@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.annotation.nowarn
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, StreamingQueryListener, Trigger}
 import org.apache.spark.sql.types.StructType
@@ -24,6 +26,7 @@ import graft.sources.LakeTable
   */
 object CdcStream {
 
+  @nowarn("cat=deprecation") // the synthetic members read mergeMode
   final case class Config(
       sourceDir: String,
       tableDir: String,
@@ -40,6 +43,8 @@ object CdcStream {
       availableNow: Boolean = true,
       processingTimeMs: Long = 1000L,
       maxFilesPerTrigger: Option[Int] = None,
+      // merge-on-read is the only merge; any other value fails `start`
+      @deprecated("merge-on-read is the only merge mode; omit mergeMode", "0.1.0")
       mergeMode: String = "mor",
       knownRoles: Option[Seq[String]] = None, // P6 guard (see CdcMerge.rejectReason)
       // maintain a near-dup LSH index of ingested turn texts (see NeardupIndex):
@@ -67,6 +72,9 @@ object CdcStream {
     // killing the stream mid-replay instead of failing at start.
     cfg.neardupCompactEvery.foreach(n => require(n > 0,
       s"neardupCompactEvery must be positive, got $n (omit it for manual-only compaction)"))
+    @nowarn("cat=deprecation") val mergeMode = cfg.mergeMode
+    require(mergeMode == "mor",
+      s"mergeMode '$mergeMode' is not supported: merge-on-read (\"mor\") is the only merge")
     // Bootstrap the target before streaming so every batch sees a table.
     LakeTable.loadOrCreate(spark, cfg.tableDir,
       CdcMerge.physicalSchema(Schemas.payloadOf(cfg.schema)), cfg.numBuckets)
@@ -95,7 +103,7 @@ object CdcStream {
         val table = LakeTable.loadOrCreate(
           batch.sparkSession, cfg.tableDir,
           CdcMerge.physicalSchema(Schemas.payloadOf(batch.schema)), cfg.numBuckets)
-        CdcMerge.applyBatch(table, batch, epochId, cfg.queryId, mode = cfg.mergeMode,
+        CdcMerge.applyBatch(table, batch, epochId, cfg.queryId,
           knownRoles = cfg.knownRoles, sideWrites = sideWrites(cfg, batch, epochId, benchGrams))
         ()
       }

@@ -198,45 +198,45 @@ class CdcMergeSpec extends SparkSpec {
     assert(r.conflicts === 5000L - r.keysTouched)
   }
 
-  test("cow merge only rewrites touched buckets; untouched files are carried forward") {
-    val t = freshTable("cow", buckets = 32)
-    val e0 = ChangeGen.events(spark, 5000L, numConvs = 200, maxTurns = 10, pDelete = 0.0)
-    CdcMerge.applyBatch(t, e0, 0L, "q", mode = "cow")
-    val filesBefore = t.snapshot.files.map(f => f.path -> f.bucket).toMap
-    // second batch touching a single conversation → a single bucket
-    val e1 = ChangeGen.events(spark, 50L, numConvs = 1, maxTurns = 10, pDelete = 0.0,
-      lsnStart = 10000L)
-    val r = CdcMerge.applyBatch(t, e1, 1L, "q", mode = "cow")
-    assert(r.bucketsRewritten === 1)
-    val filesAfter = t.snapshot.files
-    val untouchedBefore = filesBefore.filter { case (_, b) => !e1Buckets(t, e1).contains(b) }
-    untouchedBefore.keys.foreach { p =>
-      assert(filesAfter.exists(_.path == p), s"untouched file $p must be carried forward")
-    }
+  test("a merge never reads the target: no executed plan scans the table's data files") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val t = freshTable("noread")
+    val e0 = ChangeGen.events(spark, 2000L, numConvs = 40, maxTurns = 8, pDelete = 0.1)
+    assert(CdcMerge.applyBatch(t, e0, 0L, "q").applied && t.snapshot.files.nonEmpty)
+    // the batch comes from parquet, so the merge's plans do hold a file scan
+    val src = tmpDir("noread-src")
+    ChangeGen.events(spark, 500L, numConvs = 40, maxTurns = 8, pDelete = 0.1,
+      seed = 3L, lsnStart = 5000L).write.mode("overwrite").parquet(src)
+    val e1 = spark.read.parquet(src)
+    def scanned(plans: Seq[org.apache.spark.sql.execution.SparkPlan]): Seq[String] =
+      plans.flatMap(planNodes).collect { case s: FileSourceScanExec => s }
+        .flatMap(_.relation.location.rootPaths.map(_.toUri.getPath))
+    val dataDir = s"${new java.io.File(t.dir).getCanonicalPath}/data/"
+    val (r, plans) = executedPlans(CdcMerge.applyBatch(t, e1, 1L, "q"))
+    assert(r.applied)
+    val paths = scanned(plans)
+    assert(paths.exists(_.startsWith(new java.io.File(src).getCanonicalPath)),
+      s"the batch's scan was not seen: $paths")
+    assert(!paths.exists(_.startsWith(dataDir)), s"the merge read target files: $paths")
+    // the same probe does see a read of the target
+    val (_, reads) = executedPlans(CdcMerge.state(t).count())
+    assert(scanned(reads).exists(_.startsWith(dataDir)))
     assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(e0.unionByName(e1))).isEmpty)
   }
 
-  test("mor and cow modes produce identical user-visible state") {
-    val evs = (0 until 3).map { e =>
-      ChangeGen.events(spark, 2000L, numConvs = 30, maxTurns = 6, pDelete = 0.15,
-        seed = 7L + e, lsnStart = e * 2000L)
-    }
-    val states = Seq("mor", "cow").map { mode =>
-      val t = freshTable(s"mode-$mode")
-      evs.zipWithIndex.foreach { case (ev, e) =>
-        CdcMerge.applyBatch(t, ev, e.toLong, "q", mode = mode)
-      }
-      CdcMerge.state(t).orderBy("conv_id", "turn_idx").collect().toSeq
-    }
-    assert(states(0) === states(1))
-    // and both equal the oracle
-    val t2 = freshTable("mode-oracle")
-    evs.zipWithIndex.foreach { case (ev, e) => CdcMerge.applyBatch(t2, ev, e.toLong, "q") }
-    assert(Oracle.diff(CdcMerge.state(t2),
-      Oracle.expectedState(evs.reduce(_.unionByName(_)))).isEmpty)
+  test("CdcStream.start rejects a merge mode other than mor before any query starts") {
+    import graft.streaming.CdcStream
+    val dir = tmpDir("mergemode")
+    val src = s"$dir/src"
+    ChangeGen.events(spark, 100L, numConvs = 5, maxTurns = 4).write.parquet(s"$src/e0")
+    val ckpt = s"$dir/ckpt"
+    val active = spark.streams.active.length
+    val cfg = CdcStream.Config(sourceDir = src, tableDir = s"$dir/table",
+      checkpointDir = ckpt, queryId = "mm", mergeMode = "cow")
+    val e = intercept[IllegalArgumentException](CdcStream.start(spark, cfg))
+    assert(e.getMessage.contains("mergeMode"), e.getMessage)
+    assert(spark.streams.active.length === active)
+    assert(!new java.io.File(s"$ckpt/offsets").exists(), "the rejected stream wrote offsets")
+    assert(!new java.io.File(s"$dir/table").exists(), "the rejected stream created the table")
   }
-
-  private def e1Buckets(t: LakeTable, df: org.apache.spark.sql.DataFrame): Set[Int] =
-    df.select(LakeTable.bucketCol(col("conv_id"), t.numBuckets).as("b"))
-      .distinct().collect().map(_.getInt(0)).toSet
 }

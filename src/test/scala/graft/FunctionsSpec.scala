@@ -270,6 +270,17 @@ class FunctionsSpec extends SparkSpec {
     assert(viaStar === viaFallback)
   }
 
+  test("connected components fails loudly on a null label instead of a silent null group") {
+    import spark.implicits._
+    // a (null, null) pair seeds a null label: _new < _lbl is null, so the
+    // node would count as unchanged and come out as a (null, null) row
+    val pairs = Seq((Some(1L), Some(2L)), (None, None))
+      .toDF("left_id", "right_id")
+    val e = intercept[IllegalStateException](
+      SimOps.connectedComponents(pairs, "left_id", "right_id").collect())
+    assert(e.getMessage.contains("null label"), e.getMessage)
+  }
+
   test("components fixpoint checks are cheap: convergence signals ride the per-round action") {
     import spark.implicits._
     // count SQL EXECUTIONS (actions) during a propagate-loop run. The

@@ -81,11 +81,12 @@ class LakeIoSpec extends SparkSpec {
     (0 until 4).foreach { e =>
       val ev = ChangeGen.events(spark, 500L, numConvs = 10, maxTurns = 5,
         seed = e.toLong, lsnStart = e * 500L)
-      CdcMerge.applyBatch(t, ev, e.toLong, "q", mode = "cow")
+      CdcMerge.applyBatch(t, ev, e.toLong, "q")
     }
+    graft.operators.Maintain.compact(t)
     val before = CdcMerge.state(t).orderBy("conv_id", "turn_idx").collect().toSeq
     val removed = graft.operators.Maintain.vacuum(t, keepSnapshots = 1)
-    assert(removed > 0) // cow rewrites leave superseded files to GC
+    assert(removed > 0) // compaction leaves the merges' appended files to GC
     assert(CdcMerge.state(t).orderBy("conv_id", "turn_idx").collect().toSeq === before)
   }
 

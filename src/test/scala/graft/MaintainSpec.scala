@@ -31,7 +31,7 @@ class MaintainSpec extends SparkSpec {
     }
   }
 
-  test("file layout: merge (mor, cow), deleteWhere, compact and rebucket file rows by bucket") {
+  test("file layout: merges, deleteWhere, compact and rebucket file rows by bucket") {
     val t = LakeTable.create(spark, tmpDir("layout"),
       CdcMerge.physicalSchema(Schemas.transcript), 8)
     // each write files one bucket per file: the files of one version carry
@@ -56,7 +56,7 @@ class MaintainSpec extends SparkSpec {
     check()
     val e1 = ChangeGen.events(spark, 300L, numConvs = 30, maxTurns = 6, pDelete = 0.1,
       seed = 5L, lsnStart = 5000L)
-    assert(CdcMerge.applyBatch(t, e1, 1L, "q", mode = "cow").applied)
+    assert(CdcMerge.applyBatch(t, e1, 1L, "q").applied)
     check()
     val victim = CdcMerge.state(t).select("conv_id").head().getString(0)
     assert(Maintain.deleteWhere(t, col("conv_id") === victim) > 0L)
@@ -95,11 +95,11 @@ class MaintainSpec extends SparkSpec {
         .filter(LakeTable.bucketCol(col("conv_id"), 32) =!= f.bucket).count()
       assert(bad === 0L, s"file ${f.path} holds rows outside bucket ${f.bucket}")
     }
-    // a cow merge after rebucketing prunes on the new layout and stays correct
+    // a merge after rebucketing files its rows on the new layout and stays correct
     val ev2 = ChangeGen.events(spark, 200L, numConvs = 2, maxTurns = 6,
       pDelete = 0.0, seed = 9L, lsnStart = 10000L)
-    val r = CdcMerge.applyBatch(t, ev2, 1L, "q", mode = "cow")
-    assert(r.applied && r.bucketsRewritten <= 2) // ≤ numConvs distinct buckets
+    val r = CdcMerge.applyBatch(t, ev2, 1L, "q")
+    assert(r.applied && r.bucketsTouched <= 2) // ≤ numConvs distinct buckets
     assert(Oracle.diff(CdcMerge.state(t),
       Oracle.expectedState(ev.unionByName(ev2))).isEmpty)
   }

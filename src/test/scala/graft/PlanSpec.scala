@@ -5,8 +5,8 @@ import org.apache.spark.sql.functions._
 
 /** Physical-plan assertions: the optimizations we rely on at 100 TB must actually
   * appear in the plan — filter/column pushdown to the parquet scan, broadcast for
-  * small dimensions, map-side partial aggregation for the LWW dedup, and no
-  * target-side shuffle in the cow merge. */
+  * small dimensions, and map-side partial aggregation for the LWW dedup. That
+  * the merge never reads its target is pinned in CdcMergeSpec. */
 class PlanSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"

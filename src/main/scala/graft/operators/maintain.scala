@@ -99,23 +99,18 @@ object Maintain {
     * snapshots stay listed in history but their vacuumed segments read as
     * empty. Returns deleted file count (data + segment manifests). */
   def vacuum(table: LakeTable, keepSnapshots: Int = 3): Int = {
-    val history = LakeTable.history(table.dir, table.io)
-    val kept = history.takeRight(keepSnapshots)
+    val fs = table.fs
+    val kept = LakeTable.newest(table.dir, keepSnapshots, fs)
     val live = kept.flatMap(_.files.map(_.path)).toSet
-    var n = 0
     val dataDir = s"${table.dir}/data"
-    if (table.io.isDirectory(dataDir))
-      table.io.listDir(dataDir).foreach { p =>
-        val rel = s"data/${p.split('/').last}"
-        if (!live.contains(rel)) { table.io.delete(p); n += 1 }
-      }
+    val data = if (fs.isDirectory(dataDir)) fs.list(dataDir).map(_.getPath) else Nil
     val liveSegs = kept.flatMap(_.segments.toList.flatten.map(_.path)).toSet
-    table.io.listDir(s"${table.dir}/_manifests").foreach { p =>
-      val name = p.split('/').last
-      if (name.startsWith("seg_") && !liveSegs.contains(name)) {
-        table.io.delete(p); n += 1
-      }
-    }
-    n
+    // listings leave out `.crc` sidecars and a delete removes a file's own:
+    // the count is data files and segment manifests
+    val dead = data.filterNot(p => live.contains(s"data/${p.getName}")) ++
+      fs.list(s"${table.dir}/_manifests").map(_.getPath)
+        .filter(p => p.getName.startsWith("seg_") && !liveSegs.contains(p.getName))
+    dead.foreach(p => fs.delete(p.toString))
+    dead.size
   }
 }

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.functions.SimOps
-import graft.sources.{LakeIO, NioLakeIO}
+import graft.sources.HadoopLakeIO
 
 /** Persisted near-dup index — the sibling-table pattern (`_lineage`,
   * `_rejects`) applied to similarity. Two parquet tables under `dir`
@@ -60,9 +60,9 @@ import graft.sources.{LakeIO, NioLakeIO}
   * guaranteed, reader isolation during compaction is not (take the index
   * offline or retry failed queries around compaction windows).
   *
-  * All driver-side file ops go through [[LakeIO]] (local nio by default,
-  * Hadoop FileSystem for object stores) — same abstraction as the lake
-  * manifests.
+  * Driver-side file ops (the ledger, epoch listing, GC) go through
+  * [[HadoopLakeIO]]: the Hadoop FileSystem of the index's path, which Spark
+  * writes the index tables through — as for the lake manifests.
   *
   * Scale notes: `bands/` is partitioned by `_p` — the bucket-hash range
   * `pmod(xxhash64(bucket), 16)` — within each epoch and each compacted
@@ -88,10 +88,8 @@ object NeardupIndex {
 
   private def ledgerPath(dir: String) = s"$dir/ledger.json"
 
-  private def readLedger(io: LakeIO, dir: String): Ledger =
-    if (!io.exists(ledgerPath(dir))) emptyLedger
-    else {
-      val s = io.readString(ledgerPath(dir))
+  private def readLedger(fs: HadoopLakeIO, dir: String): Ledger =
+    fs.readString(ledgerPath(dir)).fold(emptyLedger) { s =>
       def num(k: String): Long =
         s""""$k"\\s*:\\s*(-?\\d+)""".r.findFirstMatchIn(s)
           .getOrElse(throw new IllegalStateException(
@@ -100,20 +98,20 @@ object NeardupIndex {
       Ledger(num("gen"), num("compactedThrough"))
     }
 
-  private def writeLedger(io: LakeIO, dir: String, l: Ledger): Unit =
+  private def writeLedger(fs: HadoopLakeIO, dir: String, l: Ledger): Unit =
     // atomic REPLACE: the ledger is a single-writer newest-wins pointer, not
     // an optimistic-concurrency manifest — each compaction supersedes it
-    io.replaceStringAtomic(ledgerPath(dir),
+    fs.replaceStringAtomic(ledgerPath(dir),
       s"""{"gen":${l.gen},"compactedThrough":${l.compactedThrough}}""")
 
   /** Epoch numbers present on disk — the UNION across both tables, so a
     * partially-deleted epoch (crash mid-GC) is still seen and re-collected. */
-  private def liveEpochs(io: LakeIO, dir: String): Seq[Long] =
+  private def liveEpochs(fs: HadoopLakeIO, dir: String): Seq[Long] =
     tableNames.flatMap { t =>
       val root = s"$dir/$t"
-      if (!io.isDirectory(root)) Nil
-      else io.listDir(root).flatMap { p =>
-        val name = p.stripSuffix("/").split('/').last
+      if (!fs.isDirectory(root)) Nil
+      else fs.list(root).flatMap { st =>
+        val name = st.getPath.getName
         if (name.startsWith("e=")) name.stripPrefix("e=").toLongOption else None
       }
     }.distinct.sorted
@@ -141,16 +139,18 @@ object NeardupIndex {
       spark.read.schema(schema(name)).parquet(s"$dir/compacted/g=$gen/$name")
   }
 
-  private def walkParquet(io: LakeIO, path: String): Seq[String] =
-    if (io.isDirectory(path)) io.listDir(path).flatMap(walkParquet(io, _))
-    else if (path.endsWith(".parquet")) Seq(path)
-    else Nil
+  private def parquetFiles(fs: HadoopLakeIO, dir: String): Long =
+    if (!fs.isDirectory(dir)) 0L
+    else fs.list(dir).map { st =>
+      if (st.isDirectory) parquetFiles(fs, st.getPath.toString)
+      else if (st.getPath.getName.endsWith(".parquet")) 1L
+      else 0L
+    }.sum
 
   /** Create (or replace) the index from an initial corpus as epoch 0. */
-  def write(dir: String, docs: DataFrame, cfg: Config = Config(),
-            io: LakeIO = NioLakeIO): Unit = {
-    io.deleteRecursively(dir)
-    append(dir, docs, cfg, epoch = Some(0L), io = io)
+  def write(dir: String, docs: DataFrame, cfg: Config = Config()): Unit = {
+    HadoopLakeIO(docs.sparkSession).deleteRecursively(dir)
+    append(dir, docs, cfg, epoch = Some(0L))
   }
 
   /** Append a batch under `epoch` (the stream's microbatch id). Re-appending
@@ -159,15 +159,16 @@ object NeardupIndex {
     * the next free number is assigned; such manual appends must carry ids and
     * content not already indexed (redelivery absorption is epoch-keyed). */
   def append(dir: String, docs: DataFrame, cfg: Config = Config(),
-             epoch: Option[Long] = None, io: LakeIO = NioLakeIO): Unit = {
-    val led = readLedger(io, dir)
+             epoch: Option[Long] = None): Unit = {
+    val spark = docs.sparkSession
+    val fs = HadoopLakeIO(spark)
+    val led = readLedger(fs, dir)
     val e = epoch.getOrElse(
-      (liveEpochs(io, dir) :+ led.compactedThrough :+ -1L).max + 1)
+      (liveEpochs(fs, dir) :+ led.compactedThrough :+ -1L).max + 1)
     val t = SimOps.neardupIndexTables(docs, cfg.idCol, cfg.textCol,
       cfg.shingleN, cfg.k, cfg.bands, cfg.rowsPerBand)
     // the two writes share only the shingle rows `neardupIndexTables` already
     // materialized, so they run concurrently
-    val spark = docs.sparkSession
     def path(name: String) = s"$dir/$name/e=$e"
     SideWrites.runAll(spark,
       () => t.bands.write.mode("overwrite").partitionBy("_p").parquet(path("bands")),
@@ -184,10 +185,10 @@ object NeardupIndex {
   /** Load the logical index: current compacted generation ∪ epochs above the
     * ledger mark. A pure scan — no distinct, no aggregation (duplicate-freedom
     * is a WRITE-side invariant). */
-  def load(spark: SparkSession, dir: String,
-           io: LakeIO = NioLakeIO): SimOps.NeardupIndexTables = {
-    val led = readLedger(io, dir)
-    val hasLive = liveEpochs(io, dir).exists(_ > led.compactedThrough)
+  def load(spark: SparkSession, dir: String): SimOps.NeardupIndexTables = {
+    val fs = HadoopLakeIO(spark)
+    val led = readLedger(fs, dir)
+    val hasLive = liveEpochs(fs, dir).exists(_ > led.compactedThrough)
     if (!hasLive && led.gen < 0)
       throw new IllegalStateException(s"near-dup index $dir is empty")
     val tables = new Tables(spark, dir,
@@ -205,8 +206,8 @@ object NeardupIndex {
   /** Near-dup pairs (new_id, old_id, jaccard) of `batch` against the persisted
     * index. Batch-internal dups are the caller's SimOps.neardupPairs. */
   def batchPairs(spark: SparkSession, dir: String, batch: DataFrame,
-                 cfg: Config = Config(), io: LakeIO = NioLakeIO): DataFrame =
-    SimOps.incrementalPairsAgainst(load(spark, dir, io), batch, cfg.idCol,
+                 cfg: Config = Config()): DataFrame =
+    SimOps.incrementalPairsAgainst(load(spark, dir), batch, cfg.idCol,
       cfg.textCol, cfg.shingleN, cfg.k, cfg.bands, cfg.rowsPerBand, cfg.maxBucket)
 
   /** Fold every epoch except the newest (the only one the stream can still
@@ -215,17 +216,16 @@ object NeardupIndex {
     * A long-running stream appends a few files per epoch forever; compaction
     * bounds the file count. Returns (parquetFilesBefore, parquetFilesAfter).
     * See class docs for the crash-safety argument and the live-reader caveat. */
-  def compact(spark: SparkSession, dir: String,
-              io: LakeIO = NioLakeIO): (Long, Long) = {
-    val led = readLedger(io, dir)
-    def files(): Long = walkParquet(io, dir).size.toLong
-    val before = files()
-    val live = liveEpochs(io, dir).filter(_ > led.compactedThrough)
+  def compact(spark: SparkSession, dir: String): (Long, Long) = {
+    val fs = HadoopLakeIO(spark)
+    val led = readLedger(fs, dir)
+    val before = parquetFiles(fs, dir)
+    val live = liveEpochs(fs, dir).filter(_ > led.compactedThrough)
     // the newest epoch stays out of the fold: structured streaming may replay
     // it (under its own id) after a crash, and a redelivered epoch must land
     // in its own directory, not duplicate rows already folded into a gen
     val foldable = if (live.isEmpty) Nil else live.init
-    if (foldable.isEmpty) { gc(io, dir, led); refresh(spark, dir) } // just re-GC
+    if (foldable.isEmpty) { gc(fs, dir, led); refresh(spark, dir) } // just re-GC
     else {
       val newGen = led.gen + 1
       val tables = new Tables(spark, dir, dir)
@@ -243,27 +243,26 @@ object NeardupIndex {
       merged("shingles").coalesce(1).write.mode("overwrite").parquet(s"$out/shingles")
       val committed = Ledger(newGen,
         (foldable :+ led.compactedThrough).max)
-      writeLedger(io, dir, committed) // the commit point (atomic rename)
-      gc(io, dir, committed)
+      writeLedger(fs, dir, committed) // the commit point (atomic rename)
+      gc(fs, dir, committed)
       refresh(spark, dir)
     }
-    (before, files())
+    (before, parquetFiles(fs, dir))
   }
 
   /** Delete directories the ledger has superseded: epochs ≤ compactedThrough
     * and non-current generations. Pure garbage collection — a crash that
     * skips it leaves dirs [[load]] already ignores, re-collected next time. */
-  private def gc(io: LakeIO, dir: String, led: Ledger): Unit = {
+  private def gc(fs: HadoopLakeIO, dir: String, led: Ledger): Unit = {
     // snapshot the epoch list BEFORE deleting: liveEpochs lists both tables,
     // so an epoch a crashed GC left in only one of them is still collected
-    val stale = liveEpochs(io, dir).filter(_ <= led.compactedThrough)
+    val stale = liveEpochs(fs, dir).filter(_ <= led.compactedThrough)
     for (t <- tableNames; e <- stale)
-      io.deleteRecursively(s"$dir/$t/e=$e")
+      fs.deleteRecursively(s"$dir/$t/e=$e")
     val compRoot = s"$dir/compacted"
-    if (io.isDirectory(compRoot)) io.listDir(compRoot).foreach { p =>
-      val name = p.stripSuffix("/").split('/').last
-      if (name.startsWith("g=") && name != s"g=${led.gen}")
-        io.deleteRecursively(p)
+    if (fs.isDirectory(compRoot)) fs.list(compRoot).map(_.getPath).foreach { p =>
+      if (p.getName.startsWith("g=") && p.getName != s"g=${led.gen}")
+        fs.deleteRecursively(p.toString)
     }
   }
 
@@ -272,7 +271,7 @@ object NeardupIndex {
     * with null keys/text or non-upsert ops carry nothing to index. Pass the
     * stream's epoch id so crash-redelivery overwrites rather than duplicates. */
   def appendBatch(dir: String, changeBatch: DataFrame, cfg: Config = Config(),
-                  epoch: Option[Long] = None, io: LakeIO = NioLakeIO): Unit = {
+                  epoch: Option[Long] = None): Unit = {
     val docs = changeBatch
       .filter(col("op").isin("I", "U") && col("conv_id").isNotNull &&
         col("turn_idx").isNotNull && col("text").isNotNull)
@@ -281,6 +280,6 @@ object NeardupIndex {
     // an all-rejected/delete-only batch has nothing to index and appends an
     // empty epoch, which [[load]] reads like any other: checking for it first
     // would cost a job on every batch
-    append(dir, docs, cfg, epoch, io)
+    append(dir, docs, cfg, epoch)
   }
 }

@@ -111,8 +111,11 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.parquet.compression.codec", "snappy")
       // file:// through a LocalFileSystem that sets permissions via java.nio,
-      // not a forked `chmod` per created file (sources/localfs.scala)
+      // not a forked `chmod` per created file (sources/localfs.scala); FileContext
+      // (the streaming checkpoint) reaches it through the delegating GraftLocalFs
       .config("spark.hadoop.fs.file.impl", classOf[graft.sources.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.GraftLocalFs].getName)
     extra.foreach { case (k, v) => b.config(k, v) }
     // ops escape hatch: arbitrary session confs via SPARK_GRAFT_SPARK_CONF
     // ("k=v;k=v"), e.g. a low manifest segmentThreshold for a CLI probe

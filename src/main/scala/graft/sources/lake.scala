@@ -1,9 +1,10 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.charset.StandardCharsets.UTF_8
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
@@ -13,120 +14,76 @@ import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
-/** Driver-side filesystem operations the lake's commit protocol needs. Executors
-  * read/write data files through Spark's own Hadoop IO; only the MANIFEST
-  * protocol (list, atomic rename, small JSON reads/writes) and data-file moves
-  * run on the driver, and those are what this trait abstracts.
+/** The lake's driver-side file operations: manifest commits, data-file
+  * moves, the near-dup index ledger and vacuum's deletes. Executors write the
+  * data files through Spark's own Hadoop IO; these run on the driver, through
+  * the Hadoop FileSystem of each path, built from the session's Hadoop conf —
+  * the FileSystem Spark's writes use ([[GraftLocalFileSystem]] on a local
+  * session, HDFS, ABFS or GCS elsewhere). The checksummed local FileSystem
+  * writes a `.crc` sidecar beside each file, moves it with a rename and
+  * removes it with a delete; listings leave sidecars out.
   *
-  * Implementations: [[NioLakeIO]] (local filesystem, the sandbox default) and
-  * [[HadoopLakeIO]] (any Hadoop FileSystem — HDFS, ABFS, GCS; rename is atomic
-  * on HDFS). S3 note: S3 has no atomic rename — there, the commit point should
-  * move to a conditional PUT (If-None-Match) of the manifest object or a small
-  * catalog/DynamoDB lock, exactly the Iceberg catalog pattern; the single
-  * `writeStringAtomic` call below is the only place that needs swapping. */
-trait LakeIO {
-  def mkdirs(dir: String): Unit
-  def isDirectory(path: String): Boolean
-  def exists(path: String): Boolean
-  /** Absolute paths of the directory's direct children (not recursive). */
-  def listDir(dir: String): Seq[String]
-  def readString(path: String): String
-  /** Write via a temp sibling + atomic rename; MUST fail if `path` exists
-    * (the optimistic-concurrency commit point). */
-  def writeStringAtomic(path: String, content: String): Unit
-  /** Write via a temp sibling + atomic rename, REPLACING any existing file —
-    * for single-writer pointers (e.g. the near-dup index ledger) where the
-    * newest value wins; manifests keep the fail-if-exists commit point. */
-  def replaceStringAtomic(path: String, content: String): Unit
-  def move(src: String, dst: String): Unit
-  def delete(path: String): Unit
-  def deleteRecursively(path: String): Unit
-}
-
-/** java.nio implementation — local disks (the sandbox default). */
-object NioLakeIO extends LakeIO {
-  private def listPaths(p: Path): List[Path] =
-    scala.util.Using.resource(Files.list(p))(_.iterator().asScala.toList)
-  def mkdirs(dir: String): Unit = Files.createDirectories(Paths.get(dir))
-  def isDirectory(path: String): Boolean = Files.isDirectory(Paths.get(path))
-  def exists(path: String): Boolean = Files.exists(Paths.get(path))
-  def listDir(dir: String): Seq[String] = listPaths(Paths.get(dir)).map(_.toString)
-  def readString(path: String): String = Files.readString(Paths.get(path))
-  def writeStringAtomic(path: String, content: String): Unit = {
-    val target = Paths.get(path)
-    if (Files.exists(target))
-      throw new IllegalStateException(s"concurrent commit: $target already exists")
-    val tmp = target.resolveSibling("." + target.getFileName + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE)
+  * S3 note: S3 has no atomic rename — there, the commit point should move to
+  * a conditional PUT (If-None-Match) of the manifest object or a small
+  * catalog/DynamoDB lock, exactly the Iceberg catalog pattern;
+  * [[writeStringAtomic]] is the only call that needs swapping. */
+private[graft] final class HadoopLakeIO(val conf: Configuration) {
+  private def fs(p: HPath): FileSystem = p.getFileSystem(conf)
+  def mkdirs(dir: String): Unit = { val p = new HPath(dir); fs(p).mkdirs(p); () }
+  def isDirectory(path: String): Boolean = status(path).exists(_.isDirectory)
+  def exists(path: String): Boolean = status(path).isDefined
+  def status(path: String): Option[FileStatus] = {
+    val p = new HPath(path)
+    try Some(fs(p).getFileStatus(p)) catch { case _: java.io.FileNotFoundException => None }
   }
-  def replaceStringAtomic(path: String, content: String): Unit = {
-    val target = Paths.get(path)
-    val tmp = target.resolveSibling("." + target.getFileName + ".tmp")
-    Files.writeString(tmp, content)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+  /** The directory's direct children (not recursive). Their paths are full
+    * URIs: a child resolved against the default filesystem instead would be
+    * moved or deleted on the wrong one. */
+  def list(dir: String): Seq[FileStatus] = { val p = new HPath(dir); fs(p).listStatus(p).toSeq }
+  /** The file's content, or None if it does not exist. */
+  def readString(path: String): Option[String] = {
+    val p = new HPath(path)
+    val in = try fs(p).open(p) catch { case _: java.io.FileNotFoundException => return None }
+    try Some(new String(in.readAllBytes(), UTF_8)) finally in.close()
   }
-  def move(src: String, dst: String): Unit =
-    Files.move(Paths.get(src), Paths.get(dst), StandardCopyOption.ATOMIC_MOVE)
-  def delete(path: String): Unit = Files.deleteIfExists(Paths.get(path))
-  def deleteRecursively(path: String): Unit = {
-    val p = Paths.get(path)
-    if (Files.isDirectory(p)) listPaths(p).foreach(c => deleteRecursively(c.toString))
-    Files.deleteIfExists(p)
-  }
-}
-
-/** Hadoop-FileSystem implementation — the object-store/HDFS migration path.
-  * Uses the same FS drivers Spark itself writes the parquet through. */
-class HadoopLakeIO(conf: org.apache.hadoop.conf.Configuration) extends LakeIO {
-  import org.apache.hadoop.fs.FileSystem
-  private def fs(p: String): FileSystem = new HPath(p).getFileSystem(conf)
-  def mkdirs(dir: String): Unit = fs(dir).mkdirs(new HPath(dir))
-  def isDirectory(path: String): Boolean = {
-    val f = fs(path)
-    f.exists(new HPath(path)) && f.getFileStatus(new HPath(path)).isDirectory
-  }
-  def exists(path: String): Boolean = fs(path).exists(new HPath(path))
-  // full URI strings, NOT toUri.getPath: stripping the scheme+authority would
-  // make callers (writeDataFiles' move, vacuum's delete) resolve the children
-  // against the DEFAULT filesystem — wrong-FS moves/deletes on abfs/gs/s3a/HDFS
-  def listDir(dir: String): Seq[String] =
-    fs(dir).listStatus(new HPath(dir)).toSeq.map(_.getPath.toString)
-  def readString(path: String): String = {
-    val in = fs(path).open(new HPath(path))
-    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-    finally in.close()
-  }
-  def writeStringAtomic(path: String, content: String): Unit = {
-    val f = fs(path)
-    val target = new HPath(path)
-    if (f.exists(target))
-      throw new IllegalStateException(s"concurrent commit: $target already exists")
+  private def writeTemp(target: HPath, content: String): HPath = {
     val tmp = new HPath(target.getParent, "." + target.getName + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    if (!f.rename(tmp, target))
+    val out = fs(tmp).create(tmp, true)
+    try out.write(content.getBytes(UTF_8)) finally out.close()
+    tmp
+  }
+  /** Write via a temp sibling + atomic rename; fails if `path` exists (the
+    * optimistic-concurrency commit point). */
+  def writeStringAtomic(path: String, content: String): Unit = {
+    val target = new HPath(path)
+    if (exists(path)) throw new IllegalStateException(s"concurrent commit: $target already exists")
+    val tmp = writeTemp(target, content)
+    if (!fs(target).rename(tmp, target))
       throw new IllegalStateException(s"commit rename failed: $tmp -> $target")
   }
+  /** Write via a temp sibling + atomic rename, REPLACING any existing file —
+    * for single-writer pointers (the near-dup index ledger) where the newest
+    * value wins; manifests keep the fail-if-exists commit point. */
   def replaceStringAtomic(path: String, content: String): Unit = {
-    val f = fs(path)
     val target = new HPath(path)
-    val tmp = new HPath(target.getParent, "." + target.getName + ".tmp")
-    val out = f.create(tmp, true)
-    try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-    // FileContext.rename(OVERWRITE) is the atomic-replace primitive on HDFS
-    // (FileSystem.rename refuses existing targets on most drivers)
-    org.apache.hadoop.fs.FileContext.getFileContext(target.toUri, conf)
-      .rename(tmp, target, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
+    val tmp = writeTemp(target, content)
+    // a local rename replaces the target atomically; HDFS and most object
+    // store drivers refuse an existing target, and FileContext's OVERWRITE
+    // rename is their atomic replace
+    if (!fs(target).rename(tmp, target))
+      FileContext.getFileContext(target.toUri, conf).rename(tmp, target, Options.Rename.OVERWRITE)
   }
-  def move(src: String, dst: String): Unit =
-    if (!fs(src).rename(new HPath(src), new HPath(dst)))
-      throw new IllegalStateException(s"rename failed: $src -> $dst")
-  def delete(path: String): Unit = { fs(path).delete(new HPath(path), false); () }
-  def deleteRecursively(path: String): Unit = { fs(path).delete(new HPath(path), true); () }
+  def move(src: String, dst: String): Unit = {
+    val (s, d) = (new HPath(src), new HPath(dst))
+    if (!fs(s).rename(s, d)) throw new IllegalStateException(s"rename failed: $src -> $dst")
+  }
+  def delete(path: String): Unit = { val p = new HPath(path); fs(p).delete(p, false); () }
+  def deleteRecursively(path: String): Unit = { val p = new HPath(path); fs(p).delete(p, true); () }
+}
+
+private[graft] object HadoopLakeIO {
+  def apply(spark: SparkSession): HadoopLakeIO =
+    new HadoopLakeIO(spark.sessionState.newHadoopConf())
 }
 
 /** One committed data file. `path` is relative to the table root; `bucket` is the
@@ -230,21 +187,22 @@ private[sources] final class ManifestFileIndex(files: Seq[FileStatus]) extends F
   * Scale notes: `bucket = pmod(xxhash64(conv_id), numBuckets)` gives file-level
   * pruning for the MERGE (only buckets present in a batch are read/rewritten);
   * at 100 TB raise `numBuckets` (e.g. 4096) so a bucket rewrite fits an executor.
-  * Driver-side IO is abstracted behind [[LakeIO]]. Manifests are two-level
+  * Driver-side file operations go through [[HadoopLakeIO]]. Manifests are two-level
   * above [[LakeTable.DefaultSegmentThreshold]] files: the snapshot JSON refs
   * per-bucket-range SEGMENT manifests and untouched ranges carry over by
   * reference, keeping commit IO O(touched ranges), not O(files) — the
   * Iceberg manifest-list pattern (see README "Commit path & object stores").
   */
-final class LakeTable(val spark: SparkSession, val dir: String,
-                      val io: LakeIO = NioLakeIO) {
+final class LakeTable(val spark: SparkSession, val dir: String) {
   import LakeTable._
 
-  private var snap: Snapshot = loadLatest(dir, io).getOrElse(
+  private[graft] val fs: HadoopLakeIO = HadoopLakeIO(spark)
+
+  private var snap: Snapshot = loadLatest(dir, fs).getOrElse(
     throw new IllegalStateException(s"no manifest under $dir"))
 
   def snapshot: Snapshot = snap
-  def refresh(): Snapshot = { snap = loadLatest(dir, io).get; snap }
+  def refresh(): Snapshot = { snap = loadLatest(dir, fs).get; snap }
   def schema: StructType = snap.schema
   def numBuckets: Int = snap.numBuckets
   def appliedEpoch(queryId: String): Long = snap.applied.getOrElse(queryId, -1L)
@@ -301,7 +259,7 @@ final class LakeTable(val spark: SparkSession, val dir: String,
   /** The committed snapshot metadata at `version` (strict: every segment
     * manifest must still exist). */
   def snapshotAt(version: Long): Snapshot =
-    loadVersion(dir, version, io).getOrElse(throw new IllegalStateException(
+    loadVersion(dir, version, fs).getOrElse(throw new IllegalStateException(
       s"no committed snapshot v$version under $dir (never committed, or vacuumed)"))
 
   private def readFiles(s: Snapshot, files: List[FileEntry]): DataFrame = {
@@ -328,12 +286,7 @@ final class LakeTable(val spark: SparkSession, val dir: String,
     * be worse. */
   private def fileStatuses(files: List[FileEntry], tag: String): Map[String, FileStatus] = {
     import scala.collection.parallel.CollectionConverters._
-    val conf = spark.sessionState.newHadoopConf() // once, outside the par loop
-    val found = files.map(_.path).distinct.par.map { rel =>
-      val p = new HPath(s"$dir/$rel")
-      rel -> (try Some(p.getFileSystem(conf).getFileStatus(p))
-              catch { case _: java.io.FileNotFoundException => None })
-    }.toList
+    val found = files.map(_.path).distinct.par.map(rel => rel -> fs.status(s"$dir/$rel")).toList
     val missing = found.count(_._2.isEmpty)
     if (missing > 0) throw new IllegalStateException(
       s"snapshot $tag references $missing data file(s) already vacuumed")
@@ -372,39 +325,42 @@ final class LakeTable(val spark: SparkSession, val dir: String,
     rows.withColumn("_gbucket", bucketCol(col("conv_id"), numBuckets))
       .repartition(parallelism, col("_gbucket"))
       .write.mode("overwrite").partitionBy("_gbucket").parquet(tmp)
-    io.mkdirs(s"$dir/data")
+    fs.mkdirs(s"$dir/data")
     val entries = scala.collection.mutable.ListBuffer[FileEntry]()
-    io.listDir(tmp)
-      .filter(p => io.isDirectory(p) && baseName(p).startsWith("_gbucket="))
+    fs.list(tmp)
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("_gbucket="))
       .foreach { bdir =>
-        val bucket = baseName(bdir).stripPrefix("_gbucket=").toInt
-        val files = io.listDir(bdir).filter(f => baseName(f).endsWith(".parquet"))
+        val bucket = bdir.getPath.getName.stripPrefix("_gbucket=").toInt
+        val files = fs.list(bdir.getPath.toString).map(_.getPath)
+          .filter(_.getName.endsWith(".parquet"))
         val known = if (files.size == 1) bucketRows.getOrElse(bucket, -1L) else -1L
         files.zipWithIndex.foreach { case (f, i) =>
           val name = f"data/e${version}_b${bucket}_$i%05d.parquet"
-          io.move(f, s"$dir/$name")
+          // a file already at this name is an orphan of a failed attempt at
+          // this uncommitted version (a redelivered epoch reuses it); HDFS
+          // and object stores refuse to rename onto it
+          fs.delete(s"$dir/$name")
+          fs.move(f.toString, s"$dir/$name")
           entries += FileEntry(name, bucket, schemaId, known)
         }
       }
-    io.deleteRecursively(tmp)
+    fs.deleteRecursively(tmp)
     // footer reads run CONCURRENTLY (one small metadata read per file): done
     // serially they would add O(files) driver latency to every commit — a
     // fixed per-epoch cost that taxes high-parallelism replay epochs hardest
     import scala.collection.parallel.CollectionConverters._
-    lazy val conf = spark.sessionState.newHadoopConf() // once, if a footer is read
     entries.toList.par.map { e =>
-      if (e.rows >= 0) e else e.copy(rows = parquetRows(conf, s"$dir/${e.path}"))
+      if (e.rows >= 0) e else e.copy(rows = parquetRows(s"$dir/${e.path}"))
     }.toList
   }
 
   /** Physical row count from the parquet footer (one small metadata read per
     * committed file — the same stat Iceberg carries per data file; lets readers
     * size buckets and plan compaction without opening data pages). */
-  private def parquetRows(conf: org.apache.hadoop.conf.Configuration,
-                          path: String): Long = {
+  private def parquetRows(path: String): Long = {
     import org.apache.parquet.hadoop.ParquetFileReader
     import org.apache.parquet.hadoop.util.HadoopInputFile
-    val in = HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(path), conf)
+    val in = HadoopInputFile.fromPath(new HPath(path), fs.conf)
     scala.util.Using.resource(ParquetFileReader.open(in))(_.getRecordCount)
   }
 
@@ -432,7 +388,7 @@ final class LakeTable(val spark: SparkSession, val dir: String,
       segments = None)
     val threshold = spark.conf.getOption("spark.graft.manifest.segmentThreshold")
       .map(_.toInt).getOrElse(LakeTable.DefaultSegmentThreshold)
-    snap = writeManifest(dir, next, io, prev = Some(snap), segmentThreshold = threshold)
+    snap = writeManifest(dir, next, fs, prev = Some(snap), segmentThreshold = threshold)
     snap
   }
 }
@@ -442,30 +398,29 @@ object LakeTable {
   import org.json4s.jackson.Serialization
   private implicit val fmts: Formats = Serialization.formats(NoTypeHints)
 
-  private def baseName(p: String): String = p.split('/').last
-
   def bucketCol(c: Column, numBuckets: Int): Column = pmod(xxhash64(c), lit(numBuckets)).cast("int")
 
   private def manifestDir(dir: String): String = s"$dir/_manifests"
 
-  def exists(dir: String, io: LakeIO = NioLakeIO): Boolean =
-    io.isDirectory(manifestDir(dir)) && loadLatest(dir, io).isDefined
+  /** A snapshot manifest is committed under `dir` (none is read). */
+  def exists(spark: SparkSession, dir: String): Boolean =
+    versionFiles(dir, HadoopLakeIO(spark)).nonEmpty
 
   def create(spark: SparkSession, dir: String, schema: StructType,
-             numBuckets: Int = 64, io: LakeIO = NioLakeIO): LakeTable = {
-    io.mkdirs(manifestDir(dir))
+             numBuckets: Int = 64): LakeTable = {
+    val fs = HadoopLakeIO(spark)
+    fs.mkdirs(manifestDir(dir))
     val snap = Snapshot(1L, numBuckets, 0, Map("0" -> schema.json), Nil, Map.empty,
       Map("graft.operation" -> "create"))
-    writeManifest(dir, snap, io)
-    new LakeTable(spark, dir, io)
+    writeManifest(dir, snap, fs)
+    new LakeTable(spark, dir)
   }
 
-  def load(spark: SparkSession, dir: String, io: LakeIO = NioLakeIO): LakeTable =
-    new LakeTable(spark, dir, io)
+  def load(spark: SparkSession, dir: String): LakeTable = new LakeTable(spark, dir)
 
   def loadOrCreate(spark: SparkSession, dir: String, schema: StructType,
-                   numBuckets: Int = 64, io: LakeIO = NioLakeIO): LakeTable =
-    if (exists(dir, io)) load(spark, dir, io) else create(spark, dir, schema, numBuckets, io)
+                   numBuckets: Int = 64): LakeTable =
+    if (exists(spark, dir)) load(spark, dir) else create(spark, dir, schema, numBuckets)
 
   /** Below this many files the file list inlines into the snapshot JSON; at or
     * above it, commits write bucket-range segment manifests and reuse
@@ -485,9 +440,9 @@ object LakeTable {
     * it in memory for the next commit's segment reuse. Segment manifests are
     * written BEFORE the snapshot rename (the commit point); a crash in between
     * leaves orphan seg files that vacuum GCs. */
-  private[sources] def writeManifest(dir: String, snap: Snapshot, io: LakeIO,
-                                     prev: Option[Snapshot] = None,
-                                     segmentThreshold: Int = DefaultSegmentThreshold): Snapshot = {
+  private def writeManifest(dir: String, snap: Snapshot, fs: HadoopLakeIO,
+                            prev: Option[Snapshot] = None,
+                            segmentThreshold: Int = DefaultSegmentThreshold): Snapshot = {
     val md = manifestDir(dir)
     val enriched = if (snap.files.size < segmentThreshold) snap
     else {
@@ -501,74 +456,78 @@ object LakeTable {
             ((r, byId.getOrElse(r.segId, Nil).toSet))).toMap
         case _ => Map.empty
       }
-      val refs = grouped.toList.sortBy(_._1).map { case (segId, fs) =>
+      val refs = grouped.toList.sortBy(_._1).map { case (segId, files) =>
         prevSegs.get(segId) match {
-          case Some((ref, prevSet)) if prevSet == fs.toSet => ref
+          case Some((ref, prevSet)) if prevSet == files.toSet => ref
           case _ =>
             val name = f"seg_v${snap.version}%08d_$segId%04d.json"
             // a file already at this name is a CRASH ORPHAN: its version was
             // never committed (loadLatest would have returned it otherwise),
             // so the retried commit may overwrite it — fail-if-exists is the
             // SNAPSHOT manifest's contract (the commit point), not a segment's
-            io.delete(s"$md/$name")
-            io.writeStringAtomic(s"$md/$name", Serialization.write(fs.sortBy(_.path)))
+            fs.delete(s"$md/$name")
+            fs.writeStringAtomic(s"$md/$name", Serialization.write(files.sortBy(_.path)))
             SegmentRef(name, segId)
         }
       }
       snap.copy(segments = Some(refs))
     }
     val onDisk = if (enriched.segments.isDefined) enriched.copy(files = Nil) else enriched
-    io.writeStringAtomic(f"$md/v${snap.version}%08d.json", Serialization.write(onDisk))
+    fs.writeStringAtomic(f"$md/v${snap.version}%08d.json", Serialization.write(onDisk))
     enriched
   }
 
   /** Reconstitute a snapshot's file list from its segment manifests. `strict`
     * loads must find every segment; lenient loads (history over vacuumed
     * snapshots) skip missing ones. */
-  private def reconstitute(dir: String, s: Snapshot, io: LakeIO,
+  private def reconstitute(dir: String, s: Snapshot, fs: HadoopLakeIO,
                            strict: Boolean): Snapshot = s.segments match {
     case None => s
     case Some(refs) =>
       val md = manifestDir(dir)
       val files = refs.flatMap { r =>
         val p = s"$md/${r.path}"
-        if (io.exists(p)) Serialization.read[List[FileEntry]](io.readString(p))
-        else if (strict) throw new IllegalStateException(s"missing segment manifest $p")
-        else Nil
+        fs.readString(p) match {
+          case Some(json) => Serialization.read[List[FileEntry]](json)
+          case None if strict => throw new IllegalStateException(s"missing segment manifest $p")
+          case None => Nil
+        }
       }
       s.copy(files = files)
   }
 
+  /** The snapshot manifest `name` under `dir`, if it exists, with its file
+    * list reconstituted. */
+  private def readSnapshot(dir: String, name: String, fs: HadoopLakeIO,
+                           strict: Boolean): Option[Snapshot] =
+    fs.readString(s"${manifestDir(dir)}/$name")
+      .map(json => reconstitute(dir, Serialization.read[Snapshot](json), fs, strict))
+
   /** One specific committed version, strictly reconstituted. */
-  private[sources] def loadVersion(dir: String, version: Long,
-                                   io: LakeIO = NioLakeIO): Option[Snapshot] = {
-    val p = f"${manifestDir(dir)}/v$version%08d.json"
-    if (!io.exists(p)) None
-    else Some(reconstitute(dir, Serialization.read[Snapshot](io.readString(p)), io,
-      strict = true))
+  private def loadVersion(dir: String, version: Long, fs: HadoopLakeIO): Option[Snapshot] =
+    readSnapshot(dir, f"v$version%08d.json", fs, strict = true)
+
+  /** Names of the committed snapshot manifests under `dir`, oldest first. */
+  private def versionFiles(dir: String, fs: HadoopLakeIO): Seq[String] = {
+    val md = manifestDir(dir)
+    if (!fs.isDirectory(md)) Nil
+    else fs.list(md).map(_.getPath.getName)
+      .filter(n => n.startsWith("v") && n.endsWith(".json")).sorted
   }
 
-  private[sources] def loadLatest(dir: String, io: LakeIO = NioLakeIO): Option[Snapshot] = {
-    val md = manifestDir(dir)
-    if (!io.isDirectory(md)) return None
-    io.listDir(md).map(baseName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .sorted.lastOption
-      .map(n => reconstitute(dir,
-        Serialization.read[Snapshot](io.readString(s"$md/$n")), io, strict = true))
-  }
+  private def loadLatest(dir: String, fs: HadoopLakeIO): Option[Snapshot] =
+    versionFiles(dir, fs).lastOption.flatMap(readSnapshot(dir, _, fs, strict = true))
 
-  /** All snapshots, oldest first (time travel / audit). Lenient on segment
-    * manifests vacuum already GC'd (expired snapshots list what remains). */
-  def history(dir: String, io: LakeIO = NioLakeIO): Seq[Snapshot] = {
-    val md = manifestDir(dir)
-    if (!io.isDirectory(md)) return Nil
-    io.listDir(md).map(baseName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .sorted
-      .map(n => reconstitute(dir,
-        Serialization.read[Snapshot](io.readString(s"$md/$n")), io, strict = false))
-  }
+  /** All snapshots, oldest first (time travel / audit), read through the
+    * active session's Hadoop conf. Lenient on segment manifests vacuum
+    * already GC'd (expired snapshots list what remains). */
+  def history(dir: String): Seq[Snapshot] =
+    newest(dir, Int.MaxValue, HadoopLakeIO(SparkSession.active))
+
+  /** The newest `n` snapshots of [[history]], oldest first; no older
+    * manifest is read. */
+  private[graft] def newest(dir: String, n: Int, fs: HadoopLakeIO): Seq[Snapshot] =
+    versionFiles(dir, fs).takeRight(n).flatMap(readSnapshot(dir, _, fs, strict = false))
 
   /** `t` with every field, element and value nullable — what a file read
     * with a user schema sees (`DataSource` relaxes the schema the same way:

@@ -2,96 +2,162 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.CdcMerge
-import graft.sources.{HadoopLakeIO, LakeTable, NioLakeIO}
+import java.nio.file.{Files, Path, Paths}
+import java.util.concurrent.atomic.AtomicReference
 
-/** The commit protocol through the Hadoop-FileSystem IO implementation — the
-  * object-store/HDFS migration path — must behave identically to the local-NIO
-  * default: same manifests, same data files, same resolved state, same
-  * optimistic-concurrency failure on a duplicate version. */
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FilterFileSystem, Path => HPath}
+
+import graft.operators.{CdcMerge, Maintain}
+import graft.sources.{GraftLocalFileSystem, HadoopLakeIO, LakeTable}
+import graft.streaming.CdcStream
+
+/** The commit protocol through the lake's one driver-side IO path,
+  * [[HadoopLakeIO]] — the Hadoop FileSystem Spark writes the data files
+  * through: manifests, the applied ledger, time travel, vacuum and the
+  * optimistic-concurrency failure on a duplicate version, and a re-run epoch
+  * after a rename that failed under HDFS's rename contract. */
 class LakeIoSpec extends SparkSpec {
 
-  private def hio = new HadoopLakeIO(spark.sparkContext.hadoopConfiguration)
+  private def sorted(df: org.apache.spark.sql.DataFrame) =
+    df.orderBy("conv_id", "turn_idx").collect().toSeq
 
-  test("merge + history + state through HadoopLakeIO equals NioLakeIO") {
+  test("merge, history, applied ledger and time travel via HadoopLakeIO") {
     val ev0 = ChangeGen.events(spark, 2000L, numConvs = 40, maxTurns = 8, pDelete = 0.1)
     val ev1 = ChangeGen.events(spark, 2000L, numConvs = 40, maxTurns = 8, pDelete = 0.1,
       seed = 7L, lsnStart = 2000L)
-    val states = Seq(("nio", NioLakeIO: graft.sources.LakeIO), ("hdp", hio)).map {
-      case (tag, io) =>
-        val t = LakeTable.create(spark, tmpDir(s"lakeio-$tag"),
-          CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 16, io = io)
-        CdcMerge.applyBatch(t, ev0, 0L, "q")
-        CdcMerge.applyBatch(t, ev1, 1L, "q")
-        assert(LakeTable.history(t.dir, io).size === 3) // create + 2 merges
-        assert(t.snapshot.applied("q") === 1L)
-        CdcMerge.state(t).orderBy("conv_id", "turn_idx").collect().toSeq
-    }
-    assert(states(0) === states(1))
-  }
-
-  test("time travel through HadoopLakeIO equals NioLakeIO per version") {
-    val ev0 = ChangeGen.events(spark, 1500L, numConvs = 25, maxTurns = 6, pDelete = 0.1)
-    val ev1 = ChangeGen.events(spark, 1500L, numConvs = 25, maxTurns = 6, pDelete = 0.1,
-      seed = 11L, lsnStart = 5000L)
-    val perVersion = Seq(("nio", NioLakeIO: graft.sources.LakeIO), ("hdp", hio)).map {
-      case (tag, io) =>
-        val t = LakeTable.create(spark, tmpDir(s"lakeio-tt-$tag"),
-          CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 8, io = io)
-        CdcMerge.applyBatch(t, ev0, 0L, "q")
-        val vMid = t.snapshot.version
-        CdcMerge.applyBatch(t, ev1, 1L, "q")
-        (CdcMerge.stateAsOf(t, vMid).orderBy("conv_id", "turn_idx").collect().toSeq,
-          CdcMerge.state(t).orderBy("conv_id", "turn_idx").collect().toSeq)
-    }
-    assert(perVersion(0) === perVersion(1))
-    assert(perVersion(0)._1 !== perVersion(0)._2) // the mid version is genuinely older
+    val t = LakeTable.create(spark, tmpDir("lakeio"),
+      CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 16)
+    CdcMerge.applyBatch(t, ev0, 0L, "q")
+    val vMid = t.snapshot.version
+    CdcMerge.applyBatch(t, ev1, 1L, "q")
+    assert(LakeTable.history(t.dir).size === 3) // create + 2 merges
+    assert(t.snapshot.applied("q") === 1L)
+    assert(LakeTable.load(spark, t.dir).appliedEpoch("q") === 1L)
+    assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(ev0.unionByName(ev1))).isEmpty)
+    assert(Oracle.diff(CdcMerge.stateAsOf(t, vMid), Oracle.expectedState(ev0)).isEmpty)
+    // the mid version is genuinely older
+    assert(sorted(CdcMerge.stateAsOf(t, vMid)) !== sorted(CdcMerge.state(t)))
   }
 
   test("HadoopLakeIO commit point rejects a duplicate manifest version") {
-    val io = hio
     val t = LakeTable.create(spark, tmpDir("lakeio-dup"),
-      CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 4, io = io)
+      CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 4)
     val s = t.snapshot
     intercept[IllegalStateException] {
       // same content re-written under the SAME version must fail (optimistic
       // concurrency: the v-file already exists)
-      io.writeStringAtomic(s"${t.dir}/_manifests/v${"%08d".format(s.version)}.json", "{}")
+      t.fs.writeStringAtomic(s"${t.dir}/_manifests/v${"%08d".format(s.version)}.json", "{}")
     }
   }
 
-  test("replaceStringAtomic overwrites in place on both IO implementations") {
-    Seq(("nio", NioLakeIO: graft.sources.LakeIO), ("hdp", hio)).foreach {
-      case (tag, io) =>
-        val p = s"${tmpDir(s"replace-$tag")}/ptr.json"
-        io.replaceStringAtomic(p, "v1")        // create
-        assert(io.readString(p) === "v1")
-        io.replaceStringAtomic(p, "v2")        // replace (newest-wins pointer)
-        assert(io.readString(p) === "v2")
-        // the fail-if-exists commit point is untouched by the new primitive
-        intercept[IllegalStateException] { io.writeStringAtomic(p, "v3") }
-        assert(io.readString(p) === "v2")
-    }
+  test("replaceStringAtomic overwrites in place") {
+    val io = HadoopLakeIO(spark)
+    val p = s"${tmpDir("replace")}/ptr.json"
+    assert(io.readString(p) === None)
+    io.replaceStringAtomic(p, "v1")        // create
+    assert(io.readString(p) === Some("v1"))
+    io.replaceStringAtomic(p, "v2")        // replace (newest-wins pointer)
+    assert(io.readString(p) === Some("v2"))
+    // the fail-if-exists commit point is untouched by the replacing write
+    intercept[IllegalStateException] { io.writeStringAtomic(p, "v3") }
+    assert(io.readString(p) === Some("v2"))
   }
 
   test("vacuum works through HadoopLakeIO") {
-    val io = hio
-    val t = LakeTable.create(spark, tmpDir("lakeio-vac"),
-      CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 8, io = io)
-    (0 until 4).foreach { e =>
-      val ev = ChangeGen.events(spark, 500L, numConvs = 10, maxTurns = 5,
-        seed = e.toLong, lsnStart = e * 500L)
-      CdcMerge.applyBatch(t, ev, e.toLong, "q")
+    // a low segment threshold, so vacuum also collects segment manifests
+    spark.conf.set("spark.graft.manifest.segmentThreshold", "4")
+    try {
+      val t = LakeTable.create(spark, tmpDir("lakeio-vac"),
+        CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 8)
+      (0 until 4).foreach { e =>
+        val ev = ChangeGen.events(spark, 500L, numConvs = 10, maxTurns = 5,
+          seed = e.toLong, lsnStart = e * 500L)
+        CdcMerge.applyBatch(t, ev, e.toLong, "q")
+      }
+      Maintain.compact(t)
+      def names(d: String) = Files.list(Paths.get(t.dir, d)).iterator().asScala
+        .map(_.getFileName.toString).toSet
+      def counted() = names("data").count(_.endsWith(".parquet")) +
+        names("_manifests").count(_.startsWith("seg_"))
+      val before = sorted(CdcMerge.state(t))
+      val countedBefore = counted()
+      // vacuum reads only the kept snapshots' manifests: an expired one may
+      // be unreadable
+      Files.writeString(Paths.get(t.dir, "_manifests", "v00000001.json"), "not a manifest")
+      Files.deleteIfExists(Paths.get(t.dir, "_manifests", ".v00000001.json.crc"))
+      val removed = Maintain.vacuum(t, keepSnapshots = 1)
+      assert(removed > 0) // compaction leaves the merges' appended files to GC
+      // the count is data files and segment manifests; sidecars go uncounted
+      assert(removed === countedBefore - counted())
+      assert(sorted(CdcMerge.state(t)) === before)
+      // a data file's .crc sidecar moved in with it and leaves with it
+      val data = names("data")
+      val parquet = data.filter(_.endsWith(".parquet"))
+      assert(parquet === t.snapshot.files.map(_.path.stripPrefix("data/")).toSet)
+      assert(data -- parquet === parquet.map(n => s".$n.crc"),
+        s"data/ sidecars do not match its parquet files: ${data -- parquet}")
+    } finally spark.conf.unset("spark.graft.manifest.segmentThreshold")
+  }
+
+  test("a failed rename into data/ or onto the snapshot manifest: the re-run epoch commits once") {
+    import HdfsLikeFileSystem.failNextRenameInto
+    val ev0 = ChangeGen.events(spark, 1500L, numConvs = 30, maxTurns = 6, pDelete = 0.1)
+    val ev1 = ChangeGen.events(spark, 1500L, numConvs = 30, maxTurns = 6, pDelete = 0.1,
+      seed = 5L, lsnStart = 1500L)
+    val expected = Oracle.expectedState(ev0.unionByName(ev1))
+    def causes(e: Throwable): Seq[Throwable] =
+      Iterator.iterate(e)(_.getCause).takeWhile(_ != null).toSeq
+    spark.conf.set("fs.file.impl", classOf[HdfsLikeFileSystem].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try Seq[(String, HPath => Boolean)](
+      "data" -> (_.getParent.getName == "data"),
+      "manifest" -> (p => p.getParent.getName == "_manifests" &&
+        p.getName.matches("v\\d+\\.json"))
+    ).foreach { case (tag, target) =>
+      val dir = tmpDir(s"lakeio-crash-$tag")
+      val t = LakeTable.create(spark, dir, CdcMerge.physicalSchema(Schemas.transcript),
+        numBuckets = 8)
+      CdcMerge.applyBatch(t, ev0, 0L, "q")
+      failNextRenameInto(target)
+      val err = intercept[Exception](CdcMerge.applyBatch(LakeTable.load(spark, dir), ev1, 1L, "q"))
+      assert(causes(err).exists(c => Option(c.getMessage).exists(_.startsWith("injected"))), err)
+      val retry = LakeTable.load(spark, dir)
+      assert(retry.appliedEpoch("q") === 0L, s"$tag: the failed epoch committed")
+      // after a failed manifest rename, the re-run moves its data files onto
+      // the failed attempt's orphans
+      CdcMerge.applyBatch(retry, ev1, 1L, "q")
+      assert(retry.appliedEpoch("q") === 1L, tag)
+      assert(LakeTable.load(spark, dir).appliedEpoch("q") === 1L, tag)
+      assert(Oracle.diff(CdcMerge.state(retry), expected).isEmpty, tag)
+      val lin1 = CdcMerge.lineage(retry, "q").filter(col("epoch_id") === 1)
+      assert(lin1.count() > 0 && lin1.count() === lin1.select("bucket").distinct().count(),
+        s"$tag: epoch 1 lineage is not one row per bucket")
+    } finally {
+      failNextRenameInto(null)
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
     }
-    graft.operators.Maintain.compact(t)
-    val before = CdcMerge.state(t).orderBy("conv_id", "turn_idx").collect().toSeq
-    val removed = graft.operators.Maintain.vacuum(t, keepSnapshots = 1)
-    assert(removed > 0) // compaction leaves the merges' appended files to GC
-    assert(CdcMerge.state(t).orderBy("conv_id", "turn_idx").collect().toSeq === before)
+  }
+
+  /** The command line of every process the JVM starts while `body` runs. */
+  private def processes(body: => Unit): Seq[String] = {
+    import jdk.jfr.Recording
+    import jdk.jfr.consumer.RecordingFile
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    try body finally rec.stop()
+    val dump = Files.createTempFile("graft-procs", ".jfr")
+    try {
+      rec.dump(dump)
+      RecordingFile.readAllEvents(dump).asScala.map(_.getString("command")).toSeq
+    } finally { rec.close(); Files.delete(dump) }
   }
 
   test("reads are planned from the manifest: no listing job above 32 files, cacheable, loud on vacuumed files") {
-    import graft.operators.{ChangeFeed, Maintain}
+    import graft.operators.ChangeFeed
     import org.apache.spark.GraftTestBridge.drainListenerBus
     val t = LakeTable.create(spark, tmpDir("lakeio-plan"),
       CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 64)
@@ -146,27 +212,11 @@ class LakeIoSpec extends SparkSpec {
   }
 
   test("local session file:// FileSystem: no chmod fork, Hadoop's permission bits, .crc sidecars kept") {
-    import java.nio.file.{Files, Path, Paths}
     import java.nio.file.attribute.PosixFilePermissions
-    import scala.jdk.CollectionConverters._
-    import jdk.jfr.Recording
-    import jdk.jfr.consumer.RecordingFile
-    import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+    import org.apache.hadoop.fs.FileSystem
     import org.apache.hadoop.fs.permission.FsPermission
     val conf = spark.sparkContext.hadoopConfiguration
     assert(FsPermission.getUMask(conf) === new FsPermission("022"))
-    /** The command line of every process the JVM starts while `body` runs. */
-    def processes(body: => Unit): Seq[String] = {
-      val rec = new Recording()
-      rec.enable("jdk.ProcessStart")
-      rec.start()
-      try body finally rec.stop()
-      val dump = Files.createTempFile("graft-procs", ".jfr")
-      try {
-        rec.dump(dump)
-        RecordingFile.readAllEvents(dump).asScala.map(_.getString("command")).toSeq
-      } finally { rec.close(); Files.delete(dump) }
-    }
     assert(processes(new ProcessBuilder("true").start().waitFor()).exists(_.contains("true")),
       "the recording misses started processes")
     // a merge with dead-letter rows: Hadoop writes the data, rejects and lineage
@@ -199,4 +249,44 @@ class LakeIoSpec extends SparkSpec {
     val m = Files.getAttribute(dp, "unix:mode").asInstanceOf[Int]
     assert((m & Integer.parseInt("7777", 8)) === Integer.parseInt("1750", 8))
   }
+
+  test("a stream's checkpoint, index ledger and commits start no chmod or readlink process") {
+    import spark.implicits._
+    val src = tmpDir("lakeio-fc-src")
+    val cols = Seq("conv_id", "turn_idx", "role", "text", "tool", "ts", "op", "lsn")
+    (0 until 3).foreach { e =>
+      Seq((s"c$e", 0, "user", s"epoch $e words shared across batches plus tail$e",
+          null: String, java.sql.Timestamp.valueOf("2024-01-01 10:00:00"), "I", e + 1L))
+        .toDF(cols: _*).repartition(1).write.parquet(f"$src/e$e%02d")
+    }
+    val (tbl, idx) = (tmpDir("lakeio-fc-t"), tmpDir("lakeio-fc-i"))
+    // three microbatches, the index folded after the second and the third:
+    // the ledger is written, then replaced
+    val started = processes(CdcStream.runAvailable(spark, CdcStream.Config(src, tbl,
+      tmpDir("lakeio-fc-k"), queryId = "fc", numBuckets = 4, maxFilesPerTrigger = Some(1),
+      neardupIndexDir = Some(idx), neardupCfg = graft.operators.NeardupIndex.Config(shingleN = 2),
+      neardupCompactEvery = Some(1))))
+    assert(LakeTable.load(spark, tbl).appliedEpoch("fc") === 2L)
+    assert(Files.exists(Paths.get(idx, "ledger.json")), "no compaction committed a ledger")
+    val forks = started.filter(c => c.contains("chmod") || c.contains("readlink"))
+    assert(forks.isEmpty, forks.take(5).mkString(s"${forks.size} forked, e.g.:\n", "\n", ""))
+  }
+}
+
+/** [[GraftLocalFileSystem]] under HDFS's rename contract: a rename onto an
+  * existing file returns false. It throws on the first rename whose target
+  * [[HdfsLikeFileSystem.failNextRenameInto]] armed it for. */
+class HdfsLikeFileSystem extends FilterFileSystem(new GraftLocalFileSystem) {
+  override def rename(src: HPath, dst: HPath): Boolean = {
+    val armed = HdfsLikeFileSystem.armed.get
+    if (armed != null && armed(dst) && HdfsLikeFileSystem.armed.compareAndSet(armed, null))
+      throw new java.io.IOException(s"injected rename failure: $src -> $dst")
+    if (exists(dst) && getFileStatus(dst).isFile) false else super.rename(src, dst)
+  }
+}
+
+object HdfsLikeFileSystem {
+  private val armed = new AtomicReference[HPath => Boolean]()
+  /** Fail the next rename whose target matches; `null` disarms. */
+  def failNextRenameInto(target: HPath => Boolean): Unit = armed.set(target)
 }

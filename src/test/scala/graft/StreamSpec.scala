@@ -632,7 +632,7 @@ class StreamSpec extends SparkSpec {
     check()
     NeardupIndex.compact(spark, dir)
     assert(new java.io.File(dir).list().toSet ===
-      Set("bands", "shingles", "compacted", "ledger.json"))
+      Set("bands", "shingles", "compacted", "ledger.json", ".ledger.json.crc"))
     check()
   }
 }

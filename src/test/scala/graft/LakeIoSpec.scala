@@ -23,20 +23,31 @@ class LakeIoSpec extends SparkSpec {
   private def sorted(df: org.apache.spark.sql.DataFrame) =
     df.orderBy("conv_id", "turn_idx").collect().toSeq
 
-  test("merge, history, applied ledger and time travel via HadoopLakeIO") {
+  test("merge + history + state through HadoopLakeIO equals the oracle") {
     val ev0 = ChangeGen.events(spark, 2000L, numConvs = 40, maxTurns = 8, pDelete = 0.1)
     val ev1 = ChangeGen.events(spark, 2000L, numConvs = 40, maxTurns = 8, pDelete = 0.1,
       seed = 7L, lsnStart = 2000L)
     val t = LakeTable.create(spark, tmpDir("lakeio"),
       CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 16)
     CdcMerge.applyBatch(t, ev0, 0L, "q")
-    val vMid = t.snapshot.version
     CdcMerge.applyBatch(t, ev1, 1L, "q")
     assert(LakeTable.history(t.dir).size === 3) // create + 2 merges
     assert(t.snapshot.applied("q") === 1L)
     assert(LakeTable.load(spark, t.dir).appliedEpoch("q") === 1L)
     assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(ev0.unionByName(ev1))).isEmpty)
+  }
+
+  test("time travel through HadoopLakeIO equals the oracle per version") {
+    val ev0 = ChangeGen.events(spark, 1500L, numConvs = 25, maxTurns = 6, pDelete = 0.1)
+    val ev1 = ChangeGen.events(spark, 1500L, numConvs = 25, maxTurns = 6, pDelete = 0.1,
+      seed = 11L, lsnStart = 5000L)
+    val t = LakeTable.create(spark, tmpDir("lakeio-tt"),
+      CdcMerge.physicalSchema(Schemas.transcript), numBuckets = 8)
+    CdcMerge.applyBatch(t, ev0, 0L, "q")
+    val vMid = t.snapshot.version
+    CdcMerge.applyBatch(t, ev1, 1L, "q")
     assert(Oracle.diff(CdcMerge.stateAsOf(t, vMid), Oracle.expectedState(ev0)).isEmpty)
+    assert(Oracle.diff(CdcMerge.state(t), Oracle.expectedState(ev0.unionByName(ev1))).isEmpty)
     // the mid version is genuinely older
     assert(sorted(CdcMerge.stateAsOf(t, vMid)) !== sorted(CdcMerge.state(t)))
   }
